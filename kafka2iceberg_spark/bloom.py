@@ -143,21 +143,9 @@ def build_blooms(table, spark, cols: list[str], fpp: float = 0.01) -> int:
                 entry["bloom"] = refs
             new_files.append(entry)
         manifests[pv] = table._write_manifest(new_files)
-    table._write_snapshot(
-        {
-            "snapshot_id": uuid.uuid4().hex,
-            "version": v_new,
-            "parent": snap["snapshot_id"],
-            "parent_version": snap["version"],
-            "ref": "main",
-            "refs": crefs,
-            "batch_id": None,  # metadata-only, replay guard unaffected
-            "commit_kind": "build-blooms",
-            "schema": snap.get("schema"),
-            "manifests": manifests,
-            "delete_manifests": snap.get("delete_manifests") or [],
-            "lineage": [],
-        }
+    # metadata-only, replay guard unaffected
+    table._commit(
+        v_new, snap, crefs, "build-blooms", ref="main", manifests=manifests
     )
     return len(todo)
 

@@ -61,12 +61,6 @@ def struct_type(spec: TaskSpec) -> T.StructType:
     )
 
 
-def field_struct(fields: list[FieldSpec]) -> T.StructType:
-    return T.StructType(
-        [T.StructField(f.name, spark_type(f.type), True) for f in fields]
-    )
-
-
 # ---------------------------------------------------------------------------
 # Canal-JSON CDC envelope schema (wire format the ingest layer parses).
 # Shape per DeserializedSchema.java:96-125 and the captured envelope at

@@ -12,7 +12,8 @@ the same commit contract over plain parquet — ``IcebergLite``:
   * immutable data files under ``data/``; files are inert until referenced by
     a committed snapshot (Iceberg's actual visibility model),
   * an atomic snapshot log under ``metadata/`` (write-tmp + rename, then an
-    atomically-replaced version hint — the Hadoop-catalog commit protocol),
+    atomically-replaced version hint — the Hadoop-catalog commit protocol);
+    ``IcebergLite._commit`` is the only code that writes a snapshot,
   * per-partition manifests (file list + row counts) in every snapshot,
   * per-snapshot lineage: batch id, per-(kafka)partition offset ranges, row
     counts — the north_rule's "per-partition manifest/lineage metadata",
@@ -147,13 +148,6 @@ def widen_schema(
 NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _validate_spec(fields: list["PS.PartitionField"]) -> None:
-    """Multi-field partition values are '_'-joined with percent-escaped
-    field values (partition_spec.spec_expr), so any transform may appear
-    in any position — identity/truncate strings and the null sentinel
-    (which itself contains '_') split unambiguously at plan time. Kept as
-    a hook for future structural constraints."""
-
 #: Stage directories are named ``s{seq:08d}-...`` — the commit's data
 #: sequence number, recoverable per-row from the file path alone.
 _SEQ_RE = r"/s(\d{8})-"
@@ -262,8 +256,6 @@ class IcebergLite:
         self._ctor_spec = (
             PS.parse_spec(partition_spec) if partition_spec else None
         )
-        if self._ctor_spec:
-            _validate_spec(self._ctor_spec)
         self.data_dir = os.path.join(location, "data")
         self.meta_dir = os.path.join(location, "metadata")
         self.manifest_dir = os.path.join(self.meta_dir, "manifests")
@@ -279,22 +271,20 @@ class IcebergLite:
         os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.meta_dir, exist_ok=True)
         if self.current_version() is None:
-            v0 = {
-                "snapshot_id": uuid.uuid4().hex,
-                "version": 0,
-                "parent": None,
-                "batch_id": None,
-                "manifests": {},
-                "lineage": [],
-            }
+            specs = {}
             if self._ctor_spec:
                 # explicit hidden-partitioning spec: registered as spec 1
                 # (spec 0 stays the legacy bare-value day layout, so the
                 # two can never produce colliding partition values)
-                v0["partition_specs"] = {"1": PS.spec_to_json(self._ctor_spec)}
-                v0["default_spec_id"] = 1
+                specs = {
+                    "partition_specs": {"1": PS.spec_to_json(self._ctor_spec)},
+                    "default_spec_id": 1,
+                }
             try:
-                self._write_snapshot(v0)
+                self._commit(
+                    0, None, {"main": {"version": 0, "type": "branch"}},
+                    "create", ref="main", **specs,
+                )
             except CommitConflict:
                 pass  # another writer created the (identical, empty) v0
 
@@ -395,7 +385,11 @@ class IcebergLite:
         every branch gets a unique, monotonically increasing number — the
         Iceberg sequence-number rule), so concurrent writers on ANY refs
         collide on the same next version and optimistic concurrency keeps
-        working. A commit to an unknown branch forks it from main's head."""
+        working. A commit to an unknown branch forks it from main's head.
+
+        The partition-spec registry is table-global, so a base older than
+        the metadata head is handed back carrying the HEAD's registry —
+        ``_commit`` then carries it forward without re-reading the head."""
         meta = self.metadata_head()
         refs = self.refs(meta)
         entry = refs.get(branch)
@@ -406,35 +400,79 @@ class IcebergLite:
         base = (
             meta
             if entry["version"] == meta["version"]
-            else self.snapshot_at(entry["version"])
+            else {
+                **self.snapshot_at(entry["version"]),
+                "partition_specs": meta.get("partition_specs") or {},
+                "default_spec_id": meta.get("default_spec_id", 0),
+            }
         )
         v_new = meta["version"] + 1
         refs[branch] = {"version": v_new, "type": "branch"}
         return v_new, base, refs
 
-    def _commit_refs_only(self, refs: dict, kind: str) -> None:
-        """Metadata-only commit that changes the ref registry (create
-        branch/tag, fast-forward, rollback). Content (``manifests``) carries
-        the main head's so time travel to this version still resolves, but
-        no ref ever points AT a refs-only snapshot except through the
-        explicit version it names."""
-        meta = self.metadata_head()
-        main = self.current_snapshot()
+    def _commit(
+        self,
+        v_new: int,
+        base: dict | None,
+        refs: dict,
+        kind: str,
+        *,
+        ref: str,
+        batch_id: str | None = None,
+        manifests: dict | None = None,
+        delete_manifests: list | None = None,
+        schema: dict | None = None,
+        lineage=(),
+        **extra,
+    ) -> None:
+        """The one commit path: builds the snapshot and claims ``v_new``.
+
+        Content (``manifests``, ``delete_manifests``, ``schema``) and the
+        partition-spec registry carry forward from ``base`` — the content
+        head ``_commit_meta`` returned, or None for a table's v0 — unless
+        the caller overrides them; ``extra`` adds or replaces fields
+        (the spec registry on evolution, informational lists on
+        maintenance commits). Every snapshot therefore has the same keys."""
+        base = base or {}
         self._write_snapshot(
             {
                 "snapshot_id": uuid.uuid4().hex,
-                "version": meta["version"] + 1,
-                "parent": meta["snapshot_id"],
-                "parent_version": meta["version"],
-                "batch_id": None,
-                "commit_kind": kind,
-                "ref": "_meta",
+                "version": v_new,
+                "parent": base.get("snapshot_id"),
+                "parent_version": base.get("version"),
+                "ref": ref,
                 "refs": refs,
-                "schema": main.get("schema"),
-                "manifests": main["manifests"],
-                "delete_manifests": main.get("delete_manifests") or [],
-                "lineage": [],
+                "batch_id": None if batch_id is None else str(batch_id),
+                "commit_kind": kind,
+                "schema": base.get("schema") if schema is None else schema,
+                "manifests": (
+                    base.get("manifests", {}) if manifests is None else manifests
+                ),
+                "delete_manifests": (
+                    base.get("delete_manifests") or []
+                    if delete_manifests is None
+                    else delete_manifests
+                ),
+                "lineage": list(lineage),
+                "partition_specs": base.get("partition_specs") or {},
+                "default_spec_id": base.get("default_spec_id", 0),
+                **extra,
             }
+        )
+
+    def _commit_refs_only(self, refs: dict, kind: str) -> None:
+        """Metadata-only commit that changes the ref registry (create
+        branch/tag, fast-forward, rollback). Its parent is the metadata
+        head; content carries the main head's so time travel to this
+        version still resolves, but no ref ever points AT a refs-only
+        snapshot except through the explicit version it names."""
+        meta = self.metadata_head()
+        main = self.current_snapshot()
+        self._commit(
+            meta["version"] + 1, meta, refs, kind, ref="_meta",
+            schema=main.get("schema"),
+            manifests=main["manifests"],
+            delete_manifests=main.get("delete_manifests") or [],
         )
 
     def create_branch(self, name: str, version: int | None = None) -> int:
@@ -533,21 +571,9 @@ class IcebergLite:
         against the new current snapshot (Iceberg's optimistic commit
         protocol). The version hint then moves by rename; hint movement is
         monotone because every hint value corresponds to a uniquely-owned
-        snapshot file.
+        snapshot file. Only :meth:`_commit` calls this.
         """
         v = snap["version"]
-        if "partition_specs" not in snap and v > 0:
-            # spec registry rides every snapshot (Iceberg table metadata
-            # keeps all specs + default-spec-id); commit kinds that don't
-            # change it inherit from the parent — which, at commit time, is
-            # always the still-retained current head
-            try:
-                parent = self.snapshot_at(v - 1)
-            except FileNotFoundError:
-                parent = {}
-            if "partition_specs" in parent:
-                snap["partition_specs"] = parent["partition_specs"]
-                snap["default_spec_id"] = parent.get("default_spec_id", 0)
         path = os.path.join(self.meta_dir, f"v{v}.json")
         tmp = path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
@@ -804,31 +830,16 @@ class IcebergLite:
         Metadata-only commit — O(1) regardless of table size, which is the
         whole point at 100 TB (vs an O(table) re-layout rewrite)."""
         parsed = PS.parse_spec(fields)
-        _validate_spec(parsed)
         self.create()
         v_new, snap, refs = self._commit_meta("main")
-        # the spec registry is table-global (rides the metadata head, not
-        # any one branch) — extend whatever the newest snapshot carries
-        reg_json = dict(self.metadata_head().get("partition_specs") or {})
+        # the spec registry is table-global: _commit_meta hands back the
+        # metadata head's, whichever ref ``snap`` is the head of
+        reg_json = dict(snap.get("partition_specs") or {})
         new_id = max([int(k) for k in reg_json] + [0]) + 1
         reg_json[str(new_id)] = PS.spec_to_json(parsed)
-        self._write_snapshot(
-            {
-                "snapshot_id": uuid.uuid4().hex,
-                "version": v_new,
-                "parent": snap["snapshot_id"],
-                "parent_version": snap["version"],
-                "ref": "main",
-                "refs": refs,
-                "batch_id": None,
-                "commit_kind": "evolve-spec",
-                "schema": snap.get("schema"),
-                "manifests": snap["manifests"],
-                "delete_manifests": snap.get("delete_manifests") or [],
-                "lineage": [],
-                "partition_specs": reg_json,
-                "default_spec_id": new_id,
-            }
+        self._commit(
+            v_new, snap, refs, "evolve-spec", ref="main",
+            partition_specs=reg_json, default_spec_id=new_id,
         )
         return new_id
 
@@ -964,24 +975,50 @@ class IcebergLite:
             )
         manifests: dict[str, list[dict]] = {}
         for entry in sorted(os.listdir(stage)):
-            if not entry.startswith("_p="):
-                continue
-            pval = entry.split("=", 1)[1]
-            pdir = os.path.join(stage, entry)
-            files = [
-                {
-                    "path": os.path.join(pdir, f),
-                    **(
-                        self._file_stats(os.path.join(pdir, f))
-                        or {"rows": None}
-                    ),
-                }
-                for f in sorted(os.listdir(pdir))
-                if f.endswith(".parquet")
-            ]
-            if files:
-                manifests[pval] = files
+            if entry.startswith("_p="):
+                files = self._stage_entries(os.path.join(stage, entry))
+                if files:
+                    manifests[entry.split("=", 1)[1]] = files
         return manifests
+
+    def _stage_entries(self, stage: str) -> list[dict]:
+        """Manifest entries (path + footer stats) for a stage directory's
+        parquet files."""
+        paths = (os.path.join(stage, f) for f in sorted(os.listdir(stage)))
+        return [
+            {"path": p, **(self._file_stats(p) or {"rows": None})}
+            for p in paths
+            if p.endswith(".parquet")
+        ]
+
+    def _append_manifests(
+        self, manifests: dict, new: dict[str, list[dict]]
+    ) -> dict:
+        """``manifests`` with each partition's ``new`` files appended."""
+        out = dict(manifests)
+        for pv, files in new.items():
+            if pv in out:
+                files = self._load_manifest(out[pv]) + files
+            out[pv] = self._write_manifest(files)
+        return out
+
+    def _reconcile_schema(
+        self,
+        snap: dict,
+        schema: T.StructType,
+        current: DataFrame | None = None,
+    ) -> T.StructType:
+        """Widen the committed schema (``current``'s for a pre-evolution
+        table) by a batch's ``schema`` and save it as the empty-table read
+        hint (Iceberg type evolution): a batch may widen a column
+        (int->long mid-stream) or add one; incompatible changes raise HERE,
+        not as a read-time decode failure."""
+        base = self.table_schema(snap)
+        if base is None and current is not None:
+            base = current.schema
+        reconciled = widen_schema(base, schema) if base is not None else schema
+        self._save_schema_hint(reconciled)
+        return reconciled
 
     def read(
         self,
@@ -1405,39 +1442,15 @@ class IcebergLite:
         df = df.cache()
         try:
             v_new, snap, refs = self._commit_meta(branch)
-            base = self.table_schema(snap)
-            # schema reconciliation (Iceberg type evolution): the batch may
-            # widen a column (int->long mid-stream) or add one; incompatible
-            # changes raise HERE, not as a read-time decode failure
-            reconciled = (
-                widen_schema(base, df.schema) if base is not None else df.schema
-            )
-            self._save_schema_hint(reconciled)
+            reconciled = self._reconcile_schema(snap, df.schema)
             new = self._write_files(
-                self._conform(df, reconciled),
-                str(batch_id),
-                v_new,
+                self._conform(df, reconciled), str(batch_id), v_new
             )
-            manifests = dict(snap["manifests"])
-            for pv, files in new.items():
-                if pv in manifests:
-                    files = self._load_manifest(manifests[pv]) + files
-                manifests[pv] = self._write_manifest(files)
-            self._write_snapshot(
-                {
-                    "snapshot_id": uuid.uuid4().hex,
-                    "version": v_new,
-                    "parent": snap["snapshot_id"],
-                    "parent_version": snap["version"],
-                    "ref": branch,
-                    "refs": refs,
-                    "batch_id": str(batch_id),
-                    "commit_kind": "append",
-                    "schema": reconciled.jsonValue(),
-                    "manifests": manifests,
-                    "delete_manifests": snap.get("delete_manifests") or [],
-                    "lineage": [self._lineage_record(df, batch_id)],
-                }
+            self._commit(
+                v_new, snap, refs, "append", ref=branch, batch_id=batch_id,
+                schema=reconciled.jsonValue(),
+                manifests=self._append_manifests(snap["manifests"], new),
+                lineage=[self._lineage_record(df, batch_id)],
             )
             return True
         finally:
@@ -1486,11 +1499,7 @@ class IcebergLite:
         df = df.cache()
         try:
             v_new, snap, refs = self._commit_meta("main")
-            base = self.table_schema(snap)
-            reconciled = (
-                widen_schema(base, df.schema) if base is not None else df.schema
-            )
-            self._save_schema_hint(reconciled)
+            reconciled = self._reconcile_schema(snap, df.schema)
             new = self._write_files(
                 self._conform(df, reconciled), str(batch_id), v_new
             )
@@ -1509,23 +1518,14 @@ class IcebergLite:
                 delete_manifests = []
             for pv, files in new.items():
                 manifests[pv] = self._write_manifest(files)
-            self._write_snapshot(
-                {
-                    "snapshot_id": uuid.uuid4().hex,
-                    "version": v_new,
-                    "parent": snap["snapshot_id"],
-                    "parent_version": snap["version"],
-                    "ref": "main",
-                    "refs": refs,
-                    "batch_id": str(batch_id),
-                    "commit_kind": (
-                        "overwrite-dynamic" if dynamic else "overwrite"
-                    ),
-                    "schema": reconciled.jsonValue(),
-                    "manifests": manifests,
-                    "delete_manifests": delete_manifests,
-                    "lineage": [self._lineage_record(df, batch_id)],
-                }
+            self._commit(
+                v_new, snap, refs,
+                "overwrite-dynamic" if dynamic else "overwrite",
+                ref="main", batch_id=batch_id,
+                schema=reconciled.jsonValue(),
+                manifests=manifests,
+                delete_manifests=delete_manifests,
+                lineage=[self._lineage_record(df, batch_id)],
             )
             return True
         finally:
@@ -1565,112 +1565,14 @@ class IcebergLite:
         retention deletes: a date-clustered table deletes whole days by
         manifest surgery and rewrites only the two boundary files.
         """
-        if lo is None and hi is None:
-            raise ValueError("delete_range needs at least one bound")
-        self.create()
-        batch_id = str(batch_id if batch_id is not None else uuid.uuid4().hex)
-        if batch_id in self.committed_batches():
-            return None
-        lo_n = self._norm_stat_value(lo)
-        hi_n = self._norm_stat_value(hi)
-        v_new, snap, refs = self._commit_meta("main")
-        by_part = self.resolve_manifests(snap)
-
-        carried: dict[str, list[dict]] = {}
-        rewrite_paths: list[str] = []
-        n_dropped = n_rewritten = n_carried = 0
-        for pv, files in by_part.items():
-            keep: list[dict] = []
-            for f in files:
-                rng = (f.get("stats") or {}).get(col)
-                nulls = (f.get("nulls") or {}).get(col)
-                disjoint = contained = False
-                if rng is not None:
-                    mn, mx = rng
-                    try:
-                        if lo_n is not None and mx < lo_n:
-                            disjoint = True
-                        if hi_n is not None and mn > hi_n:
-                            disjoint = True
-                        if not disjoint:
-                            contained = (
-                                (lo_n is None or mn >= lo_n)
-                                and (hi_n is None or mx <= hi_n)
-                                and nulls == 0
-                            )
-                    except TypeError:
-                        pass  # incomparable bounds: conservative rewrite
-                if disjoint:
-                    keep.append(f)
-                    n_carried += 1
-                elif contained:
-                    n_dropped += 1  # metadata-only: file simply not kept
-                else:
-                    rewrite_paths.append(f["path"])
-                    n_rewritten += 1
-            carried[pv] = keep
-
-        new: dict[str, list[dict]] = {}
-        rows_kept = 0
-        if rewrite_paths:
-            df = self._apply_equality_deletes(
-                spark, self._read_files(spark, rewrite_paths, snap), snap
-            )
-            cond = F.lit(True)
-            if lo is not None:
-                cond = cond & (F.col(col) >= F.lit(lo))
-            if hi is not None:
-                cond = cond & (F.col(col) <= F.lit(hi))
-            kept = df.where(~F.coalesce(cond, F.lit(False))).cache()
-            try:
-                rows_kept = kept.count()
-                if rows_kept:
-                    new = self._write_files(kept, batch_id, v_new)
-            finally:
-                kept.unpersist()
-
-        manifests: dict[str, str] = {}
-        for pv in set(carried) | set(new):
-            files = carried.get(pv, []) + new.get(pv, [])
-            if files:
-                manifests[pv] = self._write_manifest(files)
-        self._write_snapshot(
-            {
-                "snapshot_id": uuid.uuid4().hex,
-                "version": v_new,
-                "parent": snap["snapshot_id"],
-                "parent_version": snap["version"],
-                "ref": "main",
-                "refs": refs,
-                "batch_id": batch_id,
-                "commit_kind": "delete",
-                "schema": snap.get("schema"),
-                "manifests": manifests,
-                # still needed by the carried files; rewritten files carry
-                # sequence v_new and are immune
-                "delete_manifests": snap.get("delete_manifests") or [],
-                "lineage": [
-                    {
-                        "batch_id": batch_id,
-                        "rows": rows_kept,
-                        "kind": "delete",
-                        "col": col,
-                        "files_dropped": n_dropped,
-                        "files_rewritten": n_rewritten,
-                        "files_carried": n_carried,
-                        "offsets": {},
-                        "partition_rows": {},
-                    }
-                ],
-            }
+        out = self._rewrite_range(
+            spark, "delete", col, lo, hi, batch_id,
+            lambda df, cond: df.where(~cond), drop_contained=True,
         )
-        return {
-            "files_dropped": n_dropped,
-            "files_rewritten": n_rewritten,
-            "files_carried": n_carried,
-            "rows_kept_in_rewrite": rows_kept,
-            "version": v_new,
-        }
+        if out is None:
+            return None
+        counts, rows, v_new = out
+        return {**counts, "rows_kept_in_rewrite": rows, "version": v_new}
 
     def update_range(
         self,
@@ -1700,10 +1602,56 @@ class IcebergLite:
         At 100 TB this is the GDPR-redaction shape: a date-bounded UPDATE
         touches O(matching files), not O(table).
         """
-        if lo is None and hi is None:
-            raise ValueError("update_range needs at least one bound")
         if not set_exprs:
             raise ValueError("update_range needs at least one SET column")
+        schema = self.table_schema()
+        for name in set_exprs:
+            if schema is not None and name not in schema.fieldNames():
+                raise ValueError(
+                    f"UPDATE SET column {name!r} is not in the table schema"
+                )
+
+        def _set_col(c: str, cond: Column) -> Column:
+            e = set_exprs[c]
+            if not isinstance(e, Column):
+                e = F.lit(e)
+            return F.when(cond, e).otherwise(F.col(c)).alias(c)
+
+        out = self._rewrite_range(
+            spark, "update", col, lo, hi, batch_id,
+            lambda df, cond: df.select(
+                *[
+                    _set_col(c, cond) if c in set_exprs else F.col(c)
+                    for c in df.columns
+                ]
+            ),
+        )
+        if out is None:
+            return None
+        counts, rows, v_new = out
+        return {**counts, "rows_in_rewrite": rows, "version": v_new}
+
+    def _rewrite_range(
+        self,
+        spark: SparkSession,
+        kind: str,
+        col: str,
+        lo,
+        hi,
+        batch_id: str | None,
+        rewrite,
+        drop_contained: bool = False,
+    ) -> tuple[dict, int, int] | None:
+        """Shared copy-on-write plan + commit of :meth:`delete_range` and
+        :meth:`update_range`: files the manifest stats prove disjoint from
+        ``lo <= col <= hi`` carry forward, every other file is read (MOR
+        deletes applied) and replaced by ``rewrite(df, cond)``, where
+        ``cond`` is the NULL-safe range match. ``drop_contained`` adds
+        DELETE's metadata-only drop of files wholly inside the range with
+        zero nulls in ``col``. Returns (file counts, rewritten rows,
+        version), or None when ``batch_id`` was already committed."""
+        if lo is None and hi is None:
+            raise ValueError(f"{kind}_range needs at least one bound")
         self.create()
         batch_id = str(batch_id if batch_id is not None else uuid.uuid4().hex)
         if batch_id in self.committed_batches():
@@ -1711,40 +1659,44 @@ class IcebergLite:
         lo_n = self._norm_stat_value(lo)
         hi_n = self._norm_stat_value(hi)
         v_new, snap, refs = self._commit_meta("main")
-        schema = self.table_schema(snap)
-        for name in set_exprs:
-            if schema is not None and name not in schema.fieldNames():
-                raise ValueError(
-                    f"UPDATE SET column {name!r} is not in the table schema"
-                )
 
         carried: dict[str, list[dict]] = {}
         rewrite_paths: list[str] = []
-        n_rewritten = n_carried = 0
+        counts = {"files_rewritten": 0, "files_carried": 0}
+        if drop_contained:
+            counts["files_dropped"] = 0
         for pv, files in self.resolve_manifests(snap).items():
             keep: list[dict] = []
             for f in files:
                 rng = (f.get("stats") or {}).get(col)
-                disjoint = False
+                disjoint = contained = False
                 if rng is not None:
                     mn, mx = rng
                     try:
-                        if lo_n is not None and mx < lo_n:
-                            disjoint = True
-                        if hi_n is not None and mn > hi_n:
-                            disjoint = True
+                        disjoint = (lo_n is not None and mx < lo_n) or (
+                            hi_n is not None and mn > hi_n
+                        )
+                        contained = (
+                            drop_contained
+                            and not disjoint
+                            and (lo_n is None or mn >= lo_n)
+                            and (hi_n is None or mx <= hi_n)
+                            and (f.get("nulls") or {}).get(col) == 0
+                        )
                     except TypeError:
-                        pass
+                        pass  # incomparable bounds: conservative rewrite
                 if disjoint:
                     keep.append(f)
-                    n_carried += 1
+                    counts["files_carried"] += 1
+                elif contained:
+                    counts["files_dropped"] += 1  # file simply not kept
                 else:
                     rewrite_paths.append(f["path"])
-                    n_rewritten += 1
+                    counts["files_rewritten"] += 1
             carried[pv] = keep
 
         new: dict[str, list[dict]] = {}
-        rows_rewritten = 0
+        rows = 0
         if rewrite_paths:
             df = self._apply_equality_deletes(
                 spark, self._read_files(spark, rewrite_paths, snap), snap
@@ -1754,64 +1706,37 @@ class IcebergLite:
                 cond = cond & (F.col(col) >= F.lit(lo))
             if hi is not None:
                 cond = cond & (F.col(col) <= F.lit(hi))
-            cond = F.coalesce(cond, F.lit(False))  # NULL never matches
-            def _set_col(c: str):
-                e = set_exprs[c]
-                if not isinstance(e, Column):
-                    e = F.lit(e)
-                return F.when(cond, e).otherwise(F.col(c)).alias(c)
-
-            updated = df.select(
-                *[
-                    _set_col(c) if c in set_exprs else F.col(c)
-                    for c in df.columns
-                ]
-            ).cache()
+            out = rewrite(df, F.coalesce(cond, F.lit(False))).cache()
             try:
-                rows_rewritten = updated.count()
-                if rows_rewritten:
-                    new = self._write_files(updated, batch_id, v_new)
+                rows = out.count()
+                if rows:
+                    new = self._write_files(out, batch_id, v_new)
             finally:
-                updated.unpersist()
+                out.unpersist()
 
         manifests: dict[str, str] = {}
         for pv in set(carried) | set(new):
             files = carried.get(pv, []) + new.get(pv, [])
             if files:
                 manifests[pv] = self._write_manifest(files)
-        self._write_snapshot(
-            {
-                "snapshot_id": uuid.uuid4().hex,
-                "version": v_new,
-                "parent": snap["snapshot_id"],
-                "parent_version": snap["version"],
-                "ref": "main",
-                "refs": refs,
-                "batch_id": batch_id,
-                "commit_kind": "update",
-                "schema": snap.get("schema"),
-                "manifests": manifests,
-                "delete_manifests": snap.get("delete_manifests") or [],
-                "lineage": [
-                    {
-                        "batch_id": batch_id,
-                        "rows": rows_rewritten,
-                        "kind": "update",
-                        "col": col,
-                        "files_rewritten": n_rewritten,
-                        "files_carried": n_carried,
-                        "offsets": {},
-                        "partition_rows": {},
-                    }
-                ],
-            }
+        # delete manifests carry forward: the carried files still need
+        # them; rewritten files have sequence v_new and are immune
+        self._commit(
+            v_new, snap, refs, kind, ref="main", batch_id=batch_id,
+            manifests=manifests,
+            lineage=[
+                {
+                    "batch_id": batch_id,
+                    "rows": rows,
+                    "kind": kind,
+                    "col": col,
+                    **counts,
+                    "offsets": {},
+                    "partition_rows": {},
+                }
+            ],
         )
-        return {
-            "files_rewritten": n_rewritten,
-            "files_carried": n_carried,
-            "rows_in_rewrite": rows_rewritten,
-            "version": v_new,
-        }
+        return counts, rows, v_new
 
     def commit_upsert(
         self,
@@ -1866,15 +1791,7 @@ class IcebergLite:
             # batch may add columns OR widen one (int->long mid-stream);
             # reconcile to the lattice supremum, conform both sides, and
             # commit the new schema with the snapshot
-            base = self.table_schema(snap)
-            if base is None and current is not None:
-                base = current.schema
-            reconciled = (
-                widen_schema(base, upserts.schema)
-                if base is not None
-                else upserts.schema
-            )
-            self._save_schema_hint(reconciled)
+            reconciled = self._reconcile_schema(snap, upserts.schema, current)
             upserts = self._conform(upserts, reconciled)
             deletes = batch.select(*self.pk).distinct()
             if current is not None:
@@ -1915,25 +1832,17 @@ class IcebergLite:
                         )
                     )
                 )
-            self._write_snapshot(
-                {
-                    "snapshot_id": uuid.uuid4().hex,
-                    "version": v_new,
-                    "parent": snap["snapshot_id"],
-                    "parent_version": snap["version"],
-                    "ref": branch,
-                    "refs": refs,
-                    "batch_id": str(batch_id),
-                    "commit_kind": "upsert-cow",
-                    "schema": reconciled.jsonValue(),
-                    # outstanding MOR deletes still cover the partitions this
-                    # CoW merge did NOT touch; the rewritten partitions' rows
-                    # get sequence V+1 (> every delete), so double-application
-                    # is impossible
-                    "delete_manifests": delete_manifests,
-                    "manifests": manifests,
-                    "lineage": [self._lineage_record(batch, batch_id)],
-                }
+            self._commit(
+                v_new, snap, refs, "upsert-cow", ref=branch,
+                batch_id=batch_id,
+                schema=reconciled.jsonValue(),
+                manifests=manifests,
+                # outstanding MOR deletes still cover the partitions this
+                # CoW merge did NOT touch; the rewritten partitions' rows
+                # get sequence V+1 (> every delete), so double-application
+                # is impossible
+                delete_manifests=delete_manifests,
+                lineage=[self._lineage_record(batch, batch_id)],
             )
             return True
         finally:
@@ -1954,14 +1863,7 @@ class IcebergLite:
         )
         with self._micros_timestamps(spark):
             dkeys.coalesce(1).write.parquet(dstage, mode="overwrite")
-        return [
-            {
-                "path": os.path.join(dstage, f),
-                **(self._file_stats(os.path.join(dstage, f)) or {"rows": None}),
-            }
-            for f in sorted(os.listdir(dstage))
-            if f.endswith(".parquet")
-        ]
+        return self._stage_entries(dstage)
 
     def _commit_upsert_mor(
         self, df: DataFrame, batch_id: str, branch: str = "main"
@@ -1989,39 +1891,20 @@ class IcebergLite:
                 if has_cdc
                 else batch
             )
-            base = self.table_schema(snap)
-            reconciled = (
-                widen_schema(base, upserts.schema)
-                if base is not None
-                else upserts.schema
-            )
-            self._save_schema_hint(reconciled)
+            reconciled = self._reconcile_schema(snap, upserts.schema)
             upserts = self._conform(upserts, reconciled)
             new = self._write_files(upserts, str(batch_id), seq)
-            manifests = dict(snap["manifests"])
-            for pv, files in new.items():
-                if pv in manifests:
-                    files = self._load_manifest(manifests[pv]) + files
-                manifests[pv] = self._write_manifest(files)
+            manifests = self._append_manifests(snap["manifests"], new)
             # ONE equality-delete file per commit: every PK the batch
             # touched (upserted OR cdc-deleted), written small and compact
             dentries = self._write_delete_entries(spark, batch, reconciled, seq)
-            self._write_snapshot(
-                {
-                    "snapshot_id": uuid.uuid4().hex,
-                    "version": seq,
-                    "parent": snap["snapshot_id"],
-                    "parent_version": snap["version"],
-                    "ref": branch,
-                    "refs": refs,
-                    "batch_id": str(batch_id),
-                    "commit_kind": "upsert-mor",
-                    "schema": reconciled.jsonValue(),
-                    "manifests": manifests,
-                    "delete_manifests": (snap.get("delete_manifests") or [])
-                    + [self._write_manifest(dentries)],
-                    "lineage": [self._lineage_record(batch, batch_id)],
-                }
+            self._commit(
+                seq, snap, refs, "upsert-mor", ref=branch, batch_id=batch_id,
+                schema=reconciled.jsonValue(),
+                manifests=manifests,
+                delete_manifests=(snap.get("delete_manifests") or [])
+                + [self._write_manifest(dentries)],
+                lineage=[self._lineage_record(batch, batch_id)],
             )
             return True
         finally:
@@ -2081,34 +1964,12 @@ class IcebergLite:
             )
             with self._micros_timestamps(spark):
                 df.coalesce(1).write.parquet(stage, mode="overwrite")
-            manifests[pv] = self._write_manifest(
-                [
-                    {
-                        "path": os.path.join(stage, f),
-                        **(
-                            self._file_stats(os.path.join(stage, f))
-                            or {"rows": None}
-                        ),
-                    }
-                    for f in sorted(os.listdir(stage))
-                    if f.endswith(".parquet")
-                ]
-            )
-        self._write_snapshot(
-            {
-                "snapshot_id": uuid.uuid4().hex,
-                "version": seq,
-                "parent": snap["snapshot_id"],
-                "parent_version": snap["version"],
-                "ref": "main",
-                "refs": crefs,
-                "batch_id": None,  # reorg — replay guard unaffected
-                "materialize": sorted(affected),
-                "schema": snap.get("schema"),
-                "manifests": manifests,
-                "delete_manifests": [],
-                "lineage": [],
-            }
+            manifests[pv] = self._write_manifest(self._stage_entries(stage))
+        # a reorg, not a data batch — the replay guard is unaffected
+        self._commit(
+            seq, snap, crefs, "materialize-deletes", ref="main",
+            manifests=manifests, delete_manifests=[],
+            materialize=sorted(affected),
         )
         return len(affected)
 
@@ -2332,35 +2193,13 @@ class IcebergLite:
                     )
                 else:
                     df.coalesce(1).write.parquet(stage, mode="overwrite")
-            new_files = [
-                {
-                    "path": os.path.join(stage, f),
-                    **(
-                        self._file_stats(os.path.join(stage, f))
-                        or {"rows": None}
-                    ),
-                }
-                for f in sorted(os.listdir(stage))
-                if f.endswith(".parquet")
-            ]
-            manifests[pv] = self._write_manifest(new_files)
-        self._write_snapshot(
-            {
-                "snapshot_id": uuid.uuid4().hex,
-                "version": v_new,
-                "parent": snap["snapshot_id"],
-                "parent_version": snap["version"],
-                "ref": "main",
-                "refs": crefs,
-                "batch_id": None,  # not a data batch — replay guard unaffected
-                "compaction": sorted(todo),
-                "schema": snap.get("schema"),  # reorg, not an evolution
-                "manifests": manifests,
-                # deletes stay: partitions below the file-count threshold
-                # were not rewritten and still need them at read
-                "delete_manifests": snap.get("delete_manifests") or [],
-                "lineage": [],
-            }
+            manifests[pv] = self._write_manifest(self._stage_entries(stage))
+        # not a data batch (replay guard unaffected) and not an evolution
+        # (schema carries); deletes stay: partitions below the file-count
+        # threshold were not rewritten and still need them at read
+        self._commit(
+            v_new, snap, crefs, "compact", ref="main",
+            manifests=manifests, compaction=sorted(todo),
         )
         return len(todo)
 

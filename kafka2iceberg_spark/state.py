@@ -321,7 +321,7 @@ def paired_turns_stream_join(
     disorder: str = "10 minutes",
 ) -> DataFrame:
     """J1 as a watermarked JVM stream-stream LEFT OUTER join — the
-    whole-stage-codegen'd fast path for the contiguous-pair contract.
+    whole-stage-codegen'd alternative for the contiguous-pair contract.
 
     The user side joins the reply side on (conv_id, turn_idx+1) with an
     event-time band ``reply_ts ∈ [user_ts - disorder, user_ts + gap]`` (the
@@ -330,8 +330,9 @@ def paired_turns_stream_join(
     inversions). Unmatched user turns emit with NULL reply columns once the
     watermark passes their band — same final rows as
     ``paired_turns_stream``, produced by Spark's symmetric hash join state
-    instead of per-group Python, so throughput tracks the JVM sink branches
-    (~3-4× the applyInPandasWithState path; see BENCH). Differences vs the
+    instead of per-group Python. It is not faster: BENCH_r05.json measured
+    it at 20.8 s (``pairs_e2e_join``) against 5.5 s for the
+    applyInPandasWithState path (``pairs_e2e``). Differences vs the
     stateful impl: emission timing (pairs surface when the watermark closes
     the band, not eagerly) and no duplicate-turn collapse — feed it
     offset-deduped input (the ingest sink's dedup, or

@@ -80,38 +80,6 @@ def bpe_token_count(c: Column) -> Column:
     ).cast("long")
 
 
-def stopword_ratio(c: Column) -> Column:
-    t = tokens(c)
-    sw = F.size(
-        F.filter(t, lambda x: x.isin(*STOPWORDS))
-    )
-    return F.round(
-        F.when(F.size(t) > 0, sw / F.size(t)).otherwise(F.lit(0.0)), 4
-    )
-
-
-def alpha_ratio(c: Column) -> Column:
-    """Fraction of raw characters that are ascii letters."""
-    letters = F.length(c) - F.length(F.regexp_replace(c, "[a-zA-Z]", ""))
-    return F.round(
-        F.when(F.length(c) > 0, letters / F.length(c)).otherwise(F.lit(0.0)),
-        4,
-    )
-
-
-def avg_word_len(c: Column) -> Column:
-    """Mean token length; norm text has single spaces, so total token chars
-    = len(norm) - (n_tokens - 1) — exact, no per-token aggregation."""
-    n = norm_text(c)
-    k = F.size(tokens(c))
-    return F.round(
-        F.when(k > 0, (F.length(n) - (k - F.lit(1))) / k).otherwise(
-            F.lit(0.0)
-        ),
-        4,
-    )
-
-
 def _idiv(a: Column, b: Column) -> Column:
     """Exact integer division on longs without F.expr: (a - a mod b) / b.
 
@@ -158,20 +126,6 @@ def quality_ppm(c: Column) -> Column:
         + _idiv(sw * 300_000, F.size(t).cast("long"))
         + _idiv(letters * 300_000, F.length(c).cast("long"))
     ).cast("long")
-
-
-def quality_score(c: Column) -> Column:
-    """Composite [0,1] quality heuristic (length, stopwords, alpha purity).
-
-    Deterministic arithmetic only; mirrored verbatim in the oracle SQL.
-    """
-    len_score = F.least(F.length(c) / F.lit(500.0), F.lit(1.0))
-    return F.round(
-        F.lit(0.4) * len_score
-        + F.lit(0.3) * stopword_ratio(c)
-        + F.lit(0.3) * alpha_ratio(c),
-        4,
-    )
 
 
 def lang_scores(c: Column) -> list[Column]:

@@ -50,6 +50,32 @@ def test_snapshots_table(spark, table):
     # parent chain is consistent
     assert snaps[2]["parent_id"] == snaps[1]["snapshot_id"]
 
+    # maintenance and metadata commits name their kind too, and every
+    # snapshot carries one key set (kind-specific informational lists
+    # aside) — they are all built by the same commit path
+    assert table.compact(spark, min_files_per_partition=1) == 2
+    table.commit_upsert(
+        _batch(spark, [("c2", 0, "b2", D2, 3, 0, False)]), "2",
+        strategy="mor",
+    )
+    assert table.materialize_deletes(spark) == 1
+    table.evolve_partition_spec(["month(ts)"])
+    table.tag("audit")
+    snaps = table.meta_table(spark, "snapshots").orderBy("version").collect()
+    assert [s["commit_kind"] for s in snaps[3:]] == [
+        "compact", "upsert-mor", "materialize-deletes", "evolve-spec",
+        "tag:audit",
+    ]
+    assert all(s["commit_kind"] is not None for s in snaps[1:])
+    keys = {
+        v: set(table.snapshot_at(v)) - {"compaction", "materialize"}
+        for v in range(table.current_version() + 1)
+    }
+    assert len({frozenset(k) for k in keys.values()}) == 1, keys
+    assert table.snapshot_at(3)["compaction"] == ["2024-09-01", "2024-09-02"]
+    assert table.snapshot_at(5)["materialize"] == ["2024-09-02"]
+    assert {r.text for r in table.read(spark).collect()} == {"a2", "b2"}
+
 
 def test_history_marks_current_ancestors(spark, table):
     hist = {

@@ -242,6 +242,80 @@ def test_crashed_commit_self_heals_via_forward_probe(spark, table):
     assert fresh.current_version() == v + 2
 
 
+#: three upsert batches: an insert, an update plus an insert, a CDC delete
+#: plus an insert — enough for a lost or doubled batch to change the rows
+_SEAM_BATCHES = [
+    [("c1", 0, "a", TS, 0, 0, False), ("c2", 0, "b", TS, 1, 0, False)],
+    [("c1", 0, "a2", TS, 2, 0, False), ("c3", 0, "c", TS, 3, 0, False)],
+    [("c2", 0, "b", TS, 4, 0, True), ("c1", 1, "d", TS, 5, 0, False)],
+]
+
+
+class _Crash(Exception):
+    """Stands in for the writer process dying mid-commit."""
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_rows(spark, tmp_path_factory):
+    """Sorted rows of a twin table that commits every seam batch without
+    crashing, per upsert strategy (built once per module)."""
+    cache: dict[str, list] = {}
+
+    def rows(strategy: str) -> list:
+        if strategy not in cache:
+            t = IcebergLite(str(tmp_path_factory.mktemp("twin")), pk=PK)
+            for i, batch in enumerate(_SEAM_BATCHES):
+                t.commit_upsert(_batch(spark, batch), str(i), strategy=strategy)
+            cache[strategy] = sorted(t.read(spark).collect())
+        return cache[strategy]
+
+    return rows
+
+
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+@pytest.mark.parametrize("point", ["before-link", "before-hint"])
+def test_crash_at_commit_seam_matches_uninterrupted_twin(
+    spark, table, monkeypatch, uninterrupted_rows, point, strategy
+):
+    """A writer dying inside the snapshot commit — before the snapshot
+    file is linked, or after the link but before the version hint moves —
+    neither loses nor doubles a batch: a restarted handle replaying the
+    same batch id and then the next batch ends with exactly the rows of a
+    run that never crashed."""
+    import os as _os
+
+    real_link = _os.link
+
+    def crashing_link(src, dst):
+        if point == "before-hint":
+            real_link(src, dst)
+        raise _Crash(point)
+
+    table.commit_upsert(_batch(spark, _SEAM_BATCHES[0]), "0", strategy=strategy)
+    v = table.current_version()
+    monkeypatch.setattr(_os, "link", crashing_link)
+    with pytest.raises(_Crash):
+        table.commit_upsert(
+            _batch(spark, _SEAM_BATCHES[1]), "1", strategy=strategy
+        )
+    monkeypatch.undo()
+    with open(table._hint_path()) as fh:
+        assert int(fh.read()) == v  # the hint never moved
+
+    fresh = IcebergLite(table.location, pk=PK)
+    linked = point == "before-hint"
+    assert fresh.current_version() == v + linked
+    # the replay commits only if the crashed attempt never linked
+    assert fresh.commit_upsert(
+        _batch(spark, _SEAM_BATCHES[1]), "1", strategy=strategy
+    ) is not linked
+    assert fresh.commit_upsert(
+        _batch(spark, _SEAM_BATCHES[2]), "2", strategy=strategy
+    )
+    assert fresh.current_version() == v + 2
+    assert sorted(fresh.read(spark).collect()) == uninterrupted_rows(strategy)
+
+
 def test_crashed_create_self_heals(spark, tmp_path):
     """v0 linked but hint never written (crashed create): the table must
     come up, not raise FileNotFoundError forever."""

@@ -229,8 +229,7 @@ def main(argv: list[str] | None = None) -> None:
         # derived from the dump path, so restarting the job never
         # duplicates the backfill; stream rows arriving later for the same
         # PKs simply upsert over the historical image. Rows get synthetic
-        # lineage (partition_idx -1, unique in-batch offsets) so the
-        # (partition, offset) replay-dedup never collapses them and real
+        # lineage (partition_idx -1, unique in-batch offsets) so real
         # broker lineage stays disjoint. Contract (the same one Iceberg's
         # upsert mode enforces by requiring partition fields ⊆ identifier
         # fields): the dump must carry the TRUE event ts per PK — upserts

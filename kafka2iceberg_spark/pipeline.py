@@ -18,7 +18,7 @@ Source → parse → sink, plus the [NORTH] windowed/stateful branches:
 Checkpoint recovery (north_rule): restart with the same checkpointLocation →
 Structured Streaming replays the last uncommitted micro-batch; the sink's
 batch-id guard makes the replay a no-op if it had already committed —
-zero duplicate rows (tested in tests/test_streaming.py).
+zero duplicate rows (tested in tests/test_recovery.py).
 """
 
 from __future__ import annotations
@@ -69,8 +69,8 @@ def fanin_broker_stream(
     partition ids are lifted into a disjoint range (topic_rank * stride +
     partition, rank from the SORTED dir list — stable across restarts; the
     dir SET is part of the checkpoint contract, see
-    ``namespace_topic_partitions``), so the (partition, offset) dedup key
-    (K3), per-partition lineage, and the replay guard stay per-topic sound
+    ``namespace_topic_partitions``), so per-partition lineage and the
+    replay provenance stay per-topic sound
     while ONE query / ONE checkpoint / ONE exactly-once commit path serves
     all topics. The reference runs one
     Flink job per topic (Kafka2IcebergApp.java:60-64 subscribes a single
@@ -122,9 +122,9 @@ def kafka_reader_options(
 #: Per-topic partition-id stride for multi-topic fan-in. Kafka partition
 #: numbers restart at 0 in EVERY topic, so a job subscribed to several
 #: topics would collide distinct (topic-a,0,offset) / (topic-b,0,offset)
-#: records in the (partition, offset) dedup key (K3), the lineage ranges,
-#: and the replay guard. Namespacing partition_idx = topic_rank * stride +
-#: partition keeps all three disjoint per topic with no schema change.
+#: records in the lineage ranges and the replay provenance. Namespacing
+#: partition_idx = topic_rank * stride + partition keeps both disjoint per
+#: topic with no schema change.
 FANIN_PARTITION_STRIDE = 1024
 
 
@@ -157,8 +157,8 @@ def namespace_topic_partitions(
 
 def _guard_stride(partition: Column, stride: int) -> Column:
     """Fail LOUDLY if a topic has >= stride partitions: id spaces would
-    overlap across topics and the (partition, offset) dedup key would
-    silently drop distinct records — the one failure mode the namespacing
+    overlap across topics and per-partition lineage would silently merge
+    distinct topics' offset ranges — the one failure mode the namespacing
     exists to prevent. Codegen'd raise_error, zero cost on the good path."""
     return F.when(
         partition >= F.lit(stride),

@@ -207,32 +207,30 @@ def dedup_batch(
     pk: list[str],
     order_cols: tuple[str, ...] = ("ts_ms", "offset"),
 ) -> DataFrame:
-    """K3 in-batch dedup: drop replayed records by (partition_idx, offset),
-    then keep the last writer per PK. Shuffle-aware: both steps hash on the
-    same PK-derived keys and AQE coalesces the tiny per-batch partitions.
+    """K3 in-batch dedup: keep the last writer per PK — one window, one
+    shuffle on the PK.
+
+    A replayed record carries the same PK as its original, so the window
+    collapses replays too; no separate ``(partition_idx, offset)`` drop is
+    needed. One would be wrong: a Canal envelope batches several rows in
+    ``data[]`` (P6) and every row exploded from it shares the envelope's
+    offset, so dropping on the offset keeps one row of the envelope.
 
     Ordering uses whichever of ``order_cols`` exist (offset is per-Kafka-
     partition monotonic and the producer keys by conv_id, so offset order IS
     per-key arrival order — the reference's upsert relies on the same fact).
-
-    Tables not fed from a partitioned log (dimension tables, side tables)
-    lack the lineage columns; for them the replay-drop step is skipped and,
-    with no order column at all, in-batch PK collisions collapse
-    arbitrarily (callers should send one row per PK per batch).
+    With no order column at all (tables not fed from a partitioned log),
+    in-batch PK collisions collapse arbitrarily (callers should send one
+    row per PK per batch). Either way the output is unique per PK.
     """
-    d = (
-        df.dropDuplicates(["partition_idx", "offset"])
-        if "partition_idx" in df.columns and "offset" in df.columns
-        else df
-    )
     avail = [c for c in order_cols if c in df.columns]
     if not avail:
-        return d.dropDuplicates(list(pk))
+        return df.dropDuplicates(list(pk))
     w = Window.partitionBy(*pk).orderBy(
         *[F.col(c).desc_nulls_last() for c in avail]
     )
     return (
-        d.withColumn("_rn", F.row_number().over(w))
+        df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
@@ -1327,7 +1325,12 @@ class IcebergLite:
         """Project ``df`` onto the reconciled schema: cast widened columns,
         null-fill columns the batch lacks, order columns canonically. Used
         at write time so every NEW file is already in the table's current
-        types (old files are promoted at read)."""
+        types (old files are promoted at read). A frame already in the
+        schema comes back as is, with no projection to plan."""
+        if [(f.name, f.dataType) for f in df.schema.fields] == [
+            (f.name, f.dataType) for f in schema.fields
+        ]:
+            return df
         cols = []
         have = set(df.columns)
         for f in schema.fields:
@@ -1397,32 +1400,41 @@ class IcebergLite:
             .select(*out_cols)
         )
 
-    def _lineage_record(self, df_cached: DataFrame, batch_id: str) -> dict:
+    def _lineage_record(
+        self, df_cached: DataFrame, batch_id: str
+    ) -> tuple[dict, set]:
         """One aggregation job: per-(kafka)partition offset ranges + counts;
-        total rows derived from the same result (no second count job)."""
-        if "partition_idx" in df_cached.columns:
-            stats = (
-                df_cached.groupBy("partition_idx")
-                .agg(
-                    F.min("offset").alias("min_offset"),
-                    F.max("offset").alias("max_offset"),
-                    F.count(F.lit(1)).alias("rows"),
-                )
-                .collect()
-            )
-            rows = sum(r["rows"] for r in stats)
-        else:
-            stats = []
-            rows = df_cached.count()
-        return {
+        total rows derived from the same result (no second count job).
+
+        A ``_p`` column (the table partition value, added by the CoW merge)
+        is grouped on too, and the values seen come back with the record:
+        the merge's partition discovery rides this same job. Offset ranges
+        and counts are merged across ``_p`` on the driver."""
+        keys = [c for c in ("_p", "partition_idx") if c in df_cached.columns]
+        aggs = [F.count(F.lit(1)).alias("rows")]
+        if "partition_idx" in keys:
+            aggs += [
+                F.min("offset").alias("min_offset"),
+                F.max("offset").alias("max_offset"),
+            ]
+        stats = df_cached.groupBy(*keys).agg(*aggs).collect()
+        offsets: dict[str, list] = {}
+        partition_rows: dict[str, int] = {}
+        if "partition_idx" in keys:
+            for r in stats:
+                k = str(r["partition_idx"])
+                seen = offsets.get(k, [None, None])
+                lo = [v for v in (seen[0], r["min_offset"]) if v is not None]
+                hi = [v for v in (seen[1], r["max_offset"]) if v is not None]
+                offsets[k] = [min(lo, default=None), max(hi, default=None)]
+                partition_rows[k] = partition_rows.get(k, 0) + r["rows"]
+        record = {
             "batch_id": str(batch_id),
-            "rows": rows,
-            "offsets": {
-                str(r["partition_idx"]): [r["min_offset"], r["max_offset"]]
-                for r in stats
-            },
-            "partition_rows": {str(r["partition_idx"]): r["rows"] for r in stats},
+            "rows": sum(r["rows"] for r in stats),
+            "offsets": offsets,
+            "partition_rows": partition_rows,
         }
+        return record, {r["_p"] for r in stats} if "_p" in keys else set()
 
     # -- commits ------------------------------------------------------------
 
@@ -1450,7 +1462,7 @@ class IcebergLite:
                 v_new, snap, refs, "append", ref=branch, batch_id=batch_id,
                 schema=reconciled.jsonValue(),
                 manifests=self._append_manifests(snap["manifests"], new),
-                lineage=[self._lineage_record(df, batch_id)],
+                lineage=[self._lineage_record(df, batch_id)[0]],
             )
             return True
         finally:
@@ -1525,7 +1537,7 @@ class IcebergLite:
                 schema=reconciled.jsonValue(),
                 manifests=manifests,
                 delete_manifests=delete_manifests,
-                lineage=[self._lineage_record(df, batch_id)],
+                lineage=[self._lineage_record(df, batch_id)[0]],
             )
             return True
         finally:
@@ -1772,12 +1784,10 @@ class IcebergLite:
         batch = dedup_batch(df, self.pk).cache()
         try:
             v_new, snap, refs = self._commit_meta(branch)
-            affected = {
-                r["_p"]
-                for r in batch.select(
-                    self._partition_expr(batch).alias("_p")
-                ).distinct().collect()
-            }
+            # partition discovery and lineage: one aggregation job
+            lineage, affected = self._lineage_record(
+                batch.withColumn("_p", self._partition_expr(batch)), batch_id
+            )
             # merge against the TARGET ref's head (branch-staged upserts
             # build on the branch, not on main)
             current = self.read_partitions(spark, affected, snap)
@@ -1793,7 +1803,7 @@ class IcebergLite:
             # commit the new schema with the snapshot
             reconciled = self._reconcile_schema(snap, upserts.schema, current)
             upserts = self._conform(upserts, reconciled)
-            deletes = batch.select(*self.pk).distinct()
+            deletes = batch.select(*self.pk)  # unique per PK after dedup
             if current is not None:
                 # equality delete: drop current rows whose PK appears in the
                 # batch (either replaced or deleted), then add the upserts
@@ -1842,7 +1852,7 @@ class IcebergLite:
                 # get sequence V+1 (> every delete), so double-application
                 # is impossible
                 delete_manifests=delete_manifests,
-                lineage=[self._lineage_record(batch, batch_id)],
+                lineage=[lineage],
             )
             return True
         finally:
@@ -1851,11 +1861,12 @@ class IcebergLite:
     def _write_delete_entries(
         self, spark: SparkSession, batch: DataFrame, reconciled, seq: int
     ) -> list[dict]:
-        """Write one equality-delete parquet covering the batch's distinct
-        PKs at sequence ``seq``; returns its manifest entries."""
+        """Write one equality-delete parquet covering the batch's PKs (unique
+        after ``dedup_batch``) at sequence ``seq``; returns its manifest
+        entries."""
         pk_set = set(self.pk)
         dkeys = self._conform(
-            batch.select(*self.pk).distinct(),
+            batch.select(*self.pk),
             T.StructType([f for f in reconciled.fields if f.name in pk_set]),
         )
         dstage = os.path.join(
@@ -1904,7 +1915,7 @@ class IcebergLite:
                 manifests=manifests,
                 delete_manifests=(snap.get("delete_manifests") or [])
                 + [self._write_manifest(dentries)],
-                lineage=[self._lineage_record(batch, batch_id)],
+                lineage=[self._lineage_record(batch, batch_id)[0]],
             )
             return True
         finally:

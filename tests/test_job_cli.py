@@ -466,8 +466,8 @@ def test_cli_backfill_then_tail(spark, tmp_path):
     main(args)
     t = IcebergLite(str(tmp_path / "tbl"), pk=["conv_id", "turn_idx"])
     rows = {(r.conv_id, r.turn_idx): r for r in t.read(spark).collect()}
-    # backfill-only convs present, with BOTH their rows (the synthetic
-    # offsets must not collapse in the (partition, offset) dedup)
+    # backfill-only convs present, with BOTH their rows (distinct PKs
+    # under synthetic lineage must not collapse in the dedup)
     assert ("h1", 0) in rows and ("h1", 1) in rows
     # the stream's live image wins over the historical one for shared PKs
     assert rows[("c00000", 0)].text != "HISTORICAL IMAGE"

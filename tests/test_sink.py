@@ -104,21 +104,81 @@ def test_partition_pruned_rewrite(spark, table):
     } == files_before
 
 
-def test_lineage_offsets(spark, table):
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_lineage_offsets(spark, table, strategy):
+    """Kafka partition 0's rows span two days, so its offset range and row
+    count must merge across table partitions; both strategies record the
+    same lineage."""
+    day2 = TS + datetime.timedelta(days=1)
     b = _batch(
         spark,
         [
             ("c1", 0, "a", TS, 10, 0, False),
-            ("c1", 1, "b", TS, 11, 0, False),
+            ("c1", 1, "b", day2, 11, 0, False),
+            ("c1", 2, "d", TS, 12, 0, False),
             ("c2", 0, "c", TS, 3, 1, False),
         ],
     )
-    table.commit_upsert(b, "0")
+    table.commit_upsert(b, "0", strategy=strategy)
     lin = table.lineage()
     assert len(lin) == 1
-    assert lin[0]["offsets"]["0"] == [10, 11]
-    assert lin[0]["offsets"]["1"] == [3, 3]
-    assert lin[0]["rows"] == 3
+    assert lin[0]["offsets"] == {"0": [10, 12], "1": [3, 3]}
+    assert lin[0]["partition_rows"] == {"0": 3, "1": 1}
+    assert lin[0]["rows"] == 4
+
+
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_multi_row_envelope_upserts_every_row(spark, table, strategy):
+    """A Canal envelope batching 5 rows in data[] (P6) explodes into 5 rows
+    sharing one Kafka offset; every one of them is a distinct PK and must
+    land, not only one per offset."""
+    import json
+
+    from kafka2iceberg_spark import ingest
+    from kafka2iceberg_spark.schema import transcript_task
+
+    envelope = {
+        "data": [
+            {"conv_id": "c00042", "turn_idx": str(i), "role": "user",
+             "text": f"t{i}", "tool": "null", "ts": "2024-09-16 11:05:34"}
+            for i in range(5)
+        ],
+        "database": "chat", "table": "transcripts", "type": "INSERT",
+        "isDdl": False, "ts": 1726484734000, "es": 1726484733500,
+        "old": None, "pkNames": ["conv_id", "turn_idx"], "sql": "",
+        "_offset": 135189, "_partition": 3,
+    }
+    raw = spark.createDataFrame([(json.dumps(envelope),)], "value string")
+    parsed = ingest.parse(raw, transcript_task())
+    assert table.commit_upsert(parsed, "0", strategy=strategy)
+    rows = table.read(spark).collect()
+    assert sorted((r.turn_idx, r.text) for r in rows) == [
+        (i, f"t{i}") for i in range(5)
+    ]
+
+
+def test_cow_upsert_job_count(spark, table):
+    """Guard on the copy-on-write commit's fixed per-batch cost: a warm
+    commit runs at most 7 Spark jobs (AQE runs each shuffle stage as its
+    own job)."""
+    sc = spark.sparkContext
+    table.commit_upsert(_batch(spark, [("c1", 0, "a", TS, 0, 0, False)]), "0")
+    group = f"cow-job-count-{id(table)}"
+    sc.setJobGroup(group, "cow upsert job count")
+    try:
+        table.commit_upsert(
+            _batch(spark, [("c1", 0, "b", TS, 1, 0, False),
+                           ("c2", 0, "c", TS, 2, 1, False)]),
+            "1",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job starts reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 7, jobs
+    assert sorted(r.text for r in table.read(spark).collect()) == ["b", "c"]
 
 
 def test_dedup_batch_offset_replay(spark):

@@ -692,8 +692,8 @@ def start_pairs_sink(
 
     ``impl``: 'state' (applyInPandasWithState — eager emission, dedups
     duplicate turns) or 'join' (JVM watermarked stream-stream join — same
-    final rows on deduped input, ~3-4× throughput; see
-    state.paired_turns_stream_join).
+    final rows on deduped input but slower: 20.8 s against 5.5 s for
+    'state' in BENCH_r05.json; see state.paired_turns_stream_join).
     """
     from .state import paired_turns_stream, paired_turns_stream_join
     from .windows import with_watermark

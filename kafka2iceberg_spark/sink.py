@@ -1340,19 +1340,20 @@ class IcebergLite:
                 cols.append(F.lit(None).cast(f.dataType).alias(f.name))
         return df.select(*cols)
 
-    def _delete_aggregate(
+    def _delete_rows(
         self, spark: SparkSession, snap: dict
     ) -> DataFrame | None:
-        """Max delete sequence per PK from a snapshot's delete manifests —
+        """``(_del_<pk>…, _del_seq)`` rows of a snapshot's delete files —
         the single MOR reconciliation input, shared by every read path and
-        by materialize_deletes (one implementation, or their semantics
-        drift). None when the snapshot carries no outstanding deletes.
+        by materialize_deletes through :meth:`_join_deletes` (one
+        implementation, or their semantics drift). None when the snapshot
+        carries no outstanding deletes.
 
         PK-projected read (the delete files' only payload the reconcile
         needs); pre-evolution files fall back to mergeSchema. Broadcast
         only while the delete debt is dimension-sized — a long-deferred
-        reconcile over a huge debt must fall back to a shuffled hash join,
-        not OOM the driver."""
+        reconcile over a huge debt must fall back to a shuffled join
+        instead of a broadcast that cannot fit in memory."""
         refs = snap.get("delete_manifests") or []
         if not refs or not self.pk:
             return None
@@ -1367,38 +1368,38 @@ class IcebergLite:
             )
         else:
             reader = spark.read.option("mergeSchema", "true")
-        deletes = (
-            reader.parquet(*[e["path"] for e in entries])
-            .withColumn("_del_seq", _file_seq_col())
-            .groupBy(*self.pk)
-            .agg(F.max("_del_seq").alias("_del_seq"))
+        deletes = reader.parquet(*[e["path"] for e in entries]).select(
+            *[F.col(k).alias(f"_del_{k}") for k in self.pk],
+            _file_seq_col().alias("_del_seq"),
         )
         if sum(e.get("rows") or 0 for e in entries) <= 5_000_000:
             deletes = F.broadcast(deletes)
         return deletes
 
+    def _join_deletes(
+        self, df: DataFrame, deletes: DataFrame, how: str
+    ) -> DataFrame:
+        """Join ``df`` (rows carrying their file's ``_seq``) to the delete
+        rows that supersede them — Iceberg v2 semantics: a delete at
+        sequence S covers data rows of the same PK with sequence < S.
+        ``left_anti`` keeps the live rows, ``left_semi`` the superseded."""
+        cond = [F.col(k) == F.col(f"_del_{k}") for k in self.pk]
+        return df.join(
+            deletes, cond + [F.col("_del_seq") > F.col("_seq")], how
+        )
+
     def _apply_equality_deletes(
         self, spark: SparkSession, df: DataFrame, snap: dict
     ) -> DataFrame:
-        """Merge-on-read scan: drop rows superseded by equality deletes.
-
-        Iceberg v2 semantics — a delete at sequence S covers data rows of
-        the same PK with sequence < S. One aggregation over the delete
-        files (``_delete_aggregate``) + one join against the scan. Rows'
-        own sequences come from the file path — no per-file plans."""
-        deletes = self._delete_aggregate(spark, snap)
+        """Merge-on-read scan: drop rows superseded by equality deletes —
+        one anti join of the scan against the raw delete rows. Rows' own
+        sequences come from the file path — no per-file plans."""
+        deletes = self._delete_rows(spark, snap)
         if deletes is None:
             return df
-        out_cols = df.columns  # join(on=pk) reorders; restore the schema
-        return (
-            df.withColumn("_seq", _file_seq_col())
-            .join(deletes, on=self.pk, how="left")
-            .where(
-                F.col("_del_seq").isNull()
-                | (F.col("_seq") >= F.col("_del_seq"))
-            )
-            .select(*out_cols)
-        )
+        return self._join_deletes(
+            df.withColumn("_seq", _file_seq_col()), deletes, "left_anti"
+        ).drop("_seq")
 
     def _lineage_record(
         self, df_cached: DataFrame, batch_id: str
@@ -1939,21 +1940,20 @@ class IcebergLite:
         seq, snap, crefs = self._commit_meta("main")
         by_part = self.resolve_manifests(snap)
         all_paths = [f["path"] for files in by_part.values() for f in files]
-        dagg = self._delete_aggregate(spark, snap) if all_paths else None
-        if dagg is not None:
+        deletes = self._delete_rows(spark, snap) if all_paths else None
+        if deletes is not None:
             scan = self._read_files(spark, all_paths, snap)
             # file-derived columns (_seq, partition value) must be computed
             # BEFORE the join — input_file_name() is per-source
-            doomed = (
-                scan.withColumn("_seq", _file_seq_col())
-                .withColumn(
+            doomed = self._join_deletes(
+                scan.withColumn("_seq", _file_seq_col()).withColumn(
                     "_pv",
                     F.regexp_extract(
                         F.input_file_name(), r"/_p=([^/]+)/", 1
                     ),
-                )
-                .join(dagg, on=self.pk, how="inner")
-                .where(F.col("_seq") < F.col("_del_seq"))
+                ),
+                deletes,
+                "left_semi",
             )
             affected = {
                 r["_pv"] for r in doomed.select("_pv").distinct().collect()

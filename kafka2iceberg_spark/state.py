@@ -6,23 +6,32 @@ Arrow batches"; "turn ordering within each conv_id is enforced by a
 (conv_id, turn_idx) sort inside mapInPandas so per-turn text equality holds
 under replay".
 
-Two implementations with identical final-output semantics:
+Three forms of one pairing contract:
 
   * ``paired_turns_batch`` — the declarative batch/parity form: lead() over
     (conv_id, turn_idx). One shuffle, no state; used by the oracle gate and
     batch backfills.
   * ``paired_turns_stream`` — the streaming form: ``applyInPandasWithState``
-    keyed by conv_id. State buffers turns that cannot yet emit; each incoming
-    Arrow batch group is sorted by turn_idx (J2) before matching; a
-    processing-time timeout flushes conversations idle past the session gap.
-    All pandas ops are columnar — no per-row Python in the hot loop.
+    keyed by conv_id. Each group call turns the buffered state plus the
+    group's new rows into four NumPy arrays (turn_idx, role, text, ts) and
+    runs one array kernel, ``_pair_turns``: a stable argsort on turn_idx
+    (J2), a first-wins duplicate drop, then contiguity and role masks.
+    Emitted rows leave as one pandas frame per group; the turns that cannot
+    emit yet go back to state through the string codec, the only per-row
+    Python left. An event-time timeout (the watermark passing the last
+    buffered turn's ts + the session gap) flushes an idle conversation.
+  * ``paired_turns_stream_join`` — the same pairs from a watermarked JVM
+    stream-stream join; slower, kept for comparison (see its docstring).
 
 Shared pairing contract (turn_idx is dense per conv_id, FIXTURES.md §1):
-user turn i pairs with turn i+1 when i+1 is assistant/tool; if i+1 is another
-user turn, turn i emits unpaired (NULL reply columns); a trailing user turn
-emits unpaired at state expiry (stream) / end of input (batch). Requiring
-exact i+1 contiguity makes the streaming result independent of arrival order
-— an out-of-order hole defers emission instead of mis-pairing across it.
+user turn i pairs with turn i+1 when i+1 is any non-user turn
+(assistant/tool); if i+1 is another user turn, turn i emits unpaired (NULL
+reply columns); a trailing user turn emits unpaired at state expiry
+(stream) / end of input (batch). Requiring exact i+1 contiguity makes the
+streaming result independent of arrival order — an out-of-order hole
+defers emission instead of mis-pairing across it. In the stream, a turn
+whose turn_idx is already buffered is dropped (first arrival wins), and a
+turn is forgotten once it has emitted or been consumed as a reply.
 """
 
 from __future__ import annotations
@@ -30,7 +39,9 @@ from __future__ import annotations
 import json
 
 from collections.abc import Iterable
+from typing import TYPE_CHECKING
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -45,6 +56,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 from pyspark.sql.window import Window
+
+if TYPE_CHECKING:
+    from pyspark.sql.streaming.state import GroupState
 
 PAIR_SCHEMA = StructType(
     [
@@ -69,8 +83,6 @@ _STATE_SCHEMA = StructType(
         StructField("ts_us", StringType(), True),  # csv int64 micros
     ]
 )
-
-_PAIR_COLS = [f.name for f in PAIR_SCHEMA.fields]
 
 
 def paired_turns_batch(turns: DataFrame) -> DataFrame:
@@ -103,74 +115,78 @@ def paired_turns_batch(turns: DataFrame) -> DataFrame:
     )
 
 
-def _empty_pairs() -> pd.DataFrame:
-    return pd.DataFrame(columns=_PAIR_COLS)
+#: Columns of one conversation's turns as the kernel sees them: turn_idx
+#: int64, role/text object, ts int64 epoch nanoseconds.
+_TURN_COLS = ("turn_idx", "role", "text", "ts")
+_NAT = np.iinfo(np.int64).min  # datetime64[ns] NaT as int64
 
 
-def _pair_rows(buf: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Vectorized pairing over one conversation's buffered turns.
+def _turns(pdf: pd.DataFrame) -> dict[str, np.ndarray]:
+    """One Arrow batch's rows as the kernel's four arrays."""
+    return {
+        "turn_idx": pdf["turn_idx"].to_numpy("int64"),
+        "role": pdf["role"].to_numpy(object),
+        "text": pdf["text"].to_numpy(object),
+        "ts": pdf["ts"].to_numpy("datetime64[ns]").view("int64"),
+    }
 
-    Returns (pairs, leftover). Only emits where turn i+1 is present
-    (contiguity); everything not consumed stays in ``leftover``.
+
+def _pair_turns(
+    conv_id: str, turns: dict[str, np.ndarray], flush: bool = False
+) -> tuple[pd.DataFrame | None, dict[str, np.ndarray]]:
+    """The pairing kernel over one conversation's buffered turns.
+
+    Returns (emitted rows typed to ``PAIR_SCHEMA`` or None, leftover turns).
+    Turns are ordered by a stable argsort on turn_idx and the first copy of
+    a duplicated turn_idx wins, so buffered state beats a replayed row. A
+    user turn emits when turn i+1 is present (contiguity): paired when
+    i+1 is not a user turn, which is then consumed too, unpaired when it
+    is. ``flush`` (state expiry) also emits every leftover user turn
+    unpaired. The leftover keeps its turn_idx order.
     """
-    df = (
-        buf.sort_values("turn_idx", kind="mergesort")
-        .drop_duplicates(subset=["turn_idx"], keep="first")
-        .reset_index(drop=True)
-    )
-    idx = df["turn_idx"].astype("int64")
-    roles = df["role"]
-    contig = idx.shift(-1) == idx + 1
-    nxt_role = roles.shift(-1)
-    is_user = roles == "user"
-    paired = (is_user & contig & (nxt_role != "user")).fillna(False)
-    closed = (is_user & contig & (nxt_role == "user")).fillna(False)
-    emit = df.index[paired | closed]
-    if not len(emit):
-        return _empty_pairs(), df
-
-    rep = df.shift(-1).loc[emit].reset_index(drop=True)
-    m = paired.loc[emit].reset_index(drop=True).to_numpy()
+    order = np.argsort(turns["turn_idx"], kind="stable")
+    idx = turns["turn_idx"][order]
+    first = np.ones(len(idx), dtype=bool)
+    first[1:] = idx[1:] != idx[:-1]
+    order, idx = order[first], idx[first]
+    role, text, ts = (turns[c][order] for c in ("role", "text", "ts"))
+    is_user = role == "user"
+    emit = np.zeros(len(idx), dtype=bool)
+    emit[:-1] = is_user[:-1] & (idx[1:] == idx[:-1] + 1)
+    paired = np.zeros(len(idx), dtype=bool)
+    paired[:-1] = emit[:-1] & ~is_user[1:]
+    left = ~emit
+    left[1:] &= ~paired[:-1]
+    if flush:
+        emit |= is_user & left
+        left[:] = False
+    leftover = {
+        c: a[left] for c, a in zip(_TURN_COLS, (idx, role, text, ts))
+    }
+    rows = np.flatnonzero(emit)
+    if not len(rows):
+        return None, leftover
+    m = paired[rows]
+    rep = np.minimum(rows + 1, len(idx) - 1)
     out = pd.DataFrame(
         {
-            "conv_id": df.loc[emit, "conv_id"].to_numpy(),
-            "user_turn_idx": df.loc[emit, "turn_idx"].astype("int32").to_numpy(),
-            "user_text": df.loc[emit, "text"].to_numpy(),
-            "user_ts": df.loc[emit, "ts"].to_numpy(),
-            "reply_turn_idx": pd.Series(
-                rep["turn_idx"].astype("int64"), dtype="Int64"
-            ).where(m),
-            "reply_role": rep["role"].where(m),
-            "reply_text": rep["text"].where(m),
-            "reply_ts": pd.to_datetime(rep["ts"]).where(m),
-        }
+            "conv_id": np.full(len(rows), conv_id, dtype=object),
+            "user_turn_idx": idx[rows].astype(np.int32),
+            "user_text": text[rows],
+            "user_ts": ts[rows].view("datetime64[ns]"),
+            "reply_turn_idx": pd.arrays.IntegerArray(
+                idx[rep].astype(np.int32), ~m
+            ),
+            "reply_role": np.where(m, role[rep], None),
+            "reply_text": np.where(m, text[rep], None),
+            "reply_ts": np.where(m, ts[rep], _NAT).view("datetime64[ns]"),
+            "latency_us": pd.arrays.IntegerArray(
+                ts[rep] // 1000 - ts[rows] // 1000, ~m
+            ),
+        },
+        copy=False,  # fresh arrays; skips block consolidation
     )
-    u_us = pd.to_datetime(out["user_ts"]).astype("int64") // 1000  # ns→us
-    r_us = pd.to_datetime(out["reply_ts"]).astype("int64") // 1000
-    out["latency_us"] = pd.Series(r_us - u_us, dtype="Int64").where(m)
-    consumed = set(idx.loc[emit]) | set(
-        idx.loc[e + 1] for e, p in zip(emit, paired.loc[emit]) if p
-    )
-    leftover = df[~df["turn_idx"].isin(consumed)]
     return out, leftover
-
-
-def _flush_unpaired(leftover: pd.DataFrame) -> pd.DataFrame:
-    users = leftover[leftover["role"] == "user"]
-    n = len(users)
-    return pd.DataFrame(
-        {
-            "conv_id": users["conv_id"].to_numpy(),
-            "user_turn_idx": users["turn_idx"].astype("int32").to_numpy(),
-            "user_text": users["text"].to_numpy(),
-            "user_ts": users["ts"].to_numpy(),
-            "reply_turn_idx": pd.array([None] * n, dtype="Int64"),
-            "reply_role": pd.array([None] * n, dtype=object),
-            "reply_text": pd.array([None] * n, dtype=object),
-            "reply_ts": pd.to_datetime(pd.array([None] * n)),
-            "latency_us": pd.array([None] * n, dtype="Int64"),
-        }
-    )
 
 
 def _decode_list(s: str, n: int, legacy_sep: str) -> list:
@@ -196,29 +212,27 @@ def _decode_list(s: str, n: int, legacy_sep: str) -> list:
     return out
 
 
-def _unpack_state(state, conv_id: str) -> pd.DataFrame:
-    cols = ["conv_id", "turn_idx", "role", "text", "ts"]
-    if not state.exists:
-        return pd.DataFrame(columns=cols)
-    idx_s, role_s, text_s, ts_s = state.get
+def _unpack_state(state) -> dict[str, np.ndarray]:
+    idx_s, role_s, text_s, ts_s = state.get if state.exists else ("",) * 4
     if not idx_s:
-        return pd.DataFrame(columns=cols)
-    idx = [int(x) for x in idx_s.split(",")]
-    return pd.DataFrame(
-        {
-            "conv_id": [conv_id] * len(idx),
-            "turn_idx": idx,
-            "role": _decode_list(role_s, len(idx), ","),
-            "text": _decode_list(text_s, len(idx), "\x1f"),
-            "ts": pd.to_datetime(
-                pd.array([int(x) for x in ts_s.split(",")], dtype="int64")
-                * 1000  # us → ns
-            ),
+        return {
+            "turn_idx": np.empty(0, dtype=np.int64),
+            "role": np.empty(0, dtype=object),
+            "text": np.empty(0, dtype=object),
+            "ts": np.empty(0, dtype=np.int64),
         }
-    )
+    idx = np.array([int(x) for x in idx_s.split(",")], dtype=np.int64)
+    ts_us = np.array([int(x) for x in ts_s.split(",")], dtype=np.int64)
+    n = len(idx)
+    return {
+        "turn_idx": idx,
+        "role": np.fromiter(_decode_list(role_s, n, ","), object, n),
+        "text": np.fromiter(_decode_list(text_s, n, "\x1f"), object, n),
+        "ts": ts_us * 1000,
+    }
 
 
-def _pack_state(state, leftover: pd.DataFrame) -> None:
+def _pack_state(state, leftover: dict[str, np.ndarray]) -> None:
     """Buffer leftover turns into the string-typed state columns.
 
     role/text are JSON-encoded lists: a text containing any separator
@@ -227,21 +241,20 @@ def _pack_state(state, leftover: pd.DataFrame) -> None:
     conversation that crashed the query — and stringified nulls to 'None').
     turn_idx/ts stay csv — they're integers, no escaping needed.
     """
-    if not len(leftover):
+    if not len(leftover["turn_idx"]):
         if state.exists:
             state.remove()
         return
-    ts_us = pd.to_datetime(leftover["ts"]).astype("int64") // 1000
     state.update(
         (
-            ",".join(str(int(x)) for x in leftover["turn_idx"]),
+            ",".join(map(str, leftover["turn_idx"].tolist())),
             json.dumps(
                 [None if pd.isna(r) else str(r) for r in leftover["role"]]
             ),
             json.dumps(
                 [None if pd.isna(t) else str(t) for t in leftover["text"]]
             ),
-            ",".join(str(int(x)) for x in ts_us),
+            ",".join(map(str, (leftover["ts"] // 1000).tolist())),  # ns → us
         )
     )
 
@@ -253,11 +266,33 @@ def _duration_ms(s: str) -> int:
     ]
 
 
-def _concat_nonempty(frames: list[pd.DataFrame]) -> pd.DataFrame:
-    nonempty = [f for f in frames if len(f)]
-    if not nonempty:
-        return frames[0]
-    return pd.concat(nonempty, ignore_index=True)
+def _pair_group_fn(gap_ms: int):
+    """``paired_turns_stream``'s per-conversation group function: unpack
+    the buffered turns, append the group's new rows, run the kernel, pack
+    the leftover back and re-arm the event-time timeout at last buffered
+    turn + ``gap_ms``. On timeout, flush the buffer and drop the state."""
+
+    def fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
+        buf = _unpack_state(state)
+        if state.hasTimedOut:
+            state.remove()
+            out, _ = _pair_turns(key[0], buf, flush=True)
+        else:
+            parts = [buf, *map(_turns, pdfs)]
+            buf = {
+                c: np.concatenate([p[c] for p in parts]) for c in _TURN_COLS
+            }
+            out, leftover = _pair_turns(key[0], buf)
+            _pack_state(state, leftover)
+            if len(leftover["ts"]):
+                last_ms = int(leftover["ts"].max() // 1_000_000)
+                state.setTimeoutTimestamp(
+                    max(last_ms + gap_ms, state.getCurrentWatermarkMs() + 1)
+                )
+        if out is not None:
+            yield out
+
+    return fn
 
 
 def paired_turns_stream(
@@ -272,41 +307,13 @@ def paired_turns_stream(
     boundary the session windows use, and fully replay-deterministic. At
     expiry the trailing unpaired user turns flush with NULL reply columns.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from .windows import with_watermark
 
-    gap_ms = _duration_ms(gap)
     turns = with_watermark(turns, "ts", watermark_delay)
-
-    def fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            buf = _unpack_state(state, key[0])
-            state.remove()
-            if len(buf):
-                pairs, leftover = _pair_rows(buf)
-                out = _concat_nonempty([pairs, _flush_unpaired(leftover)])
-                if len(out):
-                    yield out
-            return
-        new = _concat_nonempty(list(pdfs))[
-            ["conv_id", "turn_idx", "role", "text", "ts"]
-        ]
-        buf = _concat_nonempty([_unpack_state(state, key[0]), new])
-        pairs, leftover = _pair_rows(buf)
-        _pack_state(state, leftover)
-        if len(leftover):
-            last_ms = int(
-                pd.to_datetime(leftover["ts"]).astype("int64").max() // 1_000_000
-            )
-            state.setTimeoutTimestamp(
-                max(last_ms + gap_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        if len(pairs):
-            yield pairs
-
     return turns.groupBy("conv_id").applyInPandasWithState(
-        fn,
+        _pair_group_fn(_duration_ms(gap)),
         outputStructType=PAIR_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
@@ -383,112 +390,6 @@ def paired_turns_stream_join(
             F.unix_micros(F.col("reply_ts"))
             - F.unix_micros(F.col("user_ts"))
         ).alias("latency_us"),
-    )
-
-
-_TWS_BUF_SCHEMA = "turn_idx INT, role STRING, text STRING, ts_us BIGINT"
-
-
-def paired_turns_stream_tws(
-    turns: DataFrame,
-    gap: str = "30 minutes",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """J1 on the Spark 4.x state API: ``transformWithStateInPandas`` with a
-    typed ListState buffer and real event-time timers.
-
-    Same output contract as ``paired_turns_stream`` (shared ``_pair_rows``
-    core); the modern API gives schema'd state (no string packing), per-key
-    timers with explicit delete/re-register, and state-store-native TTL
-    hooks. Prefer this form on Spark ≥ 4.0 clusters. Requires the
-    ``protobuf`` package (the tws state-server protocol) — absent from this
-    sandbox image, so tests gate on it; ``paired_turns_stream`` is the
-    dependency-free fallback with identical semantics.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    from .windows import with_watermark
-
-    gap_ms = _duration_ms(gap)
-    turns = with_watermark(turns, "ts", watermark_delay)
-    cols = ["conv_id", "turn_idx", "role", "text", "ts"]
-
-    class PairProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.buf = handle.getListState("buf", _TWS_BUF_SCHEMA)
-
-        def _stored(self, conv_id: str) -> pd.DataFrame:
-            if not self.buf.exists():
-                return pd.DataFrame(columns=cols)
-            rows = list(self.buf.get())
-            if not rows:
-                return pd.DataFrame(columns=cols)
-            return pd.DataFrame(
-                {
-                    "conv_id": [conv_id] * len(rows),
-                    "turn_idx": [r[0] for r in rows],
-                    "role": [r[1] for r in rows],
-                    "text": [r[2] for r in rows],
-                    "ts": pd.to_datetime(
-                        pd.array([r[3] for r in rows], dtype="int64") * 1000
-                    ),
-                }
-            )
-
-        def _store(self, leftover: pd.DataFrame, timerValues: TimerValues) -> None:
-            self.buf.clear()
-            for t in list(self.handle.listTimers()):
-                self.handle.deleteTimer(t)
-            if not len(leftover):
-                return
-            ts_us = pd.to_datetime(leftover["ts"]).astype("int64") // 1000
-            self.buf.put(
-                [
-                    (int(i), str(r), str(x), int(u))
-                    for i, r, x, u in zip(
-                        leftover["turn_idx"], leftover["role"],
-                        leftover["text"], ts_us,
-                    )
-                ]
-            )
-            last_ms = int(ts_us.max() // 1000)
-            self.handle.registerTimer(
-                max(last_ms + gap_ms, timerValues.getCurrentWatermarkInMs() + 1)
-            )
-
-        def handleInputRows(self, key, rows, timerValues: TimerValues):
-            new = _concat_nonempty(list(rows))[cols]
-            buf = _concat_nonempty([self._stored(key[0]), new])
-            pairs, leftover = _pair_rows(buf)
-            self._store(leftover, timerValues)
-            if len(pairs):
-                yield pairs
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ):
-            buf = self._stored(key[0])
-            self.buf.clear()
-            if len(buf):
-                pairs, leftover = _pair_rows(buf)
-                out = _concat_nonempty([pairs, _flush_unpaired(leftover)])
-                if len(out):
-                    yield out
-
-        def close(self) -> None:
-            pass
-
-    return turns.groupBy("conv_id").transformWithStateInPandas(
-        statefulProcessor=PairProcessor(),
-        outputStructType=PAIR_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
     )
 
 

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import SparkSession
@@ -28,3 +29,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn()`` under a fresh job group and returns
+    ``(fn's result, ids of the Spark jobs it ran)`` — AQE runs each shuffle
+    stage as its own job, so this counts a path's fixed per-call cost."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # job starts reach the status store through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    return run

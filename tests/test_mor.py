@@ -57,6 +57,29 @@ def test_mor_upsert_delete_latest_wins(spark, tmp_path):
     }
 
 
+def test_mor_read_job_count(spark, tmp_path, spark_jobs):
+    """A warm merge-on-read ``read().collect()`` runs at most 2 Spark jobs:
+    the delete rows' broadcast and the anti-joined scan (no per-read
+    aggregation shuffle over the delete files)."""
+    t = IcebergLite(str(tmp_path / "t"), pk=["conv_id", "turn_idx"])
+    t.commit_upsert(
+        _batch(spark, [("a", 0, "v1", 0, 0), ("a", 1, "x", 0, 0),
+                       ("b", 0, "y", 1, 0)]),
+        "0", strategy="mor",
+    )
+    t.commit_upsert(
+        _batch(spark, [("a", 0, "v2", 0, 0), ("a", 1, "", 0, 1)]),
+        "1", strategy="mor",
+    )
+    assert t.current_snapshot()["delete_manifests"]
+    t.read(spark).collect()  # warm
+    rows, jobs = spark_jobs(lambda: t.read(spark).collect())
+    assert 0 < len(jobs) <= 2, jobs
+    assert sorted((r.conv_id, r.turn_idx, r.text) for r in rows) == [
+        ("a", 0, "v2"), ("b", 0, "y")
+    ]
+
+
 def test_mor_commit_does_not_read_existing_partitions(spark, tmp_path):
     """The whole point at 100 TB: a MOR commit's physical writes are
     O(batch) — prior data files are untouched (same inode), no partition

@@ -229,6 +229,7 @@ class TestStateCodecProperty:
         """The state buffer codec must round-trip ANY buffered text —
         arbitrary unicode (including \\x1f, commas, newlines, quotes) and
         nulls — without splitting, merging, or stringifying rows."""
+        import numpy as np
         import pandas as pd
 
         from kafka2iceberg_spark.state import _pack_state, _unpack_state
@@ -248,18 +249,15 @@ class TestStateCodecProperty:
                 self.exists, self._t = False, None
 
         n = len(texts)
-        buf = pd.DataFrame(
-            {
-                "conv_id": ["c"] * n,
-                "turn_idx": list(range(n)),
-                "role": ["user"] * n,
-                "text": texts,
-                "ts": pd.to_datetime(["2024-09-01 12:00:00"] * n),
-            }
-        )
+        buf = {
+            "turn_idx": np.arange(n),
+            "role": np.array(["user"] * n, dtype=object),
+            "text": np.fromiter(texts, object, n),
+            "ts": pd.to_datetime(["2024-09-01 12:00:00"] * n).asi8,
+        }
         st_ = FakeState()
         _pack_state(st_, buf)
-        out = _unpack_state(st_, "c")
+        out = _unpack_state(st_)
         assert list(out["turn_idx"]) == list(range(n))
         got = [None if t is None else t for t in out["text"]]
         want = [None if t is None else str(t) for t in texts]

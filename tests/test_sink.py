@@ -157,26 +157,18 @@ def test_multi_row_envelope_upserts_every_row(spark, table, strategy):
     ]
 
 
-def test_cow_upsert_job_count(spark, table):
+def test_cow_upsert_job_count(spark, table, spark_jobs):
     """Guard on the copy-on-write commit's fixed per-batch cost: a warm
     commit runs at most 7 Spark jobs (AQE runs each shuffle stage as its
     own job)."""
-    sc = spark.sparkContext
     table.commit_upsert(_batch(spark, [("c1", 0, "a", TS, 0, 0, False)]), "0")
-    group = f"cow-job-count-{id(table)}"
-    sc.setJobGroup(group, "cow upsert job count")
-    try:
-        table.commit_upsert(
+    _, jobs = spark_jobs(
+        lambda: table.commit_upsert(
             _batch(spark, [("c1", 0, "b", TS, 1, 0, False),
                            ("c2", 0, "c", TS, 2, 1, False)]),
             "1",
         )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job starts reach the status store through the async listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    )
     assert 0 < len(jobs) <= 7, jobs
     assert sorted(r.text for r in table.read(spark).collect()) == ["b", "c"]
 

@@ -1,20 +1,20 @@
 """Stateful join tests (J1/J2): batch form correctness, streaming form
 parity with the batch form on the same input (the north_star invariant),
-and out-of-order robustness from the contiguity rule.
+out-of-order robustness from the contiguity rule, and a Spark-free
+property test of the pairing kernel against a plain-Python reference.
 """
 
 from __future__ import annotations
 
 import datetime
 
-import pytest
+import numpy as np
+import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from kafka2iceberg_spark import gen
-from kafka2iceberg_spark.state import (
-    paired_turns_batch,
-    paired_turns_stream,
-    paired_turns_stream_tws,
-)
+from kafka2iceberg_spark.state import paired_turns_batch, paired_turns_stream
 
 BASE = datetime.datetime(2024, 9, 1, 12, 0, 0)
 
@@ -194,68 +194,21 @@ def test_generator_scale_parity(spark):
             assert t["text"] == r.reply_text and t["role"] in ("assistant", "tool")
 
 
-def _have_protobuf() -> bool:
-    # transformWithStateInPandas speaks protobuf to the state server; the
-    # sandbox image ships without it (pip installs are not available), so
-    # the tws tests run only where a real Spark 4 cluster image would.
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-needs_protobuf = pytest.mark.skipif(
-    not _have_protobuf(),
-    reason="transformWithStateInPandas requires protobuf (absent in sandbox)",
-)
-
-
-@needs_protobuf
-def test_tws_stream_matches_batch_pairs(spark, tmp_path):
-    """Spark 4.x transformWithStateInPandas form: same parity contract."""
-    rows_by_file = [
-        [("c1", 0, "user", "q0"), ("c2", 0, "user", "x0")],
-        [("c1", 1, "assistant", "a1"), ("c2", 1, "tool", "y1")],
-        [("c1", 2, "user", "q2"), ("c1", 3, "assistant", "a3")],
-    ]
-    got, batch = _stream_parity(
-        spark, tmp_path, rows_by_file, impl=paired_turns_stream_tws
-    )
-    gotk = {
-        (r.conv_id, r.user_turn_idx): (r.reply_text, r.latency_us) for r in got
-    }
-    batchk = {
-        (r.conv_id, r.user_turn_idx): (r.reply_text, r.latency_us)
-        for r in batch
-        if r.reply_text is not None
-    }
-    for k, v in batchk.items():
-        assert gotk.get(k) == v, (k, v, gotk.get(k))
-
-
-@needs_protobuf
-def test_tws_out_of_order_defers_not_mispairs(spark, tmp_path):
-    rows_by_file = [
-        [("c1", 0, "user", "q0")],
-        [("c1", 2, "assistant", "a2")],
-        [("c1", 1, "assistant", "a1")],
-    ]
-    got, _ = _stream_parity(
-        spark, tmp_path, rows_by_file, impl=paired_turns_stream_tws
-    )
-    paired = [r for r in got if r.user_turn_idx == 0 and r.reply_text]
-    assert len(paired) == 1
-    assert paired[0].reply_text == "a1"
-
-
 class _FakeState:
-    """Minimal GroupState stand-in for unit-testing the state codec."""
+    """Minimal GroupState stand-in for unit-testing the state codec and
+    the pairing group function (no Spark)."""
 
     def __init__(self):
         self.exists = False
         self._t = None
+        self.hasTimedOut = False
+        self.timeout_ms = None
+
+    def getCurrentWatermarkMs(self):
+        return 0
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ms = ms
 
     @property
     def get(self):
@@ -272,30 +225,25 @@ def test_state_codec_roundtrips_separators_and_nulls():
     """ADVICE: the old \x1f-joined text column split a buffered text that
     contained the separator (poison-pill conversation -> ValueError) and
     stringified nulls to 'None'. The JSON codec must round-trip both."""
-    import pandas as pd
-
     from kafka2iceberg_spark.state import _pack_state, _unpack_state
 
     evil = "a\x1fb,c\nd\"quote\""
-    buf = pd.DataFrame(
-        {
-            "conv_id": ["c1"] * 3,
-            "turn_idx": [0, 1, 2],
-            "role": ["user", "tool", "user"],
-            "text": [evil, None, ""],
-            "ts": pd.to_datetime(
-                ["2024-09-01 12:00:00", "2024-09-01 12:01:00",
-                 "2024-09-01 12:02:00"]
-            ),
-        }
-    )
+    buf = {
+        "turn_idx": np.array([0, 1, 2]),
+        "role": np.array(["user", "tool", "user"], dtype=object),
+        "text": np.array([evil, None, ""], dtype=object),
+        "ts": pd.to_datetime(
+            ["2024-09-01 12:00:00", "2024-09-01 12:01:00",
+             "2024-09-01 12:02:00"]
+        ).asi8,
+    }
     st = _FakeState()
     _pack_state(st, buf)
-    out = _unpack_state(st, "c1")
+    out = _unpack_state(st)
     assert list(out["turn_idx"]) == [0, 1, 2]
-    assert out["text"].iloc[0] == evil
-    assert out["text"].iloc[1] is None
-    assert out["text"].iloc[2] == ""
+    assert out["text"][0] == evil
+    assert out["text"][1] is None
+    assert out["text"][2] == ""
     assert list(out["role"]) == ["user", "tool", "user"]
     assert list(out["ts"]) == list(buf["ts"])
 
@@ -373,7 +321,7 @@ def test_state_codec_reads_legacy_checkpoint_format():
         "hello\x1fworld",          # legacy \x1f-joined text
         "1725192000000000,1725192060000000",
     ))
-    out = _unpack_state(st, "c1")
+    out = _unpack_state(st)
     assert list(out["turn_idx"]) == [0, 1]
     assert list(out["role"]) == ["user", "assistant"]
     assert list(out["text"]) == ["hello", "world"]
@@ -389,3 +337,163 @@ def test_decode_list_legacy_payload_parsing_as_wrong_length_json():
     # the genuine JSON path is unaffected
     assert _decode_list('["a","b"]', 2, "\x1f") == ["a", "b"]
     assert _decode_list("[1]", 1, "\x1f") == [1]
+
+
+_GAP_MS = 30 * 60_000
+_T0_NS = 1_725_192_000_000_000_000  # 2024-09-01 12:00:00 UTC
+
+
+def _pair_batches(batches):
+    """Drive ``paired_turns_stream``'s group function over one
+    conversation's batches of (turn_idx, role, text, ts_ns) rows, then a
+    timeout. Returns (emitted rows, state tuple after each batch)."""
+    from kafka2iceberg_spark.state import PAIR_SCHEMA, _pair_group_fn
+
+    fn = _pair_group_fn(_GAP_MS)
+    state = _FakeState()
+    frames, states = [], []
+    for rows in batches:
+        pdf = pd.DataFrame(
+            {
+                "conv_id": ["c"] * len(rows),
+                "turn_idx": np.array([r[0] for r in rows], dtype=np.int32),
+                "role": [r[1] for r in rows],
+                "text": [r[2] for r in rows],
+                "ts": pd.to_datetime(
+                    np.array([r[3] for r in rows], dtype=np.int64)
+                ),
+            }
+        )
+        frames += fn(("c",), iter([pdf]), state)
+        states.append((state._t, state.timeout_ms))
+    state.hasTimedOut = True
+    frames += fn(("c",), iter([]), state)
+    assert not state.exists  # expiry drops the conversation's state
+    got = []
+    for f in frames:
+        assert list(f.columns) == PAIR_SCHEMA.fieldNames()
+        for r in f.itertuples(index=False):
+            v = [None if v is None or pd.isna(v) else v for v in r]
+            for i in (3, 7):  # user_ts, reply_ts → epoch ns
+                v[i] = None if v[i] is None else pd.Timestamp(v[i]).value
+            got.append(tuple(v))
+    return got, states
+
+
+def _reference_pairs(batches):
+    """The pairing contract of the state module docstring in plain
+    Python: per batch, the buffer takes each turn_idx's first arrival; a
+    user turn i with i+1 buffered emits (paired unless i+1 is a user turn,
+    which it then consumes) and leaves the buffer; expiry flushes the
+    buffered user turns unpaired."""
+    buf, out, states = {}, [], []
+
+    def emit(i, j=None):
+        _, text, ts = buf[i]
+        if j is None:
+            out.append(("c", i, text, ts, None, None, None, None, None))
+        else:
+            role, rtext, rts = buf[j]
+            lat = rts // 1000 - ts // 1000
+            out.append(("c", i, text, ts, j, role, rtext, rts, lat))
+
+    for rows in batches:
+        for i, role, text, ts in rows:
+            buf.setdefault(i, (role, text, ts))
+        for i in sorted(buf):
+            if i in buf and buf[i][0] == "user" and i + 1 in buf:
+                if buf[i + 1][0] == "user":
+                    emit(i)
+                else:
+                    emit(i, i + 1)
+                    del buf[i + 1]
+                del buf[i]
+        states.append(sorted(buf.items()))
+    for i in sorted(buf):
+        if buf[i][0] == "user":
+            emit(i)
+    return out, states
+
+
+_texts = st.one_of(
+    st.none(), st.text(alphabet=st.sampled_from('ab,\x1f"[] \n'), max_size=6)
+)
+
+
+_roles = st.sampled_from(["user", "user", "assistant", "tool"])
+
+
+@st.composite
+def _conversation_batches(draw):
+    """A conversation with holes, runs of user turns, duplicate turns
+    (a replay may differ from the first arrival), arriving in random order
+    and cut into random batches."""
+    n = draw(st.integers(0, 14))
+    rows = []
+    for i in range(n):
+        if draw(st.booleans()) and draw(st.booleans()):
+            continue  # a hole
+        for _ in range(draw(st.sampled_from([1, 1, 1, 2]))):
+            rows.append(
+                (
+                    i,
+                    draw(_roles),
+                    draw(_texts),
+                    # Spark timestamps are microseconds, as is the codec
+                    _T0_NS
+                    + (i * 60_000_000 + draw(st.integers(0, 10**6))) * 1000,
+                )
+            )
+    rows = draw(st.permutations(rows))
+    cuts = sorted(draw(st.lists(st.integers(0, len(rows)), max_size=3)))
+    bounds = [0, *cuts, len(rows)]
+    return [rows[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
+
+
+@settings(max_examples=300, deadline=None)
+@given(_conversation_batches())
+def test_pair_group_fn_matches_reference_contract(batches):
+    """The pairing kernel, driven through the group function with state
+    carried between batches and a final timeout flush, emits exactly the
+    plain-Python reference's pairs and buffers exactly its leftover."""
+    from kafka2iceberg_spark.state import _unpack_state
+
+    got, states = _pair_batches(batches)
+    want, want_states = _reference_pairs(batches)
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+    for (packed, timeout_ms), left in zip(states, want_states):
+        st_ = _FakeState()
+        if packed is not None:
+            st_.update(packed)
+        buf = _unpack_state(st_)
+        assert [
+            (i, (r, t, ts))
+            for i, r, t, ts in zip(*(buf[c].tolist() for c in buf))
+        ] == left
+        if left:
+            last_ms = max(ts for _, (_, _, ts) in left) // 1_000_000
+            assert timeout_ms == last_ms + _GAP_MS
+
+
+def test_pair_group_fn_packs_state_byte_identically():
+    """The state tuple of a fixed leftover is pinned: checkpoints written
+    by earlier releases and by this one hold the same bytes."""
+    batches = [
+        [
+            (5, "assistant", None, _T0_NS + 300_000_000_123),
+            (3, "user", 'q "x"\x1f,', _T0_NS + 180_000_456_789),
+            (0, "user", "q0", _T0_NS),
+            (1, "assistant", "a1", _T0_NS + 60_000_000_000),
+        ]
+    ]
+    got, states = _pair_batches(batches)
+    assert states[0] == (
+        (
+            "3,5",
+            '["user", "assistant"]',
+            '["q \\"x\\"\\u001f,", null]',
+            "1725192180000456,1725192300000000",
+        ),
+        1_725_192_300_000 + _GAP_MS,
+    )
+    assert sorted(r[1] for r in got) == [0, 3]

@@ -1,51 +1,53 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver-run, one JSON line on stdout).
+"""Benchmark harness: one JSON line on stdout.
 
-Measures, on local[$SPARK_GRAFT_CPUS] over $SPARK_GRAFT_SF_DIR:
+Measures, on local[$SPARK_GRAFT_CPUS] (default: every core of the box)
+over $SPARK_GRAFT_SF_DIR:
 
-  1. headline query wall-clock (full materialization via noop writes),
-  2. sustained streaming-ingest throughput (gen → envelope parse →
-     exactly-once upsert sink), warm (2nd run timed — the steady state a
-     long-lived streaming job actually operates in),
-  3. N vs 4N scaling (north_rule): the flagship session-window CEP job over
-     an in-Spark-generated 50M-turn transcript table, steal-gated converged
-     minima at local[N/4] and local[N]. Shuffle dirs on /dev/shm (cluster
-     local-NVMe analogue). Alongside raw efficiency we report the measured
-     *hardware ceiling*: a pure-CPU multiprocess burn at the same two
-     parallelism levels — on a single box, 4× threads ≠ 4× memory bandwidth,
-     so the ceiling (typically ~0.8 here) bounds ANY job; efficiency_norm
-     = raw / ceiling is the cluster-extrapolation figure (a real 4N-executor
-     cluster scales bandwidth with N),
-  4. the ANN crossover: brute vs LSH top-k on the same deterministic
-     synthetic input at the scale where bucket pruning pays
-     (ann_crossover).
+  1. the 15-query HEADLINE set, each fully materialized by a noop write;
+  2. warm streaming ingest (gen → envelope parse → exactly-once upsert
+     sink) as a single batch, and as 8 micro-batches against the
+     accumulating table, copy-on-write and merge-on-read;
+  3. the session-window and user↔reply pairs streaming branches end to
+     end over the same broker;
+  4. N vs 4N scaling: the session-window CEP job over in-Spark generated
+     turns at local[CPUS // 4] and local[CPUS], raw efficiency only.
 
-  All timings are steal-gated min-of-K: /proc/stat steal is sampled around
-  every run, sampling continues until the minimum was witnessed on a quiet
-  host, and every attempt + its steal fraction is recorded in the JSON.
+Every tier is timed by ``min_of_k``: k runs, each recorded with its wall
+and the /proc/stat steal over it; the minimum wall is the reported figure
+and every attempt stays in the JSON. The driver's memory is half of the
+box's MemTotal, and the JSON stamps the box (cores, MemTotal).
 
-Output: {"metric", "value": <total query sec>, "unit": "sec",
-         "queries": {...}, "sf", "ingest": {...}, "scaling": {...}}
+Output: {"metric", "value": <HEADLINE sec>, "unit": "sec", "box", "k",
+         "sf", "queries", "query_attempts", "ingest", "ingest_multibatch",
+         "session_e2e", "pairs_e2e", "scaling"}
 """
 
 from __future__ import annotations
 
+import itertools
 import json
-import multiprocessing as mp
 import os
 import shutil
 import sys
 import tempfile
-import time
+from time import monotonic
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.helpers import (  # noqa: E402
+    cpu_times,
+    mem_total_mb,
+    steal_fraction,
+)
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 RUN_SCALING = os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
 SCALE_ROWS = int(os.environ.get("SPARK_GRAFT_SCALE_ROWS", 50_000_000))
+K = 3  # runs per measurement
 
-# the round-1 comparison set — "value" sums exactly these so rounds compare
+# the round-1 comparison set — "value" sums exactly these
 HEADLINE = [
     "session_window",
     "session_window_two_phase",
@@ -64,124 +66,6 @@ HEADLINE = [
     "nation_revenue",
 ]
 
-# round-2+ additions — timed and reported per-query, summed separately
-# (keeps the 15-query HEADLINE total comparable across rounds)
-HEADLINE_EXTRA = [
-    "ann_ivf_topk",
-    "region_supplier_revenue",
-    "cumulative_spend",
-    "doc_chunks",
-    "top_rare_terms",
-    "missing_replies",
-    "enriched_turns",
-    # round-3 additions
-    "cep_match_extract",
-    "cep_sequence_counts",
-    "hll_distinct",
-    "kmv_distinct",
-    "countmin_hitters",
-    "ann_pq_topk",
-    "scd2_history",
-    "role_day_pivot",
-    "cube_role_tool",
-    "dedup_prefix_join",
-    "pagerank_topk",
-    "assoc_rules",
-    "source_entropy",
-    "debounce_events",
-    # round-3 session-2 additions
-    "nb_classify",
-    "hybrid_search",
-    "hits_scores",
-    "holt_forecast",
-    "winsorize_values",
-    "mad_outliers",
-    "conv_size_gini",
-    "readability",
-    "ks_drift",
-    "psi_drift",
-    "ohlc_bars",
-    "twap_daily",
-    "forecast_revenue",
-    "returned_customers",
-    # round-3 session-4 additions
-    "tool_precedence",
-    "dedup_containment",
-    "table_profile",
-    # round-3 session-5 additions
-    "zorder_layout",
-    "bloom_prune",
-    "mix_allocation",
-    "tool_pmi",
-    # round-3 session-6 additions
-    "quality_auc",
-    "quality_calibration",
-    "len_quality_tau",
-    "centroid_outliers",
-    "dup_span_remove",
-    "quantile_normalize",
-    "lang_source_chi2",
-    "interleaved_shards",
-    "weighted_median_quality",
-    "turn_integrity",
-    "bpe_train",
-    "bpe_fertility",
-    "field_drift",
-    "gram_matrix",
-    "pca_scores",
-    "rfm_segments",
-    "bigram_pmi",
-    "k_anonymity",
-    "dedup_rate_by_source",
-    "transition_entropy",
-    "ngram_novelty",
-    "ann_recall",
-    "sq8_error",
-    "bootstrap_ci",
-    "l_diversity",
-    "classifier_prf",
-    "ann_ndcg",
-    "minhash_calibration",
-    "capped_sessions",
-    "holt_winters",
-    "role_streaks",
-    "distinctive_terms",
-    "frame_samples",
-    "seasonal_anomaly",
-    "lag_features",
-    "burstiness",
-    "simhash_pairs",
-    "tool_transitions",
-    "distance_histogram",
-    # round-3 session-8 additions
-    "ooo_profile",
-    "key_skew",
-    "turn_echoes",
-    "split_leakage",
-    "role_unpivot",
-    "conv_truncation",
-    "skew_join",
-    "struct_dups",
-    # round-3 session-9 additions
-    "neardup_index",
-    "ann_index_topk",
-    # round-3 session-10..12 additions
-    "stream_sample",
-    "join_view",
-    "dp_release",
-    "quota_admit",
-    "temporal_enrich",
-    "rollup_ladder",
-    "hard_negatives",
-    "snapshot_row_diff",
-    "forget_entity",
-    # round-3 session-13 additions
-    "heavy_hitters_exact",
-    "t_closeness",
-    "pseudonymize",
-    "gap_sweep",
-]
-
 SCALE_GEN = dict(
     n_convs=1200, turns_per_conv=100, mega_convs=4, mega_turns=5000,
     n_partitions=16,
@@ -190,229 +74,75 @@ BROKER_FILES = 64
 FILES_PER_TRIGGER = 64
 
 
-def session(cores: int):
+def driver_memory() -> str:
+    """Spark driver memory for this box: half of MemTotal."""
+    return f"{int(mem_total_mb() // 2)}m"
+
+
+def session_conf(local_dir: str) -> dict[str, str]:
+    return {
+        "spark.sql.shuffle.partitions": "64",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory": driver_memory(),
+        "spark.local.dir": local_dir,
+        "spark.ui.enabled": "false",
+    }
+
+
+def session(cores: int, root: str):
     from pyspark.sql import SparkSession
 
-    return (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName("k2i-bench")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "48g")
-        .config("spark.local.dir", f"/dev/shm/k2i-bench-{cores}")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    builder = SparkSession.builder.master(f"local[{cores}]").appName(
+        "k2i-bench"
     )
+    for key, value in session_conf(f"{root}/spark-local").items():
+        builder = builder.config(key, value)
+    return builder.getOrCreate()
+
+
+def min_of_k(fn, k: int = K) -> dict:
+    """Run ``fn`` k times and report the minimum wall.
+
+    Steal only ever inflates a wall, so the minimum is the figure; every
+    attempt's ``(wall, steal)`` is kept so a noisy tier shows in the
+    record. ``out`` is the last run's return value."""
+    attempts: list[tuple[float, float]] = []
+    out = None
+    for _ in range(k):
+        c0 = cpu_times()
+        t0 = monotonic()
+        out = fn()
+        wall = monotonic() - t0
+        attempts.append((wall, steal_fraction(c0, cpu_times())))
+    return {
+        "wall": min(w for w, _ in attempts),
+        "attempts": attempts,
+        "out": out,
+    }
+
+
+def _attempts(r: dict) -> list[list[float]]:
+    return [[round(w, 3), round(s, 4)] for w, s in r["attempts"]]
 
 
 def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-#: interval steal fraction above which a wall is treated as hypervisor-
-#: contaminated and excluded from the min (see memory: same warm job swings
-#: 5× under steal on this microVM)
-STEAL_GATE = 0.01
-
-
-def _timed(fn) -> tuple[float, float]:
-    s0, c0 = _cpu_times()
-    t0 = time.monotonic()
-    fn()
-    wall = time.monotonic() - t0
-    s1, c1 = _cpu_times()
-    return wall, (s1 - s0) / max(c1 - c0, 1)
-
-
-def best_of(fn, k: int = 2, max_tries: int = 4) -> dict:
-    """Steal-gated min-of-K. The gate governs SAMPLING, not selection:
-    steal only ever inflates a wall, so the minimum over all attempts is
-    the honest floor — but we keep sampling until ``k`` walls ran with
-    interval steal below STEAL_GATE (or max_tries), so that floor was
-    actually witnessed on a quiet host rather than recorded mid-storm."""
-    clean = 0
-    attempts: list[tuple[float, float]] = []
-    while clean < k and len(attempts) < max_tries:
-        w, s = _timed(fn)
-        attempts.append((w, s))
-        if s < STEAL_GATE:
-            clean += 1
-    best = min(attempts)
-    return {
-        "wall": best[0],
-        "steal": round(best[1], 4),
-        "walls_all": [round(w, 3) for w, _ in attempts],
-        "dirty_runs": len(attempts) - clean,
-    }
-
-
-def time_queries(spark) -> tuple[dict[str, float], dict[str, dict]]:
-    """Per-query steal-gated min-of-K (round-2 lesson: n=2 un-gated repeats
-    recorded an 8% steal-shaped regression across 11/15 queries)."""
+def time_queries(spark) -> tuple[dict[str, float], dict[str, list]]:
     import __spark_entry__ as entry
 
     qs = entry.queries()
-    out: dict[str, float] = {}
-    detail: dict[str, dict] = {}
-    for name in HEADLINE + HEADLINE_EXTRA:
+    walls: dict[str, float] = {}
+    attempts: dict[str, list] = {}
+    for name in HEADLINE:
         fn = qs[name]
-        r = best_of(lambda: _force(fn(spark, SF_DIR)), k=2, max_tries=4)
-        out[name] = round(r["wall"], 3)
-        detail[name] = {
-            "steal": r["steal"],
-            "walls": r["walls_all"],
-            "dirty": r["dirty_runs"],
-        }
-    # drift re-time: a k=2 min can land entirely inside an in-box
-    # contention burst that /proc/stat steal never sees (r5 session:
-    # stream_sample recorded 5.79 s under bench, 1.97 s warm minutes
-    # later). Any wall >1.3x its prior-round recording gets a deeper
-    # second window; the floor over both windows is recorded, and the
-    # retry walls are appended so the artifact shows the burst.
-    prior = _prior_gated_walls()
-    for name in out:
-        prev = prior.get(name)
-        if not prev or out[name] / prev <= 1.3:
-            continue
-        fn = qs[name]
-        r2 = best_of(lambda: _force(fn(spark, SF_DIR)), k=3, max_tries=6)
-        detail[name]["walls"] = detail[name]["walls"] + r2["walls_all"]
-        detail[name]["dirty"] += r2["dirty_runs"]
-        detail[name]["retimed"] = True
-        if r2["wall"] < out[name]:
-            out[name] = round(r2["wall"], 3)
-            detail[name]["steal"] = r2["steal"]
-    return out, detail
-
-
-def _load_prior_artifact() -> dict:
-    """Parsed bench JSON of the latest recorded round artifact (driver
-    artifacts wrap the bench line under "parsed"); {} if none."""
-    name = _prior_bench_name()
-    if name is None:
-        return {}
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        prior = json.load(open(os.path.join(here, name)))
-    except (OSError, ValueError):
-        return {}
-    return prior.get("parsed", prior)
-
-
-def _prior_gated_walls() -> dict[str, float]:
-    """Per-query gated-tier walls from the latest recorded round
-    artifact (same source as the sweep regression baseline)."""
-    prior = _load_prior_artifact()
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        if float(prior.get("sf")) != float(sf):
-            return {}  # different scale factor: ratios are meaningless
-    except (TypeError, ValueError):
-        return {}
-    qs = prior.get("queries", {})
-    return {
-        n: w for n, w in qs.items() if isinstance(w, (int, float)) and w > 0
-    }
-
-
-def sweep_remaining(spark) -> dict:
-    """Coverage floor: ONE steal-annotated timed run for every registry
-    query not in HEADLINE/HEADLINE_EXTRA, at sf0.01 (r3 verdict: 110
-    registry queries had plan-audit rows but no wall-clock anywhere, and
-    the exclusion rule was unstated — 'no silent caps'). Single-run at
-    the smaller SF by design: this tier is a did-it-regress-10x canary
-    and a completeness proof, not a comparable benchmark — the
-    steal-gated tiers above carry the comparable numbers. Queries whose
-    run fails record the error instead of silently dropping out."""
-    import __spark_entry__ as entry
-
-    sweep_dir = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.01")
-    if not os.path.isdir(sweep_dir):
-        return {"skipped": f"no {sweep_dir}"}
-    qs = entry.queries()
-    done = set(HEADLINE + HEADLINE_EXTRA)
-    out: dict = {}
-    for name, fn in qs.items():
-        if name in done:
-            continue
-        s0, c0 = _cpu_times()
-        t0 = time.monotonic()
-        try:
-            _force(fn(spark, sweep_dir))
-            wall = round(time.monotonic() - t0, 3)
-            s1, c1 = _cpu_times()
-            out[name] = {
-                "sec": wall,
-                "steal": round((s1 - s0) / max(c1 - c0, 1), 4),
-            }
-        except Exception as exc:  # noqa: BLE001 — recorded, not silent
-            out[name] = {"err": f"{type(exc).__name__}: {exc}"[:200]}
-
-    # regression gate (r4 verdict task: the sweep was informational only,
-    # so a per-query regression outside the gated tiers could hide).
-    # Diff each wall against the prior round's recorded sweep; a >1.5×
-    # drift earns up to 2 retries (single-run walls carry weather), and
-    # only a drift that survives its retry floor is recorded.
-    prior = _prior_sweep_walls()
-    regressions: dict = {}
-    for name, rec in out.items():
-        if "sec" not in rec or name not in prior:
-            continue
-        prev = prior[name]
-        if prev <= 0 or rec["sec"] / prev <= 1.5:
-            continue
-        # retries carry the same steal instrumentation as the first run
-        # and every retry wall stays in the record, so the recorded sec
-        # is always paired with ITS steal and the burst stays visible
-        floor, floor_steal = rec["sec"], rec["steal"]
-        retry_walls = []
-        for _ in range(2):
-            try:
-                w, s = _timed(lambda: _force(qs[name](spark, sweep_dir)))
-            except Exception:  # noqa: BLE001
-                break
-            w = round(w, 3)
-            retry_walls.append(w)
-            if w < floor:
-                floor, floor_steal = w, round(s, 4)
-            if floor / prev <= 1.5:
-                break
-        rec["sec"], rec["steal"] = floor, floor_steal
-        rec["retry_walls"] = retry_walls
-        if floor / prev > 1.5:
-            regressions[name] = {
-                "prev_sec": prev,
-                "now_sec": floor,
-                "ratio": round(floor / prev, 2),
-            }
-    return {
-        "sf": 0.01,
-        "runs": 1,
-        "queries": out,
-        "regressions": regressions,
-        "regression_baseline": _prior_bench_name(),
-    }
-
-
-def _prior_bench_name() -> str | None:
-    import glob as _glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    benches = sorted(_glob.glob(os.path.join(here, "BENCH_r*.json")))
-    return os.path.basename(benches[-1]) if benches else None
-
-
-def _prior_sweep_walls() -> dict[str, float]:
-    """Per-query sweep walls from the latest recorded round artifact
-    (the sweep tier always runs at sf0.01, so no sf guard needed)."""
-    qs = _load_prior_artifact().get("sweep", {}).get("queries", {})
-    return {
-        n: rec["sec"]
-        for n, rec in qs.items()
-        if isinstance(rec, dict) and isinstance(rec.get("sec"), (int, float))
-    }
+        r = min_of_k(lambda: _force(fn(spark, SF_DIR)))
+        walls[name] = round(r["wall"], 3)
+        attempts[name] = _attempts(r)
+    return walls, attempts
 
 
 def gen_broker(root: str) -> int:
@@ -427,48 +157,31 @@ def gen_broker(root: str) -> int:
     )
 
 
-def ingest_run(spark, root: str, tag: str, strategy: str = "cow") -> float:
+def ingest_run(
+    spark, root: str, tag: str, strategy: str = "cow",
+    files_per_trigger: int = FILES_PER_TRIGGER,
+) -> None:
+    """Gen broker → envelope parse → exactly-once upsert into a fresh
+    table. With ``files_per_trigger`` below BROKER_FILES each micro-batch
+    commits against the table its predecessors built: CoW re-reads and
+    rewrites every affected partition per batch, MOR appends O(batch) and
+    defers reconciliation to readers."""
     from kafka2iceberg_spark.pipeline import run_ingest_once
     from kafka2iceberg_spark.schema import transcript_task
     from kafka2iceberg_spark.sink import IcebergLite
 
     spec = transcript_task()
-    table = IcebergLite(f"{root}/tbl-{strategy}-{tag}", pk=spec.primary_keys)
-    t0 = time.monotonic()
+    table = IcebergLite(f"{root}/tbl-{tag}", pk=spec.primary_keys)
     run_ingest_once(
-        spark, f"{root}/broker", spec, table, f"{root}/ckpt-{strategy}-{tag}",
-        max_files_per_trigger=FILES_PER_TRIGGER,
+        spark, f"{root}/broker", spec, table, f"{root}/ckpt-{tag}",
+        max_files_per_trigger=files_per_trigger,
         strategy=strategy,
     )
-    return time.monotonic() - t0
 
 
-def ingest_multibatch_run(
-    spark, root: str, tag: str, strategy: str
-) -> float:
-    """Steady-streaming shape: 8 micro-batches, each committing against
-    the table accumulated by its predecessors. This is where commit
-    strategy matters — CoW re-reads + rewrites every affected partition
-    per batch (cost grows with the table), MOR appends O(batch) and
-    defers reconciliation to readers/maintenance."""
-    from kafka2iceberg_spark.pipeline import run_ingest_once
-    from kafka2iceberg_spark.schema import transcript_task
-    from kafka2iceberg_spark.sink import IcebergLite
-
-    spec = transcript_task()
-    table = IcebergLite(f"{root}/mb-{strategy}-{tag}", pk=spec.primary_keys)
-    t0 = time.monotonic()
-    run_ingest_once(
-        spark, f"{root}/broker", spec, table,
-        f"{root}/mb-ckpt-{strategy}-{tag}",
-        max_files_per_trigger=max(BROKER_FILES // 8, 1),
-        strategy=strategy,
-    )
-    return time.monotonic() - t0
-
-
-def session_e2e_run(spark, root: str, tag: str) -> tuple[float, int]:
-    """Streaming session-window branch over the broker: wall + sessions."""
+def session_e2e_run(spark, root: str, tag: str):
+    """Streaming session-window branch over the broker; returns its
+    output table."""
     from kafka2iceberg_spark.pipeline import (
         file_broker_stream,
         parsed_stream,
@@ -480,7 +193,6 @@ def session_e2e_run(spark, root: str, tag: str) -> tuple[float, int]:
     spec = transcript_task()
     table = IcebergLite(f"{root}/sess-{tag}", pk=[], partition_field=None)
     raw = file_broker_stream(spark, f"{root}/broker", FILES_PER_TRIGGER)
-    t0 = time.monotonic()
     q = start_session_sink(
         parsed_stream(raw, spec),
         table,
@@ -490,17 +202,12 @@ def session_e2e_run(spark, root: str, tag: str) -> tuple[float, int]:
         trigger={"availableNow": True},
     )
     q.awaitTermination()
-    wall = time.monotonic() - t0
-    return wall, table.read(spark).count()
+    return table
 
 
-def pairs_e2e_run(
-    spark, root: str, tag: str, impl: str = "state"
-) -> tuple[float, int]:
-    """User↔reply join branch over the broker: wall + pairs.
-
-    impl='state' is applyInPandasWithState (Arrow/Python state);
-    impl='join' is the JVM watermarked stream-stream join fast path."""
+def pairs_e2e_run(spark, root: str, tag: str):
+    """User↔reply pairs branch (applyInPandasWithState) over the broker;
+    returns its output table."""
     from kafka2iceberg_spark.pipeline import (
         file_broker_stream,
         parsed_stream,
@@ -510,20 +217,16 @@ def pairs_e2e_run(
     from kafka2iceberg_spark.sink import IcebergLite
 
     spec = transcript_task()
-    table = IcebergLite(
-        f"{root}/pairs-{impl}-{tag}", pk=[], partition_field=None
-    )
+    table = IcebergLite(f"{root}/pairs-{tag}", pk=[], partition_field=None)
     raw = file_broker_stream(spark, f"{root}/broker", FILES_PER_TRIGGER)
-    t0 = time.monotonic()
     q = start_pairs_sink(
         parsed_stream(raw, spec),
         table,
-        f"{root}/pairs-ck-{impl}-{tag}",
+        f"{root}/pairs-ck-{tag}",
         trigger={"availableNow": True},
-        impl=impl,
     )
     q.awaitTermination()
-    return time.monotonic() - t0, table.read(spark).count()
+    return table
 
 
 def cep_job(spark, n_rows: int) -> None:
@@ -556,664 +259,47 @@ def cep_job(spark, n_rows: int) -> None:
     )
 
 
-def ingest_scale_job(spark, n_rows: int) -> None:
-    """Second scaling job (north_rule's INGEST path): synthesize Canal-JSON
-    envelopes in-Spark with to_json (zero input IO, no Python) and run the
-    full parse pipeline — from_json, routing filter, data[] flatten,
-    "null" scrub, typed casts, epoch fallbacks — forced by an aggregate.
-    Measures how the reference-parity deserialization surface scales N→4N,
-    independently of the CEP job's shuffle profile."""
-    from pyspark.sql import functions as F
-
-    from kafka2iceberg_spark import ingest
-    from kafka2iceberg_spark.schema import transcript_task
-
-    spec = transcript_task()
-    convs = max(n_rows // 50, 1)
-    ts_ms = F.lit(1_700_000_000_000) + F.col("id") * 100
-    env = F.to_json(
-        F.struct(
-            F.array(
-                F.struct(
-                    F.concat(F.lit("c"), (F.col("id") % convs).cast("string")).alias("conv_id"),
-                    (F.col("id") / convs).cast("int").cast("string").alias("turn_idx"),
-                    F.when(F.col("id") % 2 == 0, F.lit("user")).otherwise(F.lit("assistant")).alias("role"),
-                    F.md5(F.col("id").cast("string")).alias("text"),
-                    F.lit("null").alias("tool"),
-                    F.date_format(
-                        F.timestamp_millis(ts_ms), "yyyy-MM-dd HH:mm:ss"
-                    ).alias("ts"),
-                )
-            ).alias("data"),
-            F.lit("chat").alias("database"),
-            F.lit("transcripts").alias("table"),
-            F.lit("INSERT").alias("type"),
-            F.lit(False).alias("isDdl"),
-            ts_ms.alias("ts"),
-            (ts_ms - 500).alias("es"),
-            (F.col("id") % 16).alias("_partition"),
-            F.col("id").alias("_offset"),
-        )
-    )
-    raw = spark.range(n_rows).select(env.alias("value"))
-    parsed = ingest.parse(raw, spec)
-    _force(
-        parsed.groupBy("role").agg(
-            F.count(F.lit(1)).alias("n"), F.max("turn_idx").alias("m")
-        )
-    )
-
-
-_ING_CHILD = """
-import sys, time, json
-sys.path.insert(0, sys.argv[4])
-from pyspark.sql import SparkSession
-import bench
-cores, rows = int(sys.argv[1]), int(sys.argv[2])
-spark = (
-    SparkSession.builder.master(f"local[{cores}]")
-    .appName("k2i-ing-scale")
-    .config("spark.sql.shuffle.partitions", str(cores * 2))
-    .config("spark.driver.memory", "8g")
-    .config(
-        "spark.driver.extraJavaOptions",
-        "-XX:+UseParallelGC -XX:ParallelGCThreads=4 -XX:CICompilerCount=2"
-        f" -XX:ActiveProcessorCount={cores}",
-    )
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.local.dir", sys.argv[3])
-    .getOrCreate()
-)
-bench.ingest_scale_job(spark, rows)  # warm JIT/codegen
-bench.ingest_scale_job(spark, rows)
-s0, c0 = bench._cpu_times()
-t0 = time.monotonic()
-bench.ingest_scale_job(spark, rows)
-wall = time.monotonic() - t0
-s1, c1 = bench._cpu_times()
-print(json.dumps({"wall": wall,
-                  "steal": (s1 - s0) / max(c1 - c0, 1)}), flush=True)
-spark.stop()
-"""
-
-
-def _ing_child(cores: int, rows: int, tag: str, cpuset: str | None = None):
-    """Spawn one executor-shaped ingest child. ``cpuset`` (e.g. "8-15")
-    pins the JVM to a dedicated core slice via taskset — the cgroups
-    cpuset every YARN/K8s executor launcher applies. Without it,
-    co-located 8-thread JVMs float across all 32 cores: the scheduler
-    migrates threads between sockets/L2 domains mid-run and 4N walls
-    swing 6.3→14 s with ZERO /proc/stat steal (measured r4) — in-box
-    contention the steal gate cannot see. Pinning applies to BOTH
-    levels (the N child gets a slice too), so neither side borrows the
-    idle box's extra cache."""
-    import shutil as _shutil
-    import subprocess
-
-    d = f"/dev/shm/k2i-ing-{tag}"
-    cmd = [
-        sys.executable, "-c", _ING_CHILD,
-        str(cores), str(rows), d,
-        os.path.dirname(os.path.abspath(__file__)),
-    ]
-    if cpuset is not None and _shutil.which("taskset"):
-        cmd = ["taskset", "-c", cpuset] + cmd
-    return subprocess.Popen(
-        cmd, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
-    )
-
-
-def _ing_wall(proc) -> tuple[float, float]:
-    """(wall, steal) measured INSIDE the child around its timed run —
-    much tighter than sampling around the whole pass (which dilutes a
-    steal burst across JVM startup + two warm runs)."""
-    out, _ = proc.communicate()
-    for line in out.splitlines():
-        if line.startswith("{"):
-            d = json.loads(line)
-            return d["wall"], d.get("steal", 0.0)
-    raise RuntimeError("ingest scale child produced no wall")
-
-
-def ingest_scale_multijvm(lo: int, n_jvms: int, rows: int, passes: int = 3) -> dict:
-    """Multi-JVM ingest scaling — the north_rule's ACTUAL setting (one JVM
-    per executor): N = one local[lo] JVM over ``rows`` envelopes; 4N =
-    ``n_jvms`` concurrent local[lo] JVMs over rows/n_jvms each (same total
-    work, n_jvms× resources — strong scaling). A single 32-thread JVM is
-    allocation/GC-bound on the JSON-heavy parse path (measured ~0.34 raw —
-    recorded alongside as the single-JVM artifact), which a real cluster
-    never sees: executors are separate JVMs with private heaps. Walls are
-    measured INSIDE each child after two warm runs, so JVM startup is
-    excluded; the 4N wall of a pass is the slowest child (the straggler
-    defines cluster completion). min over passes.
-
-    Each child JVM is sized like a real executor: ActiveProcessorCount
-    pinned to its core slice and throughput (Parallel) GC with 4 GC
-    threads — by default every co-located JVM sizes G1's thread pools to
-    the FULL 32-core box, and 4 such JVMs oversubscribe the host exactly
-    the way YARN/K8s executor launchers avoid (measured: default-G1
-    stragglers 3.7-5.0 s vs 2.9 s pinned-ParallelGC at 500k rows/child,
-    turning a real ~0.85 efficiency into a recorded 0.51)."""
-    def _level(run_pass, min_repeats: int, max_repeats: int,
-               tol: float = 0.03) -> list[tuple[float, float]]:
-        """Converged steal-gated passes — the SAME criterion the flagship
-        scale_level uses (r3 lesson: the recorded artifact landed one
-        dirty 4N wall under a fixed 3-pass protocol and read 0.648 raw
-        while session artifacts read 0.799): repeat until the two
-        fastest steal-CLEAN walls agree within ``tol`` AND the overall
-        minimum is at least 2 passes old (a floor set on the last pass
-        was never reproduced). Steal is measured inside each child
-        around its timed run; a 4N pass carries the steal of its
-        straggler (the child that defines the wall)."""
-        runs: list[tuple[float, float]] = []
-        best_age = 0
-        converged = False
-        while len(runs) < max_repeats:
-            runs.append(run_pass(len(runs)))
-            wall = runs[-1][0]
-            best_age = (
-                0 if wall <= min(w for w, _ in runs) else best_age + 1
-            )
-            clean = sorted(w for w, s in runs if s < STEAL_GATE)
-            if (
-                len(runs) >= min_repeats
-                and len(clean) >= 2
-                and best_age >= 2
-                and (clean[1] - clean[0]) / clean[0] < tol
-            ):
-                converged = True
-                break
-        return runs, converged
-
-    def _slice(i: int) -> str:
-        return f"{i * lo}-{(i + 1) * lo - 1}"
-
-    def _pass_n(p: int) -> tuple[float, float]:
-        return _ing_wall(_ing_child(lo, rows, f"n-{p}", cpuset=_slice(0)))
-
-    def _pass_4n(p: int) -> tuple[float, float]:
-        procs = [
-            _ing_child(lo, rows // n_jvms, f"m{i}-{p}", cpuset=_slice(i))
-            for i in range(n_jvms)
-        ]
-        return max(_ing_wall(pr) for pr in procs)
-
-    runs_n, conv_n = _level(
-        _pass_n, min_repeats=passes, max_repeats=3 * passes
-    )
-    runs_4n, conv_4n = _level(
-        _pass_4n, min_repeats=passes, max_repeats=3 * passes
-    )
-
-    def _floor(runs: list[tuple[float, float]]) -> tuple[float, bool]:
-        """min over steal-CLEAN walls when any exist — a steal-inflated
-        wall must never define the headline efficiency just because
-        convergence ran out of repeats; fall back to the dirty min (and
-        flag it) only when every pass was dirty."""
-        clean = [w for w, s in runs if s < STEAL_GATE]
-        if clean:
-            return min(clean), False
-        return min(w for w, _ in runs), True
-
-    w_n, dirty_min_n = _floor(runs_n)
-    w_4n, dirty_min_4n = _floor(runs_4n)
-    eff = (w_n / w_4n) / n_jvms
-    return {
-        "job": f"Canal-JSON parse pipeline over {rows} envelopes,"
-               f" {n_jvms} executor-JVMs vs 1",
-        "cores_per_jvm": lo,
-        "jvms_n": 1,
-        "jvms_4n": n_jvms,
-        "wall_n_sec": round(w_n, 2),
-        "wall_4n_sec": round(w_4n, 2),
-        "walls_n_all": [round(w, 2) for w, _ in runs_n],
-        "walls_4n_all": [round(w, 2) for w, _ in runs_4n],
-        "dirty_n": len([r for r in runs_n if r[1] >= STEAL_GATE]),
-        "dirty_4n": len([r for r in runs_4n if r[1] >= STEAL_GATE]),
-        "converged_n": conv_n,
-        "converged_4n": conv_4n,
-        "dirty_min_n": dirty_min_n,
-        "dirty_min_4n": dirty_min_4n,
-        "rows_per_sec_n": round(rows / w_n, 0),
-        "rows_per_sec_4n": round(rows / w_4n, 0),
-        "efficiency_raw": round(eff, 3),
-    }
-
-
-def trigger_sizing(spark) -> dict:
-    """Backpressure/trigger-sizing evidence for the three maintained-table
-    ops (r3 verdict task 6): each pays a FIXED multi-table exactly-once
-    commit cost per micro-batch, so per-row cost must amortize as the
-    trigger batches grow. Same sf0.1 input folded as 12 / 3 / 1 batches;
-    reported rows/sec per shape is the SCALE.md §2 claim, measured. A
-    larger trigger always wins on throughput; the artifact quantifies
-    what a tighter latency SLO costs."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as entry
-    from kafka2iceberg_spark.matview import IncrementalJoinView
-    from kafka2iceberg_spark.scd import TemporalEnrich
-    from kafka2iceberg_spark.sink import IcebergLite
-    from kafka2iceberg_spark.timeseries import RollupLadder
-    from kafka2iceberg_spark.transactions import CatalogLite
-
-    HOUR_US = 3_600_000_000
-    DAY_US = 24 * HOUR_US
-    out: dict = {}
-
-    ev = entry._read(spark, SF_DIR, "events")
-    n_ev = ev.count()
-
-    def run_rollup(n_batches: int) -> float:
-        data = ev.select(
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-            F.round(F.col("value") * 1e6, 0).cast("long").alias("v"),
-            "event_id",
-        )
-        work = tempfile.mkdtemp(prefix="trig_rollup_")
-        cat = CatalogLite(f"{work}/cat")
-        for name in ("hour", "day"):
-            cat.register(name, IcebergLite(
-                f"{work}/{name}", pk=["bucket_us"], partition_field=None))
-        cat.register("rollup_meta", IcebergLite(
-            f"{work}/meta", pk=["tier"], partition_field=None))
-        rl = RollupLadder(cat, [("hour", HOUR_US), ("day", DAY_US)])
-        wm = 1_706_745_600_000_000
-        t0 = time.monotonic()
-        for b in range(n_batches):
-            rl.apply_batch(
-                data.where(F.col("event_id") % n_batches == b)
-                .drop("event_id"),
-                str(b), wm_us=wm,
-            )
-        return time.monotonic() - t0
-
-    orders = entry._read(spark, SF_DIR, "orders").select(
-        F.col("o_orderkey").alias("orderkey"), "o_orderpriority"
-    )
-    lines = entry._read(spark, SF_DIR, "lineitem").select(
-        F.col("l_orderkey").alias("orderkey"), "l_linenumber",
-        (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
-        .alias("revenue"),
-    )
-    n_jv = lines.count()
-
-    def run_join_view(n_batches: int) -> float:
-        work = tempfile.mkdtemp(prefix="trig_jv_")
-        cat = CatalogLite(work)
-        cat.register("orders", IcebergLite(f"{work}/orders", pk=["orderkey"]))
-        cat.register("lines", IcebergLite(
-            f"{work}/lines", pk=["orderkey", "l_linenumber"]))
-        cat.register("v", IcebergLite(
-            f"{work}/v", pk=["orderkey", "l_linenumber"]))
-        jv = IncrementalJoinView(
-            cat, "orders", "lines", "v", on=["orderkey"],
-            left_cols=["o_orderpriority"],
-            right_cols=["l_linenumber", "revenue"],
-            filter_left="o_orderpriority = '1-URGENT'",
-        )
-        t0 = time.monotonic()
-        for b in range(n_batches):
-            jv.apply_batch(
-                orders.where(F.col("orderkey") % n_batches == b),
-                lines.where(
-                    (F.col("orderkey") + F.col("l_linenumber"))
-                    % n_batches == b
-                ),
-                str(b),
-            )
-        return time.monotonic() - t0
-
-    ev_ts = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    from pyspark.sql import Window as W
-
-    one = W.partitionBy("user_id", "ts").orderBy(F.desc("event_id"))
-    dim = (
-        ev_ts.select(
-            "user_id", "ts", "event_id", "event_type",
-            (F.col("event_type") == "error").alias("is_del"),
-        )
-        .withColumn("_rn", F.row_number().over(one))
-        .where(F.col("_rn") == 1).drop("_rn")
-    )
-    facts = ev_ts.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("fact_id"), "user_id", "ts"
-    )
-    n_te = facts.count() + dim.count()
-
-    def run_temporal(n_batches: int) -> float:
-        work = tempfile.mkdtemp(prefix="trig_te_")
-        cat = CatalogLite(f"{work}/cat")
-        cat.register("facts", IcebergLite(
-            f"{work}/facts", pk=[], partition_field=None))
-        cat.register("out", IcebergLite(
-            f"{work}/out", pk=[], partition_field=None))
-        cat.register("meta", IcebergLite(
-            f"{work}/meta", pk=["k"], partition_field=None))
-        hist = IcebergLite(
-            f"{work}/hist", pk=["user_id", "valid_from_us"],
-            partition_field=None)
-        te = TemporalEnrich(
-            cat, hist, key=["user_id"], tracked=["event_type"],
-            dim_order=["ts", "event_id"], dim_delete="is_del",
-        )
-        # dim arrives in watermark order (time slices, like the gated
-        # query); facts arrive out of order (id mod) and are held back /
-        # released by the advancing watermark — the op's real shape.
-        lo_us, hi_us = 1_704_067_200_000_000, 1_707_955_200_000_000
-        step = (hi_us - lo_us) // n_batches
-        cuts = [lo_us + step * (i + 1) for i in range(n_batches - 1)]
-        cuts.append(hi_us)  # final cut past everything: all facts release
-        us = F.unix_micros(F.col("ts"))
-        t0 = time.monotonic()
-        lo = None
-        for b, hi in enumerate(cuts):
-            dim_b = dim.where(
-                (us <= F.lit(hi)) & ((us > F.lit(lo)) if lo else F.lit(True))
-            )
-            te.apply_batch(
-                dim_b,
-                facts.where(F.col("fact_id") % n_batches == b),
-                str(b), wm_us=hi,
-            )
-            lo = hi
-        return time.monotonic() - t0
-
-    for label, fn, rows in (
-        ("rollup_ladder", run_rollup, n_ev),
-        ("join_view", run_join_view, n_jv),
-        ("temporal_enrich", run_temporal, n_te),
-    ):
-        shapes = {}
-        for n_batches in (12, 3, 1):
-            wall = fn(n_batches)
-            shapes[f"{n_batches}_batches"] = {
-                "wall_sec": round(wall, 2),
-                "sec_per_batch": round(wall / n_batches, 2),
-                "rows_per_sec": round(rows / wall, 0),
-            }
-        shapes["amortization_12_to_1"] = round(
-            shapes["12_batches"]["wall_sec"] / shapes["1_batches"]["wall_sec"],
-            2,
-        )
-        out[label] = {"input_rows": rows, **shapes}
-    return out
-
-
-def cpu_ref_job(spark, n_rows: int) -> None:
-    """Pure-CPU Spark reference: chained md5 over a range — whole-stage
-    codegen, ZERO shuffle, no Python. Its N→4N efficiency is the best any
-    Spark job can do on this box; the gap between it and the mp.Pool burn
-    ceiling is JVM scheduling, and the gap between it and the CEP job is
-    the engine's true shuffle/sort scaling cost."""
-    from pyspark.sql import functions as F
-
-    c = F.col("id").cast("string")
-    for _ in range(6):
-        c = F.md5(c)
-    _force(spark.range(n_rows).select(c.alias("h")))
-
-
-def _cpu_times() -> tuple[int, int]:
-    """(steal, total) jiffies from /proc/stat — hypervisor noise detector."""
-    with open("/proc/stat") as fh:
-        parts = fh.readline().split()
-    vals = [int(x) for x in parts[1:]]
-    steal = vals[7] if len(vals) > 7 else 0
-    return steal, sum(vals)
-
-
-def scale_level(
-    cores: int,
-    n_rows: int,
-    min_repeats: int = 4,
-    max_repeats: int = 10,
-    tol: float = 0.03,
-    job=None,
-) -> dict:
-    """Converged best-of-N warm wall for the CEP job at one parallelism level.
-
-    This sandbox is a microVM with intermittent hypervisor CPU steal (same
-    job swings up to 5× within one JVM), so the minimum over repeats — the
-    least-stolen run — is the only stable statistic; per-run steal fraction
-    is measured from /proc/stat and reported for the chosen run.
-
-    Round-1 lesson: a fixed repeat count recorded a still-descending minimum
-    at the low-parallelism level (walls 25.0 → 15.3 → 11.21, not yet warm)
-    against a converged high-parallelism level — biasing efficiency low.
-    Round-2 lesson: convergence must be judged on steal-CLEAN walls only —
-    r2's 4N minima were still descending at n=6 because stolen runs
-    satisfied the two-fastest tolerance while the true floor hadn't been
-    hit. Now each level repeats (≥ min_repeats, ≤ max_repeats) until the
-    two fastest walls whose interval steal is below STEAL_GATE agree within
-    ``tol``; stolen runs are recorded but never converge or win.
-    """
-    job = job or cep_job
-    spark = session(cores)
+def scale_level(cores: int, root: str) -> dict:
+    """The CEP job timed on its own local[cores] session."""
+    spark = session(cores, root)
     try:
-        for _ in range(3):  # warm JIT/codegen + shuffle paths fully
-            job(spark, n_rows)
-        runs: list[tuple[float, float]] = []
-        best_age = 0
-        while len(runs) < max_repeats:
-            s0, t0c = _cpu_times()
-            t0 = time.monotonic()
-            job(spark, n_rows)
-            wall = time.monotonic() - t0
-            s1, t1c = _cpu_times()
-            steal = (s1 - s0) / max(t1c - t0c, 1)
-            runs.append((wall, steal))
-            # a new overall minimum resets the age clock: a floor set on
-            # the last run was never reproduced (round-3 lesson — the
-            # local[8] min landed on run 10 of 10 and raw efficiency
-            # recorded a still-descending level)
-            best_age = 0 if wall <= min(w for w, _ in runs) else best_age + 1
-            clean = sorted(w for w, s in runs if s < STEAL_GATE)
-            if len(runs) >= min_repeats and len(clean) >= 2 and best_age >= 2:
-                if (clean[1] - clean[0]) / clean[0] < tol:
-                    break
-        # min over ALL runs: steal only inflates walls, so a dirty-but-
-        # faster run is a valid lower-bound witness; the clean-walls
-        # convergence criterion above ensures the floor was reproduced
-        # on a quiet host before we stopped sampling
-        best = min(runs)
-        return {
-            "wall": best[0],
-            "steal_frac": round(best[1], 4),
-            "all_walls": [round(w, 2) for w, _ in runs],
-            "dirty_runs": len([r for r in runs if r[1] >= STEAL_GATE]),
-        }
+        return min_of_k(lambda: cep_job(spark, SCALE_ROWS))
     finally:
         spark.stop()
-        time.sleep(4)  # let the JVM drain before the next measurement phase
 
 
-def ann_crossover(spark) -> dict:
-    """Where approximate beats exact: brute vs LSH on the same input.
-
-    The registry ANN queries run 8 queries against a 2,000-vector corpus —
-    a regime where brute's single codegen'd pass mathematically wins
-    (bucketing costs n_tables·n_planes=32 plane-dots per corpus row vs
-    brute's ≈|queries|=8 dots with per-row norms precomputed). This
-    section measures the regime ANN
-    exists for: a deterministic synthetic corpus (xxhash64-derived
-    vectors — no RNG, no external data) with a broadcast-sized but
-    non-trivial query set, where bucket pruning (n_planes=8 →
-    ≈8·2⁻⁸≈3% candidate fraction) collapses the rerank.
-    """
-    from pyspark.sql import functions as F
-
-    from kafka2iceberg_spark import similarity as sim
-
-    n_queries, dim = 384, 64
-
-    def level(n_corpus: int, repeats: int) -> dict:
-        corpus = spark.range(n_corpus).select(
-            F.col("id").alias("vec_id"),
-            F.expr(
-                f"transform(sequence(0, {dim - 1}), d -> "
-                f"(cast(pmod(xxhash64(id * {dim} + d), 2000001) as double)"
-                f" - 1000000.0) / 1000000.0)"
-            ).alias("embedding"),
-        )
-        queries = corpus.where(F.col("vec_id") < n_queries)
-
-        def run_brute():
-            _force(sim.brute_topk(corpus, queries, k=5))
-
-        def run_lsh():
-            _force(
-                sim.lsh_topk(
-                    corpus, queries, k=5, dim=dim, n_tables=8, n_planes=8
-                )
-            )
-
-        for _ in range(2):  # warm codegen + broadcast paths
-            run_brute()
-            run_lsh()
-        rb = best_of(run_brute, k=repeats, max_tries=repeats * 2)
-        rl = best_of(run_lsh, k=repeats, max_tries=repeats * 2)
-        return {
-            "corpus_vectors": n_corpus,
-            "wall_brute_sec": round(rb["wall"], 3),
-            "wall_lsh_sec": round(rl["wall"], 3),
-            "walls_brute_all": rb["walls_all"],
-            "walls_lsh_all": rl["walls_all"],
-            "steal_brute": rb["steal"],
-            "steal_lsh": rl["steal"],
-            "lsh_speedup": round(rb["wall"] / rl["wall"], 2),
-        }
-
-    # Crossover CURVE: brute's O(|q|·|corpus|) wins small, bucketing wins
-    # big — record the whole progression, not one point.
-    main = level(40_000, repeats=2)
-    curve = [level(5_000, 1), main, level(160_000, 1)]
-    main = dict(main)
-    main.update(
-        {
-            "n_queries": n_queries,
-            "dim": dim,
-            "lsh_tables_planes": [8, 8],
-            "curve": [
-                {
-                    "corpus_vectors": lv["corpus_vectors"],
-                    "wall_brute_sec": lv["wall_brute_sec"],
-                    "wall_lsh_sec": lv["wall_lsh_sec"],
-                    "lsh_speedup": lv["lsh_speedup"],
-                }
-                for lv in curve
-            ],
-        }
-    )
-    return main
-
-
-def _burn(_):
-    t0 = time.monotonic()
-    x = 0
-    while time.monotonic() - t0 < 2.0:
-        x += 1
-    return x
-
-
-def cpu_ceiling(lo: int, hi: int) -> float:
-    """Measured per-process throughput retention from lo → hi parallel
-    processes: the single-box upper bound on any job's scaling efficiency."""
-    rates = {}
-    for n in (lo, hi):
-        with mp.Pool(n) as p:
-            rates[n] = sum(p.map(_burn, range(n))) / n
-    return rates[hi] / rates[lo]
+def _e2e(r: dict, n_env: int, **extra) -> dict:
+    return {
+        **extra,
+        "wall_sec": round(r["wall"], 2),
+        "turns_per_sec": round(n_env / r["wall"], 1),
+        "attempts": _attempts(r),
+    }
 
 
 def main() -> None:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     root = tempfile.mkdtemp(prefix="k2i_bench_")
     try:
-        # measure the pure-CPU scaling ceiling FIRST, on a quiet process —
-        # after Spark runs, lingering JVM shutdown pollutes the burn test
-        lo = max(CPUS // 4, 1)
-        ceiling = cpu_ceiling(lo, CPUS) if RUN_SCALING and CPUS >= 4 else None
-
         n_env = gen_broker(root)
+        spark = session(CPUS, root)
+        queries, query_attempts = time_queries(spark)
 
-        spark = session(CPUS)
-        queries, query_detail = time_queries(spark)
-        sweep = sweep_remaining(spark)
-        trigger = trigger_sizing(spark)
-        crossover = ann_crossover(spark)
+        # every run needs a fresh table and checkpoint: a reused
+        # checkpoint would replay as a no-op
+        tags = itertools.count()
 
-        def _gated_e2e(run, label, extra=(), repeats=3, tol=0.03):
-            """Converged steal-gated min over fresh-checkpoint runs (each
-            needs its own tag — a repeated tag would replay as a no-op).
-            Same convergence criterion as the two scaling jobs (the r4
-            lesson: the engine didn't change but the shipped warm-ingest
-            artifact read 51.6k vs the 68.4k measured in-session — a
-            fixed-repeat min records whatever weather those 3 runs saw):
-            repeat until the two fastest steal-CLEAN walls agree within
-            ``tol`` AND the floor is ≥2 runs old, up to 3×repeats; the
-            winner is the fastest steal-clean wall when any exists."""
-            walls: list[float] = []
-            samples: list[tuple[float, float, object]] = []
-            best_age = 0
-            converged = False
-            while len(samples) < 3 * repeats:
-                s0, c0 = _cpu_times()
-                out = run(spark, root, f"timed-{label}-{len(samples)}", *extra)
-                s1, c1 = _cpu_times()
-                steal = (s1 - s0) / max(c1 - c0, 1)
-                wall = out[0] if isinstance(out, tuple) else out
-                walls.append(round(wall, 2))
-                samples.append((wall, steal, out))
-                best_age = (
-                    0
-                    if wall <= min(w for w, _, _ in samples)
-                    else best_age + 1
-                )
-                clean = sorted(w for w, s, _ in samples if s < STEAL_GATE)
-                if (
-                    len(samples) >= repeats
-                    and len(clean) >= 2
-                    and best_age >= 2
-                    and (clean[1] - clean[0]) / clean[0] < tol
-                ):
-                    converged = True
-                    break
-            pool = [t for t in samples if t[1] < STEAL_GATE] or samples
-            w_best, s_best, out_best = min(pool, key=lambda t: t[0])
-            return out_best, round(s_best, 4), walls, converged
+        def fresh(run, *args):
+            return lambda: run(spark, root, f"t{next(tags)}", *args)
 
-        ingest_run(spark, root, "warm")  # steady-state warmup
-        wall_ing, steal_ing, walls_ing, conv_ing = _gated_e2e(
-            ingest_run, "ing"
-        )
-        ingest_multibatch_run(spark, root, "warm", "cow")
-        wall_mbc, steal_mbc, walls_mbc, conv_mbc = _gated_e2e(
-            ingest_multibatch_run, "mb-cow", extra=("cow",)
-        )
-        wall_mbm, steal_mbm, walls_mbm, conv_mbm = _gated_e2e(
-            ingest_multibatch_run, "mb-mor", extra=("mor",)
-        )
-        session_e2e_run(spark, root, "warm")
-        res_sess, steal_sess, walls_sess, conv_sess = _gated_e2e(
-            session_e2e_run, "sess"
-        )
-        wall_sess, n_sessions = res_sess
-        pairs_e2e_run(spark, root, "warm", impl="state")
-        res_pairs, steal_pairs, walls_pairs, conv_pairs = _gated_e2e(
-            pairs_e2e_run, "pairs", extra=("state",), repeats=4
-        )
-        wall_pairs, n_pairs = res_pairs
-        pairs_e2e_run(spark, root, "warm", impl="join")
-        # documented-slower alternative impl: now also convergence-gated
-        # (r4 recorded a 22.6→31.2 s weather drift off a single run)
-        res_pj, steal_pj, walls_pj, conv_pj = _gated_e2e(
-            pairs_e2e_run, "pj", extra=("join",), repeats=2
-        )
-        wall_pj, n_pj = res_pj
+        ing = min_of_k(fresh(ingest_run))
+        per_batch = max(BROKER_FILES // 8, 1)
+        mb_cow = min_of_k(fresh(ingest_run, "cow", per_batch))
+        mb_mor = min_of_k(fresh(ingest_run, "mor", per_batch))
+        sess = min_of_k(fresh(session_e2e_run))
+        pairs = min_of_k(fresh(pairs_e2e_run))
+        n_sessions = sess["out"].read(spark).count()
+        n_pairs = pairs["out"].read(spark).count()
         spark.stop()
 
         result: dict = {
@@ -1221,179 +307,54 @@ def main() -> None:
                 "headline query wall-clock + warm streaming-ingest turns/sec"
                 " + session-window CEP N→4N scaling efficiency"
             ),
-            "value": round(sum(queries[n] for n in HEADLINE), 3),
+            "value": round(sum(queries.values()), 3),
             "unit": "sec",
-            "value_extra_queries": round(
-                sum(queries[n] for n in HEADLINE_EXTRA), 3
-            ),
-            "queries": queries,
-            "query_detail": query_detail,
-            "sweep": sweep,
-            "trigger_sizing": trigger,
-            "ann_crossover": crossover,
-            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-            "ingest": {
-                "envelopes": n_env,
-                "wall_sec": round(wall_ing, 2),
-                "turns_per_sec": round(n_env / wall_ing, 1),
+            "box": {
                 "cores": CPUS,
-                "steal": steal_ing,
-                "walls_all": walls_ing,
-                "converged": conv_ing,
+                "mem_total_mb": round(mem_total_mb()),
+                "driver_memory": driver_memory(),
             },
+            "k": K,
+            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+            "queries": queries,
+            "query_attempts": query_attempts,
+            "ingest": _e2e(ing, n_env, envelopes=n_env),
             "ingest_multibatch": {
                 "shape": "8 micro-batches against the accumulating table",
-                "cow": {
-                    "wall_sec": round(wall_mbc, 2),
-                    "turns_per_sec": round(n_env / wall_mbc, 1),
-                    "steal": steal_mbc,
-                    "walls_all": walls_mbc,
-                    "converged": conv_mbc,
-                },
-                "mor": {
-                    "wall_sec": round(wall_mbm, 2),
-                    "turns_per_sec": round(n_env / wall_mbm, 1),
-                    "steal": steal_mbm,
-                    "walls_all": walls_mbm,
-                    "converged": conv_mbm,
-                },
-                "mor_speedup_vs_cow": round(wall_mbc / wall_mbm, 2),
+                "cow": _e2e(mb_cow, n_env),
+                "mor": _e2e(mb_mor, n_env),
+                "mor_speedup_vs_cow": round(
+                    mb_cow["wall"] / mb_mor["wall"], 2
+                ),
             },
-            "session_e2e": {
-                "wall_sec": round(wall_sess, 2),
-                "sessions_emitted": n_sessions,
-                "turns_per_sec": round(n_env / wall_sess, 1),
-                "steal": steal_sess,
-                "walls_all": walls_sess,
-                "converged": conv_sess,
-            },
-            "pairs_e2e": {
-                "impl": "applyInPandasWithState",
-                "wall_sec": round(wall_pairs, 2),
-                "pairs_emitted": n_pairs,
-                "turns_per_sec": round(n_env / wall_pairs, 1),
-                "steal": steal_pairs,
-                "walls_all": walls_pairs,
-                "converged": conv_pairs,
-            },
-            "pairs_e2e_join": {
-                "impl": "dedup + JVM stream-stream join",
-                "wall_sec": round(wall_pj, 2),
-                "pairs_emitted": n_pj,
-                "turns_per_sec": round(n_env / wall_pj, 1),
-                "steal": steal_pj,
-                "walls_all": walls_pj,
-                "converged": conv_pj,
-            },
+            "session_e2e": _e2e(sess, n_env, sessions_emitted=n_sessions),
+            "pairs_e2e": _e2e(
+                pairs, n_env, impl="applyInPandasWithState",
+                pairs_emitted=n_pairs,
+            ),
         }
 
         if RUN_SCALING and CPUS >= 4:
-            time.sleep(4)
-            # the low-parallelism level shows slow JIT/GC settling plus
-            # bandwidth-contention drift this steal can't see — give it a
-            # deeper repeat budget so its floor genuinely converges
-            r_lo = scale_level(lo, SCALE_ROWS, min_repeats=5, max_repeats=16)
-            r_hi = scale_level(CPUS, SCALE_ROWS)
-
-            def _merge_levels(a, b):
-                best = a if a["wall"] <= b["wall"] else b
-                return {
-                    "wall": best["wall"],
-                    "steal_frac": best["steal_frac"],
-                    "all_walls": a["all_walls"] + b["all_walls"],
-                    "dirty_runs": a["dirty_runs"] + b["dirty_runs"],
-                }
-
-            scaling_passes = 1
-            while scaling_passes < 3:
-                _eff = (r_lo["wall"] / r_hi["wall"]) / (CPUS / lo)
-                if 0.8 <= _eff <= 1.0:
-                    break
-                # the two levels were measured minutes apart; a ratio
-                # outside the box's plausible band in EITHER direction
-                # means asymmetric host weather (bandwidth contention
-                # /proc/stat steal can't see) — below 0.8 the hi level
-                # was likely slowed (this job's established band on this
-                # box is 0.84-0.88 across r3-r5 quiet sessions, so a
-                # sub-bar reading is weather-suspect, not engine-
-                # suspect; r5 session 2 recorded 0.765 off one 4N burst
-                # the old 0.75 floor let through), above 1.0
-                # (superlinear on one box) the lo level was. Re-measure
-                # BOTH levels back-to-back (up to two extra passes, with
-                # a cool-down so a transient noise window can pass) and
-                # take each level's floor over all passes — every wall
-                # from every pass stays in the artifact.
-                time.sleep(20 * scaling_passes)
-                scaling_passes += 1
-                r_lo = _merge_levels(r_lo, scale_level(lo, SCALE_ROWS))
-                r_hi = _merge_levels(r_hi, scale_level(CPUS, SCALE_ROWS))
-            # pure-CPU zero-shuffle Spark reference at the same two levels:
-            # the in-engine upper bound this box allows any Spark job
-            ref_rows = SCALE_ROWS // 2
-            # the zero-shuffle job converges fast — 3 repeats suffice
-            ref_lo = scale_level(
-                lo, ref_rows, min_repeats=3, job=cpu_ref_job
-            )
-            ref_hi = scale_level(
-                CPUS, ref_rows, min_repeats=3, job=cpu_ref_job
-            )
-            ref_eff = (ref_lo["wall"] / ref_hi["wall"]) / (CPUS / lo)
-            w_lo, w_hi = r_lo["wall"], r_hi["wall"]
-            eff = (w_lo / w_hi) / (CPUS / lo)
+            lo = CPUS // 4
+            r_lo = scale_level(lo, root)
+            r_hi = scale_level(CPUS, root)
             result["scaling"] = {
                 "job": f"session-window CEP over {SCALE_ROWS} synthetic turns",
                 "cores_n": lo,
                 "cores_4n": CPUS,
-                "wall_n_sec": round(w_lo, 2),
-                "wall_4n_sec": round(w_hi, 2),
-                "walls_n_all": r_lo["all_walls"],
-                "walls_4n_all": r_hi["all_walls"],
-                "steal_frac_n": r_lo["steal_frac"],
-                "steal_frac_4n": r_hi["steal_frac"],
-                "dirty_runs_n": r_lo["dirty_runs"],
-                "dirty_runs_4n": r_hi["dirty_runs"],
-                "passes": scaling_passes,
-                "rows_per_sec_n": round(SCALE_ROWS / w_lo, 0),
-                "rows_per_sec_4n": round(SCALE_ROWS / w_hi, 0),
-                "efficiency_raw": round(eff, 3),
-                "hw_ceiling": round(ceiling, 3),
-                "efficiency_vs_ceiling": round(min(eff / ceiling, 1.0), 3),
-                "spark_cpu_ref": {
-                    "job": f"6-chained md5 over {ref_rows} rows, zero shuffle",
-                    "wall_n_sec": round(ref_lo["wall"], 2),
-                    "wall_4n_sec": round(ref_hi["wall"], 2),
-                    "walls_n_all": ref_lo["all_walls"],
-                    "walls_4n_all": ref_hi["all_walls"],
-                    "efficiency_raw": round(ref_eff, 3),
-                },
-                "efficiency_vs_spark_cpu_ref": round(
-                    min(eff / ref_eff, 1.0), 3
+                "wall_n_sec": round(r_lo["wall"], 2),
+                "wall_4n_sec": round(r_hi["wall"], 2),
+                "attempts_n": _attempts(r_lo),
+                "attempts_4n": _attempts(r_hi),
+                "rows_per_sec_n": round(SCALE_ROWS / r_lo["wall"], 0),
+                "rows_per_sec_4n": round(SCALE_ROWS / r_hi["wall"], 0),
+                "efficiency_raw": round(
+                    (r_lo["wall"] / r_hi["wall"]) / (CPUS / lo), 3
                 ),
             }
-            # second independent scaling job: the reference-parity INGEST
-            # parse pipeline (from_json -> flatten -> casts), zero input
-            # IO, measured across SEPARATE JVMs — the executor analogue.
-            # (A single 32-thread JVM is allocation/GC-bound on this
-            # JSON-heavy path: 0.34 raw measured — a shared-young-gen
-            # artifact no executor-per-JVM cluster has, so the multi-JVM
-            # form is the honest reading of the rule's N->4N executors.)
-            # 8M envelopes (2M/child): large enough that the ~0.4 s
-            # per-action fixed cost is <2 % of the per-child wall AND the
-            # max-over-children straggler statistic amortizes scheduler /
-            # JIT noise (r4 measured on the same day: 0.75 raw at
-            # 1M rows/child vs 0.77 at 2M, identical engine code).
-            ing_rows = SCALE_ROWS // 6
-            ing = ingest_scale_multijvm(lo, CPUS // lo, ing_rows)
-            ing["hw_ceiling"] = round(ceiling, 3)
-            ing["efficiency_vs_ceiling"] = round(
-                min(ing["efficiency_raw"] / ceiling, 1.0), 3
-            )
-            result["scaling_ingest"] = ing
         print(json.dumps(result))
     finally:
         shutil.rmtree(root, ignore_errors=True)
-        for d in (f"/dev/shm/k2i-bench-{CPUS}", f"/dev/shm/k2i-bench-{max(CPUS // 4, 1)}"):
-            shutil.rmtree(d, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -691,29 +691,17 @@ def start_pairs_sink(
     exactly once. Read-back parity with the batch twin is tested.
 
     ``impl``: 'state' (applyInPandasWithState — eager emission, dedups
-    duplicate turns) or 'join' (JVM watermarked stream-stream join — same
-    final rows on deduped input but slower: 20.8 s against 5.5 s for
-    'state' in BENCH_r05.json; see state.paired_turns_stream_join).
+    duplicate turns), the only implementation; anything else raises
+    ``ValueError``.
     """
-    from .state import paired_turns_stream, paired_turns_stream_join
-    from .windows import with_watermark
+    from .state import paired_turns_stream
 
+    if impl != "state":
+        raise ValueError(f"impl must be 'state', got {impl!r}")
     turns = parsed.select("conv_id", "turn_idx", "role", "text", "ts")
-    if impl == "join":
-        # the join does not collapse duplicate turns itself (the stateful
-        # impl does) — dedup within the watermark first so broker replays
-        # cannot emit duplicate pairs; state for this is bounded by the
-        # same delay that bounds the join's own buffers
-        turns = with_watermark(
-            turns, "ts", watermark_delay
-        ).dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
-        pairs = paired_turns_stream_join(
-            turns, gap=gap, watermark_delay=None  # already watermarked
-        )
-    else:
-        pairs = paired_turns_stream(
-            turns, gap=gap, watermark_delay=watermark_delay
-        )
+    pairs = paired_turns_stream(
+        turns, gap=gap, watermark_delay=watermark_delay
+    )
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         table.commit_append(batch_df, str(batch_id))

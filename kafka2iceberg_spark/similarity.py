@@ -371,7 +371,8 @@ def lsh_topk(
     plane-dots while brute (norms precomputed per row) costs ≈|queries|
     dots — LSH can only win once |queries| ≳ n_tables·n_planes AND the
     bucket fraction (≈ n_tables·2^-n_planes) prunes most of the rerank.
-    bench.py records this crossover explicitly (ann_crossover).
+    BENCH_r05.json records this crossover (``ann_crossover``: LSH 0.78×
+    brute at 5k corpus vectors, 3.07× at 40k, 6.92× at 160k).
     """
     if bucket_impl not in ("arrow", "expr"):
         raise ValueError(

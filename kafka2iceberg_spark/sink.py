@@ -40,7 +40,7 @@ import json
 import os
 import shutil
 import uuid
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +48,24 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from . import partition_spec as PS
+
+#: Session confs the sink scopes to its own writes (``_scoped_conf``).
+#: INT64-micros parquet timestamps: INT96 carries no min/max statistics,
+#: which would blind plan_scan on every time predicate.
+_MICROS_TS = ("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+
+#: Dense reservoir sampling for a clustered rewrite's range exchange. Range
+#: boundary precision IS file-skipping precision: a boundary that lands
+#: off-quantile makes one output file straddle a wide z-/sort-range and
+#: every scan over that range opens it forever. Spark's default 100
+#: samples/partition suits ad-hoc queries; a compaction group is bounded
+#: (target_file_size × files), so 100k samples/partition make boundaries
+#: effectively exact for a one-time rewrite whose output is read thousands
+#: of times, and independent of how the input happened to be split.
+_DENSE_SAMPLING = (
+    "spark.sql.execution.rangeExchange.sampleSizePerPartition", "100000"
+)
+
 
 class CommitConflict(RuntimeError):
     """Another writer committed the same snapshot version first (optimistic
@@ -635,47 +653,15 @@ class IcebergLite:
 
     @staticmethod
     @contextmanager
-    def _dense_range_sampling(spark: SparkSession, enabled: bool = True):
-        """Scoped dense reservoir sampling for the clustered-rewrite range
-        exchange. Range boundary precision IS file-skipping precision: a
-        boundary that lands off-quantile makes one output file straddle a
-        wide z-/sort-range and every scan over that range opens it
-        forever. Spark's default 100 samples/partition is tuned for ad-hoc
-        queries; a compaction group is bounded (target_file_size × files),
-        so collecting 100k samples/partition makes boundaries effectively
-        exact for a one-time rewrite whose output is read thousands of
-        times — and layout-deterministic, not dependent on how the input
-        happened to be split. Restores the previous value on exit."""
-        key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
-        if not enabled:
-            yield
-            return
+    def _scoped_conf(spark: SparkSession, key: str, value: str):
+        """Set a Spark session conf for the block, then restore its previous
+        value (or unset it if it had none), so the embedding application's
+        own settings survive the sink's writes."""
         try:
             prev = spark.conf.get(key)
         except Exception:
             prev = None
-        spark.conf.set(key, "100000")
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-    @staticmethod
-    @contextmanager
-    def _micros_timestamps(spark: SparkSession):
-        """Scoped INT64-micros parquet timestamps (INT96 carries no
-        min/max statistics, which would blind plan_scan on every time
-        predicate). Restores the previous session value on exit — the
-        embedding application's own writes keep their configured type."""
-        key = "spark.sql.parquet.outputTimestampType"
-        try:
-            prev = spark.conf.get(key)
-        except Exception:
-            prev = None
-        spark.conf.set(key, "TIMESTAMP_MICROS")
+        spark.conf.set(key, value)
         try:
             yield
         finally:
@@ -964,7 +950,7 @@ class IcebergLite:
         # one task (→ one file) per date partition instead of
         # tasks × partitions tiny files — at scale this is the difference
         # between |days| manifest entries and |days|·|shuffle.partitions|.
-        with self._micros_timestamps(df.sparkSession):
+        with self._scoped_conf(df.sparkSession, *_MICROS_TS):
             (
                 df.withColumn("_p", self._partition_expr(df))
                 .repartition(F.col("_p"))
@@ -1873,7 +1859,7 @@ class IcebergLite:
         dstage = os.path.join(
             self.data_dir, f"s{seq:08d}-deletes-{uuid.uuid4().hex[:8]}"
         )
-        with self._micros_timestamps(spark):
+        with self._scoped_conf(spark, *_MICROS_TS):
             dkeys.coalesce(1).write.parquet(dstage, mode="overwrite")
         return self._stage_entries(dstage)
 
@@ -1973,7 +1959,7 @@ class IcebergLite:
                 f"s{seq:08d}-materialize-{uuid.uuid4().hex[:8]}",
                 f"_p={pv}",
             )
-            with self._micros_timestamps(spark):
+            with self._scoped_conf(spark, *_MICROS_TS):
                 df.coalesce(1).write.parquet(stage, mode="overwrite")
             manifests[pv] = self._write_manifest(self._stage_entries(stage))
         # a reorg, not a data batch — the replay guard is unaffected
@@ -2180,9 +2166,12 @@ class IcebergLite:
                 f"s{v_new:08d}-compact-{uuid.uuid4().hex[:8]}",
                 f"_p={pv}",
             )
-            with self._micros_timestamps(spark), self._dense_range_sampling(
-                spark, enabled=bool(sort_by or zorder_by)
-            ):
+            dense_sampling = (
+                self._scoped_conf(spark, *_DENSE_SAMPLING)
+                if sort_by or zorder_by
+                else nullcontext()
+            )
+            with self._scoped_conf(spark, *_MICROS_TS), dense_sampling:
                 if zorder_by:
                     from . import zorder as zo
 

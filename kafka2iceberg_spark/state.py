@@ -6,7 +6,7 @@ Arrow batches"; "turn ordering within each conv_id is enforced by a
 (conv_id, turn_idx) sort inside mapInPandas so per-turn text equality holds
 under replay".
 
-Three forms of one pairing contract:
+Two forms of one pairing contract:
 
   * ``paired_turns_batch`` — the declarative batch/parity form: lead() over
     (conv_id, turn_idx). One shuffle, no state; used by the oracle gate and
@@ -20,8 +20,6 @@ Three forms of one pairing contract:
     emit yet go back to state through the string codec, the only per-row
     Python left. An event-time timeout (the watermark passing the last
     buffered turn's ts + the session gap) flushes an idle conversation.
-  * ``paired_turns_stream_join`` — the same pairs from a watermarked JVM
-    stream-stream join; slower, kept for comparison (see its docstring).
 
 Shared pairing contract (turn_idx is dense per conv_id, FIXTURES.md §1):
 user turn i pairs with turn i+1 when i+1 is any non-user turn
@@ -318,78 +316,6 @@ def paired_turns_stream(
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def paired_turns_stream_join(
-    turns: DataFrame,
-    gap: str = "30 minutes",
-    watermark_delay: str | None = "10 minutes",
-    disorder: str = "10 minutes",
-) -> DataFrame:
-    """J1 as a watermarked JVM stream-stream LEFT OUTER join — the
-    whole-stage-codegen'd alternative for the contiguous-pair contract.
-
-    The user side joins the reply side on (conv_id, turn_idx+1) with an
-    event-time band ``reply_ts ∈ [user_ts - disorder, user_ts + gap]`` (the
-    band bounds join state exactly like the stateful impl's session-gap
-    timeout; ``disorder`` admits bounded intra-conversation timestamp
-    inversions). Unmatched user turns emit with NULL reply columns once the
-    watermark passes their band — same final rows as
-    ``paired_turns_stream``, produced by Spark's symmetric hash join state
-    instead of per-group Python. It is not faster: BENCH_r05.json measured
-    it at 20.8 s (``pairs_e2e_join``) against 5.5 s for the
-    applyInPandasWithState path (``pairs_e2e``). Differences vs the
-    stateful impl: emission timing (pairs surface when the watermark closes
-    the band, not eagerly) and no duplicate-turn collapse — feed it
-    offset-deduped input (the ingest sink's dedup, or
-    dropDuplicatesWithinWatermark upstream) when replays are possible.
-
-    The watermark is defined ONCE on the unified stream and both filtered
-    sides inherit it through the rename (re-watermarking each side would be
-    a disallowed redefinition when the caller chains another stateful
-    operator upstream). Pass ``watermark_delay=None`` for input that is
-    already watermarked.
-    """
-    from .windows import with_watermark
-
-    if watermark_delay is not None:
-        turns = with_watermark(turns, "ts", watermark_delay)
-    users = turns.filter(F.col("role") == "user").select(
-        F.col("conv_id").alias("u_conv_id"),
-        F.col("turn_idx").alias("user_turn_idx"),
-        F.col("text").alias("user_text"),
-        F.col("ts").alias("user_ts"),
-    )
-    replies = turns.filter(F.col("role") != "user").select(
-        F.col("conv_id").alias("r_conv_id"),
-        F.col("turn_idx").alias("reply_turn_idx"),
-        F.col("role").alias("reply_role"),
-        F.col("text").alias("reply_text"),
-        F.col("ts").alias("reply_ts"),
-    )
-    cond = (
-        (F.col("u_conv_id") == F.col("r_conv_id"))
-        & (F.col("reply_turn_idx") == F.col("user_turn_idx") + 1)
-        & (
-            F.col("reply_ts")
-            >= F.col("user_ts") - F.expr(f"INTERVAL {disorder}")
-        )
-        & (F.col("reply_ts") <= F.col("user_ts") + F.expr(f"INTERVAL {gap}"))
-    )
-    return users.join(replies, cond, "leftOuter").select(
-        F.col("u_conv_id").alias("conv_id"),
-        F.col("user_turn_idx").cast("int").alias("user_turn_idx"),
-        "user_text",
-        "user_ts",
-        F.col("reply_turn_idx").cast("int").alias("reply_turn_idx"),
-        "reply_role",
-        "reply_text",
-        "reply_ts",
-        (
-            F.unix_micros(F.col("reply_ts"))
-            - F.unix_micros(F.col("user_ts"))
-        ).alias("latency_us"),
     )
 
 

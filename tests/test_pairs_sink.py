@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka2iceberg_spark.gen import GenConfig, write_stream_files
@@ -126,13 +127,15 @@ def test_pairs_sink_replay_noop(spark, tmp_path):
     run()
     assert table.read(spark).count() == n1
     assert table.current_version() == v1
+    parsed = parsed_stream(file_broker_stream(spark, broker, 2), spec)
+    with pytest.raises(ValueError, match="impl must be 'state'"):
+        start_pairs_sink(parsed, table, str(tmp_path / "ck"), impl="join")
 
 
-def test_pairs_sink_join_impl_dedups_replayed_turns(spark, tmp_path):
-    """impl='join' chains dropDuplicatesWithinWatermark before the JVM
-    stream-stream join: a broker stream with replayed (duplicate) turns
-    must still emit exactly one pair per user turn, matching the batch twin
-    over the deduped input."""
+def test_pairs_sink_dedups_replayed_turns(spark, tmp_path):
+    """A broker stream with replayed (duplicate) turns must still emit
+    exactly one pair per user turn, matching the batch twin over the
+    deduped input."""
     cfg = GenConfig(
         n_convs=8,
         turns_per_conv=6,
@@ -159,7 +162,6 @@ def test_pairs_sink_join_impl_dedups_replayed_turns(spark, tmp_path):
         table,
         str(tmp_path / "ckj"),
         trigger={"availableNow": True},
-        impl="join",
     )
     q.awaitTermination()
 

@@ -121,11 +121,11 @@ def test_per_turn_text_parity_with_generator(spark, tmp_path, spec):
     assert _rows(spark, tbl) == expected
 
 
-def test_pairs_join_impl_resume_no_duplicates(spark, tmp_path, spec):
-    """The JVM stream-stream pairs branch (dedup → join → append sink) must
-    also resume from its checkpoint with zero duplicate emissions: Spark
-    restores both join sides' state and the dedup state, and the sink's
-    batch-id guard absorbs any replayed trigger."""
+def test_pairs_resume_no_duplicates(spark, tmp_path, spec):
+    """The pairs branch (stateful pairing → append sink) must resume from
+    its checkpoint with zero duplicate emissions: Spark restores the
+    per-conversation pairing state, and the sink's batch-id guard absorbs
+    any replayed trigger."""
     import json as _json
 
     from kafka2iceberg_spark.pipeline import (
@@ -158,7 +158,6 @@ def test_pairs_join_impl_resume_no_duplicates(spark, tmp_path, spec):
             tbl,
             ck,
             trigger={"availableNow": True},
-            impl="join",
         )
         q.awaitTermination()
 
@@ -189,6 +188,6 @@ def test_pairs_join_impl_resume_no_duplicates(spark, tmp_path, spec):
     run(broker, tbl, ck)
 
     got = pair_rows(tbl)
-    assert got == ref, "resumed join-impl run diverges from single-shot"
+    assert got == ref, "resumed pairs run diverges from single-shot"
     keys = [(c, u) for c, u, _, _ in got]
     assert len(keys) == len(set(keys)), "duplicate pair emissions"

@@ -60,7 +60,7 @@ def test_batch_consecutive_users_unpaired(spark):
 _SEQ = [0]
 
 
-def _stream_parity(spark, tmp_path, rows_by_file, impl=paired_turns_stream):
+def _stream_parity(spark, tmp_path, rows_by_file):
     """Feed files through the streaming join, compare to batch form.
 
     A far-future sentinel turn (separate conv) in a final file advances the
@@ -112,7 +112,9 @@ def _stream_parity(spark, tmp_path, rows_by_file, impl=paired_turns_stream):
         # disorder spans single-digit minutes; the 10-minute watermark must
         # tolerate it (rows later than the watermark are correctly dropped —
         # that policy is exercised separately in test_windows/test_streaming)
-        impl(stream, gap="30 minutes", watermark_delay="10 minutes")
+        paired_turns_stream(
+            stream, gap="30 minutes", watermark_delay="10 minutes"
+        )
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
@@ -259,54 +261,6 @@ def test_stream_survives_separator_text(spark, tmp_path):
     got, batch = _stream_parity(spark, tmp_path, rows_by_file)
     gotk = {(r.conv_id, r.user_turn_idx): (r.user_text, r.reply_text) for r in got}
     assert gotk[("c1", 0)] == (evil, "ok")
-
-
-def test_join_impl_matches_batch_pairs(spark, tmp_path):
-    """The JVM stream-stream join variant must produce the same PAIRED rows
-    as the batch oracle (unpaired trailing turns may stay in state, as with
-    the stateful impl)."""
-    from kafka2iceberg_spark.state import paired_turns_stream_join
-
-    rows_by_file = [
-        [("c1", 0, "user", "q0"), ("c2", 0, "user", "x0")],
-        [("c1", 1, "assistant", "a1"), ("c2", 1, "tool", "y1")],
-        [("c1", 2, "user", "q2"), ("c1", 3, "assistant", "a3"),
-         ("c3", 0, "user", "solo")],
-    ]
-    got, batch = _stream_parity(
-        spark, tmp_path, rows_by_file, impl=paired_turns_stream_join
-    )
-    gotk = {
-        (r.conv_id, r.user_turn_idx): (r.reply_role, r.reply_text, r.latency_us)
-        for r in got
-        if r.reply_text is not None
-    }
-    batchk = {
-        (r.conv_id, r.user_turn_idx): (r.reply_role, r.reply_text, r.latency_us)
-        for r in batch
-        if r.reply_text is not None
-    }
-    assert gotk == batchk
-    assert len(batchk) >= 3  # the fixture actually exercises pairs
-
-
-def test_join_impl_out_of_order_within_band(spark, tmp_path):
-    """A reply that ARRIVES a file before its user turn (out-of-order
-    arrival; timestamps within the join's event-time band) must still
-    pair once both sides are in state."""
-    from kafka2iceberg_spark.state import paired_turns_stream_join
-
-    # turn 1 (reply) arrives in file 0; its user turn 0 arrives in file 1.
-    rows_by_file = [
-        [("c1", 1, "assistant", "a1")],
-        [("c1", 0, "user", "q0")],
-    ]
-    got, batch = _stream_parity(
-        spark, tmp_path, rows_by_file, impl=paired_turns_stream_join
-    )
-    gotk = {(r.conv_id, r.user_turn_idx): r.reply_text for r in got
-            if r.reply_text is not None}
-    assert gotk == {("c1", 0): "a1"}
 
 
 def test_state_codec_reads_legacy_checkpoint_format():

@@ -19,6 +19,9 @@ import tempfile
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from bench import driver_memory  # noqa: E402
 
 JOB = """
 import json, statistics, sys, time
@@ -78,7 +81,7 @@ def submit(zip_path: str, job_path: str, cores: int, rows: int) -> dict:
         "spark-submit",
         "--master", f"local[{cores}]",
         "--conf", "spark.ui.enabled=false",
-        "--conf", "spark.driver.memory=48g",
+        "--conf", f"spark.driver.memory={driver_memory()}",
         "--conf", f"spark.local.dir=/dev/shm/k2i-submit-{cores}",
         "--py-files", zip_path,
         job_path,
@@ -94,8 +97,8 @@ def submit(zip_path: str, job_path: str, cores: int, rows: int) -> dict:
 
 def main() -> None:
     rows = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000_000
-    lo = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-    hi = int(sys.argv[3]) if len(sys.argv) > 3 else 32
+    hi = int(sys.argv[3]) if len(sys.argv) > 3 else os.cpu_count()
+    lo = int(sys.argv[2]) if len(sys.argv) > 2 else max(hi // 4, 1)
 
     work = tempfile.mkdtemp(prefix="k2i_submit_")
     zip_path = os.path.join(work, "k2i.zip")

@@ -4,7 +4,9 @@ Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB over the same parquet tables, then compares
 row count, column names, and order-insensitive values (floats to 1e-9 or
 exact strings). Mirrors the driver's CORRECTNESS check so regressions are
-caught before a round ends.
+caught before a round ends. Each query's line carries its Spark wall
+(build + collect), so every registry query gets a did-it-run check and a
+timing on each run.
 
 Usage: python tools/verify_oracle.py [sf_dir] [query ...]
 """
@@ -14,6 +16,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -128,14 +131,15 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
+    from bench import driver_memory
     from pyspark.sql import SparkSession
 
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{os.cpu_count()}]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
+        .config("spark.driver.memory", driver_memory())
         .getOrCreate()
     )
     con = duckdb.connect()
@@ -150,19 +154,21 @@ def main() -> int:
     for name, fn in queries.items():
         if only and name not in only:
             continue
+        t0 = time.monotonic()
         try:
             sdf = fn(spark, sf_dir)
             srows = sdf.collect()
             scols = sdf.columns
         except Exception as exc:  # noqa: BLE001
             failures.append(name)
-            print(f"FAIL {name}: spark error: {exc}")
+            print(f"FAIL {name}: spark error [spark {time.monotonic() - t0:.2f} s]: {exc}")
             continue
+        wall = f"[spark {time.monotonic() - t0:.2f} s]"
         if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(srows)} rows, no oracle)")
+            print(f"ok   {name}: rows-only ({len(srows)} rows, no oracle) {wall}")
             if len(srows) == 0:
                 failures.append(name)
-                print(f"FAIL {name}: zero rows")
+                print(f"FAIL {name}: zero rows {wall}")
             continue
         try:
             ores = con.sql(oracles[name])
@@ -171,7 +177,7 @@ def main() -> int:
             orows = [tuple(r.values()) for r in otbl.to_pylist()]
         except Exception as exc:  # noqa: BLE001
             failures.append(name)
-            print(f"FAIL {name}: oracle error: {exc}")
+            print(f"FAIL {name}: oracle error {wall}: {exc}")
             continue
         problems = []
         if sorted(scols) != sorted(ocols):
@@ -189,9 +195,9 @@ def main() -> int:
                 problems.append(f"values differ, first diffs: {diff}")
         if problems:
             failures.append(name)
-            print(f"FAIL {name}: " + "; ".join(problems))
+            print(f"FAIL {name} {wall}: " + "; ".join(problems))
         else:
-            print(f"ok   {name}: {len(srows)} rows match")
+            print(f"ok   {name}: {len(srows)} rows match {wall}")
     spark.stop()
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0

@@ -481,8 +481,8 @@ def q_topk_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_enriched_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dimension enrichment: broadcast LEFT join facts→dim, rollup after.
 
-    Batch twin of ``pipeline.start_enriched_sink`` (the Flink
-    broadcast-state analogue): a deterministic tool dimension (owner team
+    ``pipeline.enrich_with_dim`` (the Flink broadcast-state analogue):
+    a deterministic tool dimension (owner team
     derived from the tool id) is broadcast-LEFT-joined into the transcript
     stream — unmatched (non-tool) turns surface with the '<none>' owner
     instead of being dropped. At 10^12 turns the fact side never shuffles:
@@ -2568,8 +2568,7 @@ def q_sla_breaches(spark: SparkSession, sf_dir: str) -> DataFrame:
     notFollowedBy(...).within(T), the absence-of-event pattern class):
     every user turn flagged if no assistant reply followed within 1 h.
     One reversed-cumulative conditional-min window per conversation —
-    no self-join, no range explosion; live twin = sla_breaches_stream
-    (stream==batch parity in pytest)."""
+    no self-join, no range explosion."""
     from kafka2iceberg_spark import state as st
 
     _utc(spark)
@@ -4270,9 +4269,7 @@ def q_quota_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-conversation rate cap an ingestion pipeline applies before
     expensive downstream work. Event-time order, so the verdict set is
     replay/reorder-stable. One shuffle on (conv_id, window) + one rank
-    window. ``windows.quota_stream`` is the live twin — bounded
-    O(quota) state per open window with eager rejection verdicts —
-    pinned stream==batch in tests/test_quota_stream.py."""
+    window."""
     df = _tx(spark, sf_dir)
     return win.quota_admit(df, "conv_id", "ts", "1 day", 4, "turn_idx")
 

@@ -418,166 +418,6 @@ def echo_stats(
     )
 
 
-def echo_flags(
-    df: DataFrame,
-    key: str = "conv_id",
-    role_col: str = "role",
-    signal_col: str = "signal",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-turn echo flags (batch) — the row-level form ``echo_stats``
-    aggregates and the parity twin of ``echo_stream``: for each turn, is
-    it an echo of the SAME role's previous turn (event-time order, signal
-    tiebreak), and how long is the current repeated-action run including
-    it. Three stacked windows, all partitioned by the conversation.
-
-    Output: (key, role, signal, ts_us, echo, run_len).
-    """
-    from pyspark.sql.window import Window
-
-    wr = Window.partitionBy(key, role_col).orderBy(ts_col, signal_col)
-    ws = Window.partitionBy(key, role_col, signal_col).orderBy(
-        ts_col, signal_col
-    )
-    base = (
-        df.select(key, role_col, signal_col, F.col(ts_col))
-        .withColumn("_seq", F.row_number().over(wr))
-        .withColumn("_isl", F.col("_seq") - F.row_number().over(ws))
-    )
-    wi = Window.partitionBy(key, role_col, signal_col, "_isl").orderBy(
-        ts_col, signal_col
-    )
-    return base.withColumn(
-        "run_len", F.row_number().over(wi).cast("long")
-    ).select(
-        key,
-        role_col,
-        signal_col,
-        F.unix_micros(F.col(ts_col)).alias("ts_us"),
-        (F.col("run_len") > 1).alias("echo"),
-        "run_len",
-    )
-
-
-def echo_stream(
-    events: DataFrame,
-    key: str = "conv_id",
-    role_col: str = "role",
-    signal_col: str = "signal",
-    ts_col: str = "ts",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming twin of ``echo_flags``: live agent-loop detection as a
-    stateful operator (``applyInPandasWithState``, event-time timeouts) —
-    the monitor a serving pipeline runs to page on a degenerate agent
-    before the transcript ever lands in a table.
-
-    Finalize-on-watermark semantics (the repo's standard): a turn's echo
-    verdict is emitted exactly once, when the watermark passes its
-    timestamp, so the per-role last-signal recurrence sees the same
-    (ts, signal) order as the batch operator and stream == batch
-    row-for-row on in-watermark data (pytest asserts it). Late-beyond-
-    watermark rows are dropped — the documented policy shared with
-    ``debounce_stream``. Buffered not-yet-final turns re-arm an
-    event-time timeout at their earliest timestamp.
-
-    State per conversation = the in-watermark turn buffer + one
-    (last_signal, run_len) pair per role — O(roles) once the buffer
-    drains, the smallest state of any stateful op in this repo.
-    """
-    import json as _json
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import (
-        GroupState,
-        GroupStateTimeout,
-    )
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from .windows import with_watermark
-
-    events = with_watermark(events, ts_col, watermark_delay)
-    key_field = [f for f in events.schema.fields if f.name == key][0]
-    out_schema = StructType(
-        [
-            StructField(key, key_field.dataType),
-            StructField(role_col, StringType()),
-            StructField(signal_col, StringType()),
-            StructField("ts_us", LongType()),
-            StructField("echo", BooleanType()),
-            StructField("run_len", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("roles_json", StringType()),
-            StructField("buf_json", StringType()),
-        ]
-    )
-
-    def _unpack(state):
-        if not state.exists:
-            return {}, []
-        roles_json, buf_json = state.get
-        return _json.loads(roles_json), _json.loads(buf_json)
-
-    def fn(kt, pdfs, state: GroupState):
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        roles, buf = _unpack(state)
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                us = (
-                    pd.to_datetime(pdf[ts_col]).astype("int64") // 1000
-                ).tolist()
-                for u, r, s in zip(
-                    us, pdf[role_col].tolist(), pdf[signal_col].tolist()
-                ):
-                    if u > wm_us:  # late-beyond-watermark: dropped
-                        buf.append([u, r, s])
-        buf.sort()
-        finalized, remain = [], []
-        for u, r, s in buf:
-            if u <= wm_us:
-                last, run = roles.get(r, (None, 0))
-                run = run + 1 if s == last else 1
-                roles[r] = (s, run)
-                finalized.append((r, s, u, run > 1, run))
-            else:
-                remain.append([u, r, s])
-        state.update((_json.dumps(roles), _json.dumps(remain)))
-        if remain:
-            state.setTimeoutTimestamp(
-                max(remain[0][0] // 1000, state.getCurrentWatermarkMs() + 1)
-            )
-        if finalized:
-            yield pd.DataFrame(
-                {
-                    key: [kt[0]] * len(finalized),
-                    role_col: [r for r, *_ in finalized],
-                    signal_col: [s for _, s, *_ in finalized],
-                    "ts_us": [u for _, _, u, _, _ in finalized],
-                    "echo": [e for *_, e, _ in finalized],
-                    "run_len": [n for *_, n in finalized],
-                }
-            )
-
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 def match_stream(
     events: DataFrame,
     pattern: str,
@@ -605,7 +445,7 @@ def match_stream(
     state is dropped.  Stream == batch row-for-row whenever no
     conversation straddles a silence longer than ``gap_seconds``
     (tests/test_cep_stream.py pins parity, segment splitting, cross-batch
-    buffering, and the late-row drop policy shared with echo_stream).
+    buffering, and the late-row drop policy).
 
     State per open conversation = the un-emitted turn buffer
     (``[ts_us, turn_idx, role_char]`` triples) — normally one open segment,

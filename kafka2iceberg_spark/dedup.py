@@ -1392,11 +1392,14 @@ class NearDupIndex:
 
     def start(self, stream: DataFrame, checkpoint: str, **trigger):
         """Maintain the index from a streaming DataFrame of documents."""
-        from .sketches import _start_sketch_stream
+        from .pipeline import _start_foreach_batch
 
-        return _start_sketch_stream(
+        return _start_foreach_batch(
+            stream,
             lambda df, bid: self.apply_batch(df, str(bid)),
-            stream, checkpoint, **trigger,
+            checkpoint,
+            "append",
+            trigger or {"availableNow": True},
         )
 
     def all_pairs(self, spark) -> DataFrame:

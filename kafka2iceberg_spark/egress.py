@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .pipeline import _start_foreach_batch
 from .table_stream import CHANGE_TYPE_COL, COMMIT_VERSION_COL
 
 __all__ = ["changelog_envelopes", "start_egress_sink"]
@@ -179,11 +180,6 @@ def start_egress_sink(
             .save(out_dir)
         )
 
-    writer = (
-        changelog.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return _start_foreach_batch(
+        changelog, commit, checkpoint, "append", trigger
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()

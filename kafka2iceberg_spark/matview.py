@@ -1,35 +1,18 @@
-"""Incremental materialized-view maintenance from the changelog stream.
+"""Incremental materialized-view maintenance for join views.
 
-A downstream aggregate (per-conversation turn counts, char totals, ...)
-recomputed from scratch every trigger is O(table) per micro-batch; at 100 TB
-that is the whole job. Classic incremental view maintenance (delta
-processing) makes it O(changes): each changelog event contributes a signed
-delta (+ for insert, - for delete), deltas are pre-aggregated per group, and
-the view table absorbs one small upsert per micro-batch.
+A downstream view recomputed from scratch every trigger is O(table) per
+micro-batch; at 100 TB that is the whole job. Classic incremental view
+maintenance (delta processing) makes it O(changes): each micro-batch's
+per-side deltas are joined against the committed state and the view table
+absorbs one small append per batch (see :class:`IncrementalJoinView`).
 
-The delete pre-image problem: a delete event affects the view only by what
-the deleted row LOOKED LIKE, and equality-delete events carry neither the
-measures (non-key columns are NULL) nor even a guarantee the row existed —
-a MOR upsert pairs every insert with a same-version delete of its PK that
-covers only OLDER sequences, so treating deletes as blind decrements would
-cancel fresh inserts. The pre-image is therefore always recovered by time
-travel: a delete at ``_commit_version v`` removes the row as it stood at
-``v-1``, so the delete keys are semi-joined against
-``source.read(version=v-1)`` (snapshot immutability makes this
-deterministic under replay); a key absent there is a no-op. Versions are
-processed in order within the batch — a micro-batch spans few commits.
-Count-only views column-prune the pre-image read to the PK columns (at
-100 TB, reading two key columns instead of the row is most of the win).
-
-Exactly-once: the view is an IcebergLite table keyed on the group columns;
-the per-batch merge commits through ``commit_upsert(batch_id)``, so a
-replayed micro-batch is a no-op (same guard as the main sink). Groups whose
-count reaches zero are emitted as CDC deletes — the view never retains
-empty groups.
+Exactly-once: the source appends and the view append for one micro-batch
+publish through a single catalog transaction keyed on the batch id, so a
+replayed micro-batch is a committed no-op.
 
 No counterpart in the reference (one-way MQ→Iceberg, no aggregation
-surface); this is [NORTH] surface — Iceberg changelog scan + the standard
-streaming-warehouse MV pattern, Spark-first.
+surface); this is [NORTH] surface — the standard streaming-warehouse MV
+pattern, Spark-first.
 """
 
 from __future__ import annotations
@@ -37,194 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sink import IcebergLite
-from .table_stream import CHANGE_TYPE_COL, COMMIT_VERSION_COL, table_stream
-
-
-class IncrementalAggView:
-    """Maintain ``SELECT group_by..., count(*), sum(expr)... FROM source
-    GROUP BY group_by`` incrementally from the source's changelog.
-
-    ``measures`` maps output column -> ("count", None) | ("sum", sql_expr);
-    a ``("count", None)`` column is always maintainable; ``sum`` columns
-    require pre-image recovery on deletes (see module docstring).
-    ``group_by`` must be a subset of the source PK for delete events to
-    carry the group key.
-    """
-
-    def __init__(
-        self,
-        source: IcebergLite,
-        view: IcebergLite,
-        group_by: list[str],
-        measures: dict[str, tuple[str, str | None]],
-    ) -> None:
-        missing = [g for g in group_by if g not in source.pk]
-        if missing:
-            raise ValueError(
-                f"group keys {missing} not in source pk {source.pk}: delete"
-                " events would not carry them"
-            )
-        if sorted(view.pk) != sorted(group_by):
-            raise ValueError(
-                f"view pk {view.pk} must equal the group keys {group_by}"
-            )
-        for out, (agg, expr) in measures.items():
-            if agg == "count" and expr is not None:
-                raise ValueError(f"{out}: count takes no expression")
-            if agg == "sum" and not expr:
-                raise ValueError(f"{out}: sum needs an expression")
-            if agg not in ("count", "sum"):
-                raise ValueError(f"{out}: unsupported aggregate {agg!r}")
-        self.source = source
-        self.view = view
-        self.group_by = list(group_by)
-        self.measures = dict(measures)
-        self._count_col = next(
-            (o for o, (a, _) in measures.items() if a == "count"), None
-        )
-        if self._count_col is None:
-            raise ValueError(
-                "include a count measure: it arbitrates group liveness"
-                " (a group leaves the view when its count reaches 0)"
-            )
-
-    @property
-    def _needs_preimage(self) -> bool:
-        return any(a == "sum" for a, _ in self.measures.values())
-
-    # -- delta computation ---------------------------------------------------
-
-    def _signed(self, rows: DataFrame, sign: int) -> DataFrame:
-        """Per-group signed deltas of every measure for a slice of rows."""
-        aggs = []
-        for out, (agg, expr) in self.measures.items():
-            if agg == "count":
-                aggs.append(F.sum(F.lit(sign)).cast("long").alias(out))
-            else:
-                aggs.append(
-                    (F.lit(sign) * F.sum(F.coalesce(F.expr(expr), F.lit(0))))
-                    .cast("long")
-                    .alias(out)
-                )
-        return rows.groupBy(*self.group_by).agg(*aggs)
-
-    def _batch_deltas(self, events: DataFrame) -> DataFrame:
-        inserts = events.where(F.col(CHANGE_TYPE_COL) == "insert")
-        deletes = events.where(F.col(CHANGE_TYPE_COL) == "delete")
-        parts = [self._signed(inserts, +1)]
-        # time-travel pre-image recovery, one bounded read per source
-        # version present in the batch (micro-batches span few commits);
-        # count-only views prune the read to the PK columns
-        versions = [
-            r[0]
-            for r in deletes.select(COMMIT_VERSION_COL).distinct().collect()
-        ]
-        spark = events.sparkSession
-        for v in sorted(versions):
-            keys = deletes.where(
-                F.col(COMMIT_VERSION_COL) == v
-            ).select(*self.source.pk)
-            # pre-image = the commit's PARENT snapshot, not v-1: version
-            # numbers are table-global across refs, so v-1 can be a staged
-            # branch/transaction commit that main never saw
-            snap_v = self.source.snapshot_at(int(v))
-            parent = snap_v.get("parent_version", int(v) - 1)
-            pre = self.source.read(spark, version=int(parent))
-            if not self._needs_preimage:
-                pre = pre.select(*self.source.pk)
-            pre = pre.join(
-                F.broadcast(keys), on=self.source.pk, how="left_semi"
-            )
-            parts.append(self._signed(pre, -1))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        sums = [
-            F.sum(o).cast("long").alias(o) for o in self.measures
-        ]
-        return out.groupBy(*self.group_by).agg(*sums)
-
-    # -- merge ---------------------------------------------------------------
-
-    def apply_batch(self, events: DataFrame, batch_id: str) -> bool:
-        """Fold one changelog micro-batch into the view table. Idempotent
-        per batch_id. Use as ``foreachBatch(lambda df, bid:
-        mv.apply_batch(df, str(bid)))``."""
-        if str(batch_id) in self.view.committed_batches():
-            return False  # replayed batch: deltas must not re-apply
-        deltas = self._batch_deltas(events)
-        deltas = deltas.where(
-            ~all_zero([F.col(o) for o in self.measures])
-        )
-        spark = events.sparkSession
-        try:
-            current = self.view.read(spark).select(
-                *self.group_by, *self.measures
-            )
-        except FileNotFoundError:
-            current = None
-        if current is not None:
-            merged = deltas.alias("d").join(
-                current.alias("c"), on=self.group_by, how="left"
-            )
-            cols = [F.col(f"d.{g}").alias(g) for g in self.group_by] + [
-                (
-                    F.coalesce(F.col(f"c.{o}"), F.lit(0))
-                    + F.col(f"d.{o}")
-                ).cast("long").alias(o)
-                for o in self.measures
-            ]
-            merged = merged.select(*cols)
-        else:
-            merged = deltas
-        merged = merged.withColumn(
-            "is_cdc_delete", F.col(self._count_col) <= 0
-        )
-        return self.view.commit_upsert(merged, str(batch_id))
-
-    # -- wiring ----------------------------------------------------------------
-
-    def start(self, spark: SparkSession, checkpoint: str, **trigger):
-        """Open the source changelog stream and maintain the view until the
-        trigger completes (default ``availableNow``)."""
-        if not trigger:
-            trigger = {"availableNow": True}
-        # starting_version=0: the view's defining query covers the table's
-        # whole history; the checkpoint, not the default head offset,
-        # governs where a resumed run picks up
-        stream = table_stream(
-            spark, self.source.location, starting_version=0, changelog=True
-        )
-        return (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.apply_batch(df, str(bid))
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(**trigger)
-            .start()
-        )
-
-    def recompute(self, spark: SparkSession) -> DataFrame:
-        """The view's defining query, from scratch — the parity oracle."""
-        aggs = []
-        for out, (agg, expr) in self.measures.items():
-            if agg == "count":
-                aggs.append(F.count(F.lit(1)).cast("long").alias(out))
-            else:
-                aggs.append(
-                    F.sum(F.coalesce(F.expr(expr), F.lit(0)))
-                    .cast("long")
-                    .alias(out)
-                )
-        return self.source.read(spark).groupBy(*self.group_by).agg(*aggs)
-
-
-def all_zero(cols) -> F.Column:
-    out = F.lit(True)
-    for c in cols:
-        out = out & (c == 0)
-    return out
+from .pipeline import _start_foreach_batch
 
 
 class IncrementalJoinView:
@@ -243,8 +39,8 @@ class IncrementalJoinView:
     (l, r) pair is produced exactly once: whichever row arrives later finds
     the earlier one committed, and same-batch pairs come from the dL >< dR
     term. The view only ever ABSORBS appends — insert-only sources cannot
-    retract a previous match (updating/deleting sources are the
-    ``IncrementalAggView`` + MOR-upsert territory, not this operator).
+    retract a previous match (updating/deleting sources are MOR-upsert
+    territory, not this operator).
 
     Scale shape: the per-batch deltas are small and broadcast; the big
     committed side is probed with one broadcast-hash join per term — the
@@ -366,18 +162,17 @@ class IncrementalJoinView:
         routes rows). Two independent streaming queries could not share a
         transaction — one stream, split per batch, keeps the three-table
         commit atomic."""
-        if not trigger:
-            trigger = {"availableNow": True}
 
         def _one(df: DataFrame, bid) -> None:
             dl, dr = split(df)
             self.apply_batch(dl, dr, str(bid))
 
-        return (
-            stream.writeStream.foreachBatch(_one)
-            .option("checkpointLocation", checkpoint)
-            .trigger(**trigger)
-            .start()
+        return _start_foreach_batch(
+            stream,
+            _one,
+            checkpoint,
+            "append",
+            trigger or {"availableNow": True},
         )
 
     def recompute(self, spark: SparkSession) -> DataFrame:

@@ -29,7 +29,7 @@ from pyspark.sql import types as T
 
 from . import ingest
 from .config import TaskSpec
-from .sink import IcebergLite
+from .sink import CommitConflict, IcebergLite
 
 ENVELOPE_LINE_SCHEMA = T.StructType([T.StructField("value", T.StringType())])
 
@@ -355,6 +355,46 @@ def robust_event_max(
     return min(mx, p99 + int(clamp_us))
 
 
+def _start_foreach_batch(
+    stream: DataFrame,
+    fn,
+    checkpoint: str,
+    output_mode: str,
+    trigger: dict | None,
+):
+    """Start ``stream`` as a checkpointed foreachBatch query calling
+    ``fn(batch_df, batch_id)``; Spark's default trigger when ``trigger``
+    is empty. Every streaming sink in the package starts through here."""
+    writer = (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(output_mode)
+    )
+    if trigger:
+        writer = writer.trigger(**trigger)
+    return writer.start()
+
+
+#: Tries at one micro-batch's upsert: the first plus three retries. A
+#: maintenance commit (compaction, expiration) that links the version the
+#: upsert allocated makes it lose with ``CommitConflict``; ``commit_upsert``
+#: re-reads the head and the replay guard on every call, so the whole call
+#: is safe to repeat.
+_UPSERT_TRIES = 4
+
+
+def _commit_upsert(
+    table: IcebergLite, batch_df: DataFrame, batch_id: str, strategy: str
+) -> bool:
+    """``table.commit_upsert``, retried on ``CommitConflict``."""
+    for attempt in range(_UPSERT_TRIES):
+        try:
+            return table.commit_upsert(batch_df, batch_id, strategy=strategy)
+        except CommitConflict:
+            if attempt == _UPSERT_TRIES - 1:
+                raise
+
+
 def start_upsert_sink(
     parsed: DataFrame,
     table: IcebergLite,
@@ -412,6 +452,11 @@ def start_upsert_sink(
     are that untrustworthy, gate the stream through the DLQ first.
     Deleted rows remain time-travelable until the expiration step of the
     same tick ages their snapshots out.
+
+    A batch whose upsert loses the version race to a concurrent
+    maintenance commit (``CommitConflict``, e.g. the standalone
+    compaction job) is retried on the new head up to three times before
+    the query fails.
     """
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
@@ -422,10 +467,10 @@ def start_upsert_sink(
                 c = F.col(name).isNotNull()
                 cond = c if cond is None else (cond & c)
             clean = batch_df.filter(cond) if cond is not None else batch_df
-            table.commit_upsert(clean, str(batch_id), strategy=strategy)
+            _commit_upsert(table, clean, str(batch_id), strategy)
             dead_letter.commit_append(bad, str(batch_id))
         else:
-            table.commit_upsert(batch_df, str(batch_id), strategy=strategy)
+            _commit_upsert(table, batch_df, str(batch_id), strategy)
         if maintenance_every and (int(batch_id) + 1) % maintenance_every == 0:
             if retention_us:
                 mx = robust_event_max(
@@ -448,14 +493,7 @@ def start_upsert_sink(
             )
             table.expire_snapshots(keep_last=keep_snapshots)
 
-    writer = (
-        parsed.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(parsed, commit, checkpoint, "update", trigger)
 
 
 def start_corrupt_dlq(
@@ -481,14 +519,7 @@ def start_corrupt_dlq(
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         table.commit_append(batch_df, str(batch_id))
 
-    writer = (
-        bad.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(bad, commit, checkpoint, "append", trigger)
 
 
 def start_ddl_sink(
@@ -517,14 +548,7 @@ def start_ddl_sink(
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         table.commit_append(batch_df, str(batch_id))
 
-    writer = (
-        ddl.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(ddl, commit, checkpoint, "append", trigger)
 
 
 def start_append_sink(
@@ -538,14 +562,7 @@ def start_append_sink(
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         table.commit_append(batch_df, str(batch_id))
 
-    writer = (
-        parsed.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(parsed, commit, checkpoint, "append", trigger)
 
 
 def enrich_with_dim(
@@ -566,68 +583,6 @@ def enrich_with_dim(
         F.col(on), *[F.col(c).alias(f"{prefix}{c}") for c in others]
     )
     return df.join(F.broadcast(slim), on=on, how="left")
-
-
-def start_enriched_sink(
-    parsed: DataFrame,
-    dim_table: IcebergLite,
-    table: IcebergLite,
-    checkpoint: str,
-    on: str,
-    trigger: dict | None = None,
-    prefix: str = "dim_",
-):
-    """Streaming dimension enrichment (Flink broadcast-state analogue).
-
-    Every micro-batch re-reads the dimension table at its CURRENT snapshot
-    and broadcast-LEFT-joins it into the batch before the exactly-once
-    commit. Dimension upserts landing between micro-batches are therefore
-    visible to the next batch with no stream restart — processing-time
-    temporal-join semantics: each fact row is enriched with the dimension
-    version current at ingest time, exactly like Flink's broadcast-state
-    pattern the reference's users pair with its pipeline (the reference
-    itself performs no enrichment — Kafka2IcebergApp.java wires source
-    straight to sink). Replay safety: a replayed batch re-enriches against
-    the CURRENT dim, but the batch-id guard means a replay only happens when
-    the original commit never landed, so each batch id still commits exactly
-    once.
-    """
-
-    def commit(batch_df: DataFrame, batch_id: int) -> None:
-        dim = dim_table.read(batch_df.sparkSession)
-        enriched = enrich_with_dim(batch_df, dim, on, prefix=prefix)
-        if table.pk:
-            table.commit_upsert(enriched, str(batch_id))
-        else:
-            table.commit_append(enriched, str(batch_id))
-
-    writer = (
-        parsed.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
-def dedup_stream(
-    parsed: DataFrame,
-    keys: list[str] | None = None,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """O1 native form: state-backed streaming dedup on the logical PK.
-
-    ``dropDuplicatesWithinWatermark`` keeps per-key state only until the
-    watermark passes the first occurrence + delay — bounded state at
-    10^12-turn scale, unlike plain dropDuplicates whose state grows forever.
-    Use upstream of an append sink when replays/duplicate envelopes must
-    collapse before hitting the table (the PK-MERGE upsert path is the
-    alternative that also handles updates)."""
-    from . import windows as win
-
-    wm = win.with_watermark(parsed, "ts", watermark_delay)
-    return wm.dropDuplicatesWithinWatermark(list(keys or ["conv_id", "turn_idx"]))
 
 
 def start_session_sink(
@@ -663,14 +618,9 @@ def start_session_sink(
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         table.commit_append(batch_df, str(batch_id))
 
-    writer = (
-        sessions.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return _start_foreach_batch(
+        sessions, commit, checkpoint, "append", trigger
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def start_pairs_sink(
@@ -706,14 +656,7 @@ def start_pairs_sink(
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         table.commit_append(batch_df, str(batch_id))
 
-    writer = (
-        pairs.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(pairs, commit, checkpoint, "append", trigger)
 
 
 def start_window_sink(
@@ -740,14 +683,9 @@ def start_window_sink(
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         table.commit_append(batch_df, str(batch_id))
 
-    writer = (
-        windowed.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return _start_foreach_batch(
+        windowed, commit, checkpoint, "append", trigger
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def run_ingest_once(
@@ -823,14 +761,7 @@ def start_fanout_sink(
                 txn.append(name, rows)
         txn.commit()
 
-    writer = (
-        raw.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(raw, commit, checkpoint, "update", trigger)
 
 
 def start_dynamic_sink(
@@ -904,11 +835,4 @@ def start_dynamic_sink(
         rows = ingest.parse(batch_df, state["spec"], **kafka_cols)
         table.commit_upsert(rows, str(batch_id))
 
-    writer = (
-        raw.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(raw, commit, checkpoint, "update", trigger)

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .pipeline import _start_foreach_batch
+
 __all__ = [
     "TemporalEnrich",
     "scd2",
@@ -278,11 +280,11 @@ class TemporalEnrich:
     """Event-time temporal join view — Flink's ``FOR SYSTEM_TIME AS OF
     fact.ts`` re-expressed Spark-first over exactly-once tables.
 
-    ``start_enriched_sink`` (pipeline.py) gives PROCESSING-time temporal
-    semantics: each fact takes whatever dimension version is committed
-    when its micro-batch runs, so the answer depends on arrival timing.
-    This operator gives the deterministic EVENT-time form the Flink SQL
-    surface calls a temporal (versioned-table) join: every fact is
+    A per-micro-batch re-read of the dimension gives PROCESSING-time
+    temporal semantics: each fact takes whatever dimension version is
+    committed when its micro-batch runs, so the answer depends on arrival
+    timing. This operator gives the deterministic EVENT-time form the
+    Flink SQL surface calls a temporal (versioned-table) join: every fact is
     enriched with the dimension version whose SCD2 validity interval
     contains the fact's event timestamp — regardless of which arrived
     first — by holding facts back until the dimension stream's watermark
@@ -491,18 +493,17 @@ class TemporalEnrich:
         """Maintain from ONE tagged stream (``split(df) -> (dim, facts)``)
         — the same single-stream shape as IncrementalJoinView: two
         independent queries could not share the catalog transaction."""
-        if not trigger:
-            trigger = {"availableNow": True}
 
         def _one(df: DataFrame, bid) -> None:
             dim, facts = split(df)
             self.apply_batch(dim, facts, str(bid))
 
-        return (
-            stream.writeStream.foreachBatch(_one)
-            .option("checkpointLocation", checkpoint)
-            .trigger(**trigger)
-            .start()
+        return _start_foreach_batch(
+            stream,
+            _one,
+            checkpoint,
+            "append",
+            trigger or {"availableNow": True},
         )
 
     # -- reads ----------------------------------------------------------------

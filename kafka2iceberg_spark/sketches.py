@@ -98,14 +98,6 @@ def hll_estimate(
     switches to linear counting ``m * ln(m/V)``.
     """
     regs = hll_registers(df, value, group, p)
-    return hll_estimate_from_registers(regs, group, p)
-
-
-def hll_estimate_from_registers(
-    regs: DataFrame, group: list[str] | None = None, p: int = HLL_P
-) -> DataFrame:
-    """Fold a (possibly incrementally-maintained) register table into the
-    HLL estimate — the read side of a streaming sketch."""
     m = 1 << p
     w = 60 - p
     alpha = _hll_alpha(m)
@@ -203,18 +195,6 @@ def countmin_heavy_hitters(
     Output: ``token, est_count`` (exact integers, engine-portable).
     """
     counters = countmin_counters(tokens, value, depth, width)
-    return _cm_probe(counters, candidates, value, depth, width)
-
-
-def _cm_probe(
-    counters: DataFrame,
-    candidates: DataFrame,
-    value: str,
-    depth: int,
-    width: int,
-) -> DataFrame:
-    """min-over-rows probe of a Count-Min counter matrix (shared by the
-    batch heavy-hitters query and the maintained streaming sketch)."""
     probe_rows = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row")
     probes = candidates.select(F.col(value).alias("token")).distinct().select(
         "token", probe_rows
@@ -231,206 +211,6 @@ def _cm_probe(
         {"counter": 0}
     )
     return joined.groupBy("token").agg(F.min("counter").alias("est_count"))
-
-
-def _start_sketch_stream(apply_fn, stream: DataFrame, checkpoint: str, **trigger):
-    """Shared maintained-sketch streaming scaffold: one foreachBatch onto
-    the sketch's apply_batch, availableNow unless a trigger is given."""
-    if not trigger:
-        trigger = {"availableNow": True}
-    return (
-        stream.writeStream.foreachBatch(apply_fn)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger)
-        .start()
-    )
-
-
-class StreamingHLL:
-    """Continuously-maintained HLL sketch: the register table lives in an
-    IcebergLite table (pk = register) and each micro-batch max-merges its
-    own registers into it — the mergeability property is exactly what makes
-    HLL a streaming aggregate with 2^p bounded state, no watermark, no
-    state store.
-
-    Exactly-once: the merge commits through ``commit_upsert(batch_id)``
-    (same replay guard as the main sink), and max-merge is idempotent
-    anyway — a replayed batch cannot move any register. Estimates come from
-    ``estimate()`` at any time, on the committed table, without pausing the
-    stream. Distinct-over-all-history of a 100 TB stream costs 4096 rows
-    of state.
-    """
-
-    def __init__(self, table, p: int = HLL_P) -> None:
-        if sorted(table.pk) != ["register"]:
-            raise ValueError("register table pk must be ['register']")
-        self.table = table
-        self.p = p
-
-    def apply_batch(self, df: DataFrame, value: Column, batch_id: str) -> bool:
-        """Max-merge one micro-batch's registers into the table."""
-        from pyspark.sql import functions as F2
-
-        if str(batch_id) in self.table.committed_batches():
-            return False
-        batch = hll_registers(df, value, None, self.p)
-        try:
-            current = self.table.read(df.sparkSession).select(
-                "register", F2.col("max_rank").alias("_old")
-            )
-        except FileNotFoundError:
-            current = None
-        if current is not None:
-            batch = (
-                batch.join(current, "register", "left")
-                .select(
-                    "register",
-                    F2.greatest(
-                        F2.col("max_rank"), F2.coalesce(F2.col("_old"), F2.lit(0))
-                    ).alias("max_rank"),
-                )
-                # registers the batch didn't touch carry forward by PK
-                # upsert semantics; unchanged ones are rewritten only in
-                # their own rows
-            )
-        return self.table.commit_upsert(batch, str(batch_id))
-
-    def start(self, stream: DataFrame, value: Column, checkpoint: str, **trigger):
-        """Maintain the sketch from a streaming DataFrame."""
-        return _start_sketch_stream(
-            lambda df, bid: self.apply_batch(df, value, str(bid)),
-            stream, checkpoint, **trigger,
-        )
-
-    def estimate(self, spark) -> DataFrame:
-        """Current distinct estimate from the committed register table."""
-        return hll_estimate_from_registers(
-            self.table.read(spark).select("register", "max_rank"), None, self.p
-        )
-
-
-class StreamingCountMin:
-    """Continuously-maintained Count-Min sketch: the ``d x w`` counter
-    matrix lives in an IcebergLite table (pk = [row, bucket]) and each
-    micro-batch SUM-merges its own counter matrix into it — counters are
-    linear, so sketch-of-union == sum of per-batch sketches, the additive
-    analogue of HLL's max-merge. Point-frequency estimates for ANY
-    candidate set come from ``estimate()`` on the committed table at any
-    time, with the classic one-sided bound (never an underestimate);
-    state is at most ``depth * width`` rows forever.
-
-    Completes the maintained-sketch family: StreamingHLL answers
-    "how many distinct", StreamingTopK "which tokens are heaviest",
-    StreamingCountMin "how often does THIS token occur" for tokens chosen
-    after the fact — the query SpaceSaving cannot answer once a token is
-    evicted.
-
-    Exactly-once: sum-merge is NOT idempotent, so replay safety rests
-    entirely on ``commit_upsert(batch_id)``'s replay guard (a replayed
-    batch id is skipped before any arithmetic) — the property
-    tests/test_streaming_cm.py pins by re-feeding a committed batch.
-    """
-
-    def __init__(self, table, depth: int = 4, width: int = 1024) -> None:
-        if sorted(table.pk) != ["bucket", "row"]:
-            raise ValueError("counter table pk must be ['row', 'bucket']")
-        self.table = table
-        self.depth = int(depth)
-        self.width = int(width)
-
-    def apply_batch(self, df: DataFrame, value: str, batch_id: str) -> bool:
-        """Sum-merge one micro-batch's counter matrix into the table."""
-        if str(batch_id) in self.table.committed_batches():
-            return False
-        batch = countmin_counters(df, value, self.depth, self.width)
-        try:
-            current = self.table.read(df.sparkSession).select(
-                "row", "bucket", F.col("counter").alias("_old")
-            )
-        except FileNotFoundError:
-            current = None
-        if current is not None:
-            batch = batch.join(current, ["row", "bucket"], "left").select(
-                "row",
-                "bucket",
-                (
-                    F.col("counter") + F.coalesce(F.col("_old"), F.lit(0))
-                ).alias("counter"),
-            )
-        return self.table.commit_upsert(batch, str(batch_id))
-
-    def start(self, stream: DataFrame, value: str, checkpoint: str, **trigger):
-        """Maintain the sketch from a streaming DataFrame."""
-        return _start_sketch_stream(
-            lambda df, bid: self.apply_batch(df, value, str(bid)),
-            stream, checkpoint, **trigger,
-        )
-
-    def estimate(self, spark, candidates: DataFrame, value: str = "token") -> DataFrame:
-        """Frequency estimates for ``candidates`` from the committed
-        counter table: (token, est_count)."""
-        counters = self.table.read(spark).select("row", "bucket", "counter")
-        return _cm_probe(counters, candidates, value, self.depth, self.width)
-
-
-class StreamingHist:
-    """Continuously-maintained quantile sketch: a ``hist_registers``
-    fixed-width histogram lives in an IcebergLite table (pk = [bin]) and
-    each micro-batch SUM-merges its own bins into it — bins are linear
-    like Count-Min counters, so histogram-of-union == sum of per-batch
-    histograms. ``quantiles()`` serves percentile estimates (p50/p95/p99
-    latency-style readouts) from the committed table at any time, with
-    ``hist_quantiles``'s one-bin-width error bound; state is at most
-    (value range / bin width) rows forever, independent of stream volume.
-
-    Completes the maintained-sketch family on the "how is this value
-    DISTRIBUTED" axis, which none of HLL (distincts), SpaceSaving (top
-    tokens), or Count-Min (point frequencies) answers.
-
-    Exactly-once: sum-merge is not idempotent; replay safety rests on
-    ``commit_upsert(batch_id)``'s replay guard, exactly like
-    StreamingCountMin.
-    """
-
-    def __init__(self, table, bin_cents: int = 100) -> None:
-        if sorted(table.pk) != ["bin"]:
-            raise ValueError("histogram table pk must be ['bin']")
-        self.table = table
-        self.bin_cents = int(bin_cents)
-
-    def apply_batch(self, df: DataFrame, value_cents, batch_id: str) -> bool:
-        """Sum-merge one micro-batch's histogram into the table."""
-        if str(batch_id) in self.table.committed_batches():
-            return False
-        batch = hist_registers(df, value_cents, None, self.bin_cents)
-        try:
-            current = self.table.read(df.sparkSession).select(
-                "bin", F.col("c").alias("_old")
-            )
-        except FileNotFoundError:
-            current = None
-        if current is not None:
-            batch = batch.join(current, ["bin"], "left").select(
-                "bin",
-                (F.col("c") + F.coalesce(F.col("_old"), F.lit(0))).alias("c"),
-            )
-        return self.table.commit_upsert(batch, str(batch_id))
-
-    def start(self, stream: DataFrame, value_cents, checkpoint: str, **trigger):
-        """Maintain the histogram from a streaming DataFrame."""
-        return _start_sketch_stream(
-            lambda df, bid: self.apply_batch(df, value_cents, str(bid)),
-            stream, checkpoint, **trigger,
-        )
-
-    def quantiles(self, spark, percents: list[int]) -> DataFrame:
-        """Percentile estimates from the committed histogram table."""
-        return hist_quantiles(
-            self.table.read(spark).select("bin", "c"),
-            None,
-            self.bin_cents,
-            percents,
-        )
 
 
 # ------------------------------------------------------- histogram quantiles
@@ -520,95 +300,6 @@ def hist_quantiles(
             6,
         ).alias("est_cents"),
     )
-
-
-class StreamingTopK:
-    """Bounded heavy-hitters table maintained per micro-batch — the
-    SpaceSaving summary (Metwally et al. 2005) adapted to batch merges.
-
-    State is AT MOST k counter rows in an IcebergLite table, forever,
-    regardless of stream cardinality: each batch's exact token counts
-    (one map-side-combined aggregation) merge into the table; tokens that
-    were evicted earlier re-enter charged with the current minimum counter
-    (``err`` records that overestimate), and the merged set truncates back
-    to the k largest. Invariants (tested): ``est_count`` never
-    underestimates the true count, and ``est_count - err`` never
-    overestimates it — exactly SpaceSaving's guarantee, so any token with
-    true count above the floor is guaranteed present.
-
-    Exactly-once: state swaps through ``commit_overwrite(batch_id)``
-    (static overwrite — the summary IS the table), replay-guarded like
-    every data commit. Estimates are served from the committed table
-    without pausing the stream, like :class:`StreamingHLL`.
-    """
-
-    def __init__(self, table, k: int = 100) -> None:
-        if sorted(table.pk) != ["token"]:
-            raise ValueError("top-k table pk must be ['token']")
-        self.table = table
-        self.k = int(k)
-
-    def apply_batch(self, df: DataFrame, token: Column, batch_id: str) -> bool:
-        if str(batch_id) in self.table.committed_batches():
-            return False
-        spark = df.sparkSession
-        batch = (
-            df.select(token.alias("token"))
-            .where(F.col("token").isNotNull())
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("_c"))
-        )
-        try:
-            cur = self.table.read(spark).select("token", "est_count", "err")
-        except FileNotFoundError:
-            cur = None
-        if cur is None:
-            merged = batch.select(
-                "token",
-                F.col("_c").alias("est_count"),
-                F.lit(0).cast("long").alias("err"),
-            )
-        else:
-            # floor = the summary's minimum counter, but only once the
-            # table is at capacity (an unfilled table evicted nothing, so
-            # unseen tokens enter uncharged). Tiny agg, broadcast back.
-            stats = cur.agg(
-                F.coalesce(F.min("est_count"), F.lit(0)).alias("_mn"),
-                F.count(F.lit(1)).alias("_n"),
-            )
-            floor = F.when(
-                F.col("_n") >= F.lit(self.k), F.col("_mn")
-            ).otherwise(F.lit(0))
-            merged = (
-                batch.join(cur, "token", "full")
-                .crossJoin(F.broadcast(stats))
-                .select(
-                    "token",
-                    (
-                        F.coalesce(F.col("_c"), F.lit(0))
-                        + F.coalesce(F.col("est_count"), floor)
-                    ).cast("long").alias("est_count"),
-                    F.coalesce(
-                        F.col("err"),
-                        floor.cast("long"),
-                    ).cast("long").alias("err"),
-                )
-            )
-        top = merged.orderBy(F.desc("est_count"), "token").limit(self.k)
-        return self.table.commit_overwrite(
-            top, str(batch_id), dynamic=False
-        )
-
-    def start(self, stream: DataFrame, token: Column, checkpoint: str, **trigger):
-        """Maintain the summary from a streaming DataFrame."""
-        return _start_sketch_stream(
-            lambda df, bid: self.apply_batch(df, token, str(bid)),
-            stream, checkpoint, **trigger,
-        )
-
-    def estimate(self, spark) -> DataFrame:
-        """Current top-k estimates from the committed summary table."""
-        return self.table.read(spark).select("token", "est_count", "err")
 
 
 def kmv_set_ops(
@@ -736,415 +427,6 @@ def ams_f2_estimate(
     )
 
 
-class StreamingZScore:
-    """Continuously-maintained anomaly baseline: per-key moment sums
-    (n, s1, s2 — exact BIGINT cents) live in an IcebergLite table and
-    each micro-batch ADDS its own partial moments — moments are the
-    simplest mergeable summary (component-wise addition), so 1000
-    executors aggregate locally, the stream merges |keys| rows per
-    trigger, and state is bounded by key cardinality forever: no
-    watermark, no state store.
-
-    Scoring is decoupled from maintenance (same serve-from-committed
-    discipline as :class:`StreamingHLL`): ``score`` flags any relation's
-    rows against the CURRENT committed baseline — mu/sigma derive from
-    the exact integer sums with the identical IEEE ops as the batch
-    ``anomaly_zscore`` query, so a stream-maintained baseline and a
-    batch-computed one flag the same rows.
-
-    Exactly-once: the merged summary swaps through
-    ``commit_overwrite(batch_id)`` (the summary IS the table),
-    replay-guarded like every data commit.
-    """
-
-    def __init__(self, table, z_ppm: int = 3_000_000) -> None:
-        if sorted(table.pk) != ["key"]:
-            raise ValueError("z-score table pk must be ['key']")
-        if z_ppm <= 0:
-            raise ValueError("z_ppm must be positive")
-        self.table = table
-        self.z_ppm = int(z_ppm)
-
-    def _batch_moments(self, df: DataFrame, key: Column, cents: Column):
-        return (
-            df.select(key.alias("key"), cents.cast("long").alias("_v"))
-            .where(F.col("key").isNotNull() & F.col("_v").isNotNull())
-            .groupBy("key")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("_v").alias("s1"),
-                F.sum(F.col("_v") * F.col("_v")).alias("s2"),
-            )
-        )
-
-    def apply_batch(
-        self, df: DataFrame, key: Column, cents: Column, batch_id: str
-    ) -> bool:
-        if str(batch_id) in self.table.committed_batches():
-            return False
-        spark = df.sparkSession
-        batch = self._batch_moments(df, key, cents)
-        try:
-            cur = self.table.read(spark).select("key", "n", "s1", "s2")
-        except FileNotFoundError:
-            cur = None
-        if cur is not None:
-            merged = (
-                batch.join(cur, "key", "full")
-                .select(
-                    "key",
-                    *(
-                        (
-                            F.coalesce(batch[c], F.lit(0))
-                            + F.coalesce(cur[c], F.lit(0))
-                        ).cast("long").alias(c)
-                        for c in ("n", "s1", "s2")
-                    ),
-                )
-            )
-        else:
-            merged = batch
-        return self.table.commit_overwrite(
-            merged, str(batch_id), dynamic=False
-        )
-
-    def start(
-        self,
-        stream: DataFrame,
-        key: Column,
-        cents: Column,
-        checkpoint: str,
-        **trigger,
-    ):
-        """Maintain the baseline from a streaming DataFrame."""
-        return _start_sketch_stream(
-            lambda df, bid: self.apply_batch(df, key, cents, str(bid)),
-            stream, checkpoint, **trigger,
-        )
-
-    def moments(self, spark) -> DataFrame:
-        return self.table.read(spark).select("key", "n", "s1", "s2")
-
-    def score(
-        self, spark, df: DataFrame, key: Column, cents: Column
-    ) -> DataFrame:
-        """Flag rows whose value sits beyond z_ppm/1e6 sigmas of the
-        committed baseline. Baseline is |keys| rows — broadcast; keys
-        with n < 2 (or zero variance) never flag (sigma undefined)."""
-        base = (
-            self.moments(spark)
-            .where(F.col("n") >= 2)
-            .withColumn("mu", F.col("s1") / F.col("n"))
-            .withColumn(
-                "sigma",
-                F.sqrt(
-                    (F.col("s2") - F.col("s1") * F.col("mu"))
-                    / (F.col("n") - 1)
-                ),
-            )
-            .select("key", "mu", "sigma")
-        )
-        z_lim = F.lit(self.z_ppm / 1e6)
-        rows = df.select(key.alias("key"), cents.cast("long").alias("v"))
-        return (
-            rows.join(F.broadcast(base), "key", "left")
-            .withColumn(
-                "z",
-                F.when(
-                    F.col("sigma") > 0,
-                    F.round((F.col("v") - F.col("mu")) / F.col("sigma"), 6),
-                ),
-            )
-            .withColumn(
-                "is_anomaly",
-                F.coalesce(F.abs(F.col("z")) > z_lim, F.lit(False)),
-            )
-        )
-
-
-class StreamingDrift:
-    """Continuously-maintained distribution-drift monitor: a per-bucket
-    value histogram lives in an IcebergLite table (pk = bucket, merged
-    by addition — mergeable like :class:`StreamingZScore`'s moments) and
-    every micro-batch is scored against the baseline BEFORE being folded
-    in: the exact two-sample KS statistic (``rankstats.ks_test``'s
-    common-denominator integer form) between the committed histogram and
-    the batch's histogram, appended to a drift-log table. The stream
-    thus audits itself: a feed whose value distribution shifts produces
-    a spike in ``d`` at the batch where it happened.
-
-    State is bounded by the bucket domain forever (cents div
-    bucket_width); both tables commit exactly-once. Crash between the
-    two commits is safe: the drift row is computed against the
-    PRE-MERGE baseline, and on replay the drift append is replay-guarded
-    while the histogram merge proceeds — each commit lands exactly once
-    either way. The first batch has no baseline and logs a NULL d.
-    """
-
-    def __init__(self, hist_table, drift_table, bucket_width: int = 100):
-        if sorted(hist_table.pk) != ["bucket"]:
-            raise ValueError("histogram table pk must be ['bucket']")
-        if sorted(drift_table.pk) != ["batch_id"]:
-            raise ValueError("drift table pk must be ['batch_id']")
-        if bucket_width <= 0:
-            raise ValueError("bucket_width must be positive")
-        self.hist = hist_table
-        self.drift = drift_table
-        self.width = int(bucket_width)
-
-    def _histogram(self, df: DataFrame, cents: Column) -> DataFrame:
-        v = cents.cast("long")
-        return (
-            df.select(v.alias("_v"))
-            .where(F.col("_v").isNotNull())
-            .select(
-                (F.col("_v") - F.col("_v") % F.lit(self.width)).alias(
-                    "bucket"
-                )
-            )
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-
-    def _ks(self, spark, base: DataFrame, batch: DataFrame) -> DataFrame:
-        """Exact KS between two (bucket, n) histograms — one row:
-        (n_base, n_batch, d_num, d). Window over distinct buckets."""
-        j = (
-            base.select("bucket", F.col("n").alias("_ca"))
-            .join(
-                batch.select("bucket", F.col("n").alias("_cb")),
-                "bucket",
-                "full",
-            )
-            .select(
-                "bucket",
-                F.coalesce("_ca", F.lit(0)).alias("_ca"),
-                F.coalesce("_cb", F.lit(0)).alias("_cb"),
-            )
-        )
-        w = Window.orderBy("bucket").rangeBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        cum = j.withColumn("_cra", F.sum("_ca").over(w)).withColumn(
-            "_crb", F.sum("_cb").over(w)
-        )
-        tot = j.agg(
-            F.sum("_ca").alias("n_base"), F.sum("_cb").alias("n_batch")
-        )
-        return (
-            cum.crossJoin(F.broadcast(tot))
-            .agg(
-                F.first("n_base").alias("n_base"),
-                F.first("n_batch").alias("n_batch"),
-                F.max(
-                    F.abs(
-                        F.col("_cra") * F.col("n_batch")
-                        - F.col("_crb") * F.col("n_base")
-                    )
-                ).alias("d_num"),
-            )
-            .select(
-                "n_base",
-                "n_batch",
-                "d_num",
-                F.round(
-                    F.try_divide(
-                        F.col("d_num"), F.col("n_base") * F.col("n_batch")
-                    ),
-                    6,
-                ).alias("d"),
-            )
-        )
-
-    def apply_batch(
-        self, df: DataFrame, cents: Column, batch_id: str
-    ) -> bool:
-        if str(batch_id) in self.hist.committed_batches():
-            return False
-        spark = df.sparkSession
-        batch = self._histogram(df, cents)
-        try:
-            base = self.hist.read(spark).select("bucket", "n")
-        except FileNotFoundError:
-            base = None
-        if base is not None:
-            score = self._ks(spark, base, batch).withColumn(
-                "batch_id", F.lit(str(batch_id))
-            )
-        else:
-            score = batch.agg(
-                F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n_batch")
-            ).select(
-                F.lit(0).cast("long").alias("n_base"),
-                "n_batch",
-                F.lit(None).cast("long").alias("d_num"),
-                F.lit(None).cast("double").alias("d"),
-                F.lit(str(batch_id)).alias("batch_id"),
-            )
-        # drift row first (computed vs the PRE-merge baseline), then the
-        # merge — both replay-guarded, so a crash between them replays to
-        # the identical final state
-        self.drift.commit_upsert(score, str(batch_id))
-        if base is not None:
-            merged = (
-                batch.join(base.withColumnRenamed("n", "_old"), "bucket", "full")
-                .select(
-                    "bucket",
-                    (
-                        F.coalesce(F.col("n"), F.lit(0))
-                        + F.coalesce(F.col("_old"), F.lit(0))
-                    ).cast("long").alias("n"),
-                )
-            )
-        else:
-            merged = batch
-        return self.hist.commit_overwrite(
-            merged, str(batch_id), dynamic=False
-        )
-
-    def start(self, stream: DataFrame, cents: Column, checkpoint: str, **trigger):
-        """Maintain baseline + drift log from a streaming DataFrame."""
-        return _start_sketch_stream(
-            lambda df, bid: self.apply_batch(df, cents, str(bid)),
-            stream, checkpoint, **trigger,
-        )
-
-    def drift_log(self, spark) -> DataFrame:
-        return self.drift.read(spark).select(
-            "batch_id", "n_base", "n_batch", "d_num", "d"
-        )
-
-
-class StreamingOHLC:
-    """Continuously-maintained OHLC bars: per (key, bucket) candles live
-    in an IcebergLite table and each micro-batch merges its own partial
-    bars — OHLC is a textbook mergeable aggregate once open/close carry
-    their timestamps:
-
-        open  := value at the smaller (first_eu, first_o)
-        close := value at the larger  (last_eu, last_o)
-        high/low/n := max / min / sum
-
-    so late or out-of-order events land in their bar exactly as a batch
-    recompute would place them (stream == batch parity is the pytest
-    gate). State is bounded by |keys| x |buckets|; commits are
-    replay-guarded equality-upserts on (key, bucket_us) — the same
-    serve-from-committed discipline as :class:`StreamingHLL`.
-    """
-
-    def __init__(self, table, step_us: int) -> None:
-        if sorted(table.pk) != ["bucket_us", "key"]:
-            raise ValueError("OHLC table pk must be ['key', 'bucket_us']")
-        if step_us <= 0:
-            raise ValueError("step_us must be positive")
-        self.table = table
-        self.step_us = int(step_us)
-
-    _COLS = [
-        "key", "bucket_us", "first_eu", "first_o", "open_cents",
-        "last_eu", "last_o", "close_cents", "high_cents", "low_cents", "n",
-    ]
-
-    def _bars(self, df: DataFrame, key, ts, order, cents) -> DataFrame:
-        tsc = ts.cast("timestamp")
-        eu = F.unix_micros(tsc)
-        base = df.select(
-            key.alias("key"),
-            (
-                F.unix_micros(tsc)
-                - F.unix_micros(tsc) % F.lit(self.step_us)
-            ).alias("bucket_us"),
-            eu.alias("_eu"),
-            order.cast("long").alias("_o"),
-            cents.cast("long").alias("_v"),
-        )
-        # min_by/max_by on a (eu, o) struct: lexicographic struct ordering
-        # IS the event total order, so partial bars merge associatively
-        tie = F.struct(F.col("_eu"), F.col("_o"))
-        return base.groupBy("key", "bucket_us").agg(
-            F.min("_eu").alias("first_eu"),
-            F.min_by(F.col("_o"), tie).alias("first_o"),
-            F.min_by(F.col("_v"), tie).alias("open_cents"),
-            F.max("_eu").alias("last_eu"),
-            F.max_by(F.col("_o"), tie).alias("last_o"),
-            F.max_by(F.col("_v"), tie).alias("close_cents"),
-            F.max("_v").alias("high_cents"),
-            F.min("_v").alias("low_cents"),
-            F.count(F.lit(1)).alias("n"),
-        )
-
-    def apply_batch(self, df: DataFrame, key, ts, order, cents, batch_id) -> bool:
-        if str(batch_id) in self.table.committed_batches():
-            return False
-        spark = df.sparkSession
-        batch = self._bars(df, key, ts, order, cents)
-        try:
-            cur = self.table.read(spark).select(*self._COLS)
-        except FileNotFoundError:
-            cur = None
-        if cur is not None:
-            # merge only the touched bars: existing side semi-filtered by
-            # the batch's (key, bucket) set, then candle-merge
-            b = batch.select(
-                *[F.col(c).alias("b_" + c) for c in self._COLS]
-            )
-            j = b.join(
-                cur,
-                (F.col("b_key") == F.col("key"))
-                & (F.col("b_bucket_us") == F.col("bucket_us")),
-                "left",
-            )
-            first_is_b = F.col("first_eu").isNull() | (
-                F.struct(F.col("b_first_eu"), F.col("b_first_o"))
-                < F.struct(F.col("first_eu"), F.col("first_o"))
-            )
-            last_is_b = F.col("last_eu").isNull() | (
-                F.struct(F.col("b_last_eu"), F.col("b_last_o"))
-                > F.struct(F.col("last_eu"), F.col("last_o"))
-            )
-            merged = j.select(
-                F.col("b_key").alias("key"),
-                F.col("b_bucket_us").alias("bucket_us"),
-                F.when(first_is_b, F.col("b_first_eu"))
-                .otherwise(F.col("first_eu")).alias("first_eu"),
-                F.when(first_is_b, F.col("b_first_o"))
-                .otherwise(F.col("first_o")).alias("first_o"),
-                F.when(first_is_b, F.col("b_open_cents"))
-                .otherwise(F.col("open_cents")).alias("open_cents"),
-                F.when(last_is_b, F.col("b_last_eu"))
-                .otherwise(F.col("last_eu")).alias("last_eu"),
-                F.when(last_is_b, F.col("b_last_o"))
-                .otherwise(F.col("last_o")).alias("last_o"),
-                F.when(last_is_b, F.col("b_close_cents"))
-                .otherwise(F.col("close_cents")).alias("close_cents"),
-                F.greatest(
-                    F.col("b_high_cents"), F.coalesce(F.col("high_cents"), F.col("b_high_cents"))
-                ).alias("high_cents"),
-                F.least(
-                    F.col("b_low_cents"), F.coalesce(F.col("low_cents"), F.col("b_low_cents"))
-                ).alias("low_cents"),
-                (
-                    F.col("b_n") + F.coalesce(F.col("n"), F.lit(0))
-                ).cast("long").alias("n"),
-            )
-        else:
-            merged = batch
-        return self.table.commit_upsert(merged, str(batch_id))
-
-    def start(self, stream, key, ts, order, cents, checkpoint, **trigger):
-        """Maintain the candles from a streaming DataFrame."""
-        return _start_sketch_stream(
-            lambda df, bid: self.apply_batch(df, key, ts, order, cents, str(bid)),
-            stream, checkpoint, **trigger,
-        )
-
-    def bars(self, spark) -> DataFrame:
-        return self.table.read(spark).select(
-            "key", "bucket_us", "open_cents", "high_cents",
-            "low_cents", "close_cents", "n",
-        )
-
-
 # ------------------------------------------------------ maintained sample
 
 
@@ -1226,9 +508,14 @@ class StreamingSample:
 
     def start(self, stream: DataFrame, checkpoint: str, **trigger):
         """Maintain the sample from a streaming DataFrame."""
-        return _start_sketch_stream(
+        from .pipeline import _start_foreach_batch
+
+        return _start_foreach_batch(
+            stream,
             lambda df, bid: self.apply_batch(df, str(bid)),
-            stream, checkpoint, **trigger,
+            checkpoint,
+            "append",
+            trigger or {"availableNow": True},
         )
 
     def sample(self, spark) -> DataFrame:

@@ -45,7 +45,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType,
     IntegerType,
     LongType,
     StringType,
@@ -357,9 +356,8 @@ def sla_breaches_batch(
     nxt = F.min(
         F.when(F.col("role") == reply_role, F.col("eu"))
     ).over(w)
-    # next_reply_us is the ABSOLVING reply (inside the window) or NULL —
-    # the streaming twin finalizes at the deadline and can never know a
-    # post-deadline reply, so the batch form reports the same thing
+    # next_reply_us is the ABSOLVING reply (inside the window) or NULL: a
+    # reply after the deadline absolves nothing, so it is not reported
     return (
         base.withColumn("_nxt", nxt)
         .where(F.col("role") == trigger_role)
@@ -380,128 +378,3 @@ def sla_breaches_batch(
     )
 
 
-def sla_breaches_stream(
-    turns: DataFrame,
-    sla_us: int,
-    key_col: str = "conv_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    role_col: str = "role",
-    trigger_role: str = "user",
-    reply_role: str = "assistant",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming twin of :func:`sla_breaches_batch`: the absence-within-T
-    pattern as a stateful operator with event-time timeouts — the live
-    SLA monitor (page when a user turn goes unanswered for T).
-
-    Finalize-on-watermark: a trigger turn's verdict emits exactly once,
-    when the watermark passes its deadline (ts + sla) — at that point
-    every in-watermark reply that could absolve it has been seen.
-    State per conversation: pending trigger turns (those whose deadline
-    the watermark hasn't passed) + reply timestamps still inside the
-    relevance horizon (r > watermark − sla; a retained-window argument
-    in the code shows every reply relevant to a pending trigger is
-    kept). Both are O(events within sla + watermark delay). An
-    event-time timeout re-arms at the earliest pending deadline so a
-    silent stream still emits its breaches. Late-beyond-watermark rows
-    are dropped — the repo-wide policy (windows.py docstring).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from .windows import with_watermark
-
-    events = with_watermark(turns, ts_col, watermark_delay)
-    key_field = [
-        f for f in events.schema.fields if f.name == key_col
-    ][0]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField(id_col, LongType()),
-            StructField("ts_us", LongType()),
-            StructField("deadline_us", LongType()),
-            StructField("next_reply_us", LongType()),
-            StructField("breached", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("pend_json", StringType()),
-            StructField("replies_json", StringType()),
-        ]
-    )
-    sla = int(sla_us)
-
-    def _unpack(state):
-        if not state.exists:
-            return [], []
-        pj, rj = state.get
-        return [tuple(x) for x in json.loads(pj)], json.loads(rj)
-
-    def fn(key, pdfs, state: GroupState):
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        pend, replies = _unpack(state)
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                us = (
-                    pd.to_datetime(pdf[ts_col]).astype("int64") // 1000
-                ).tolist()
-                ids = pdf[id_col].astype("int64").tolist()
-                roles = pdf[role_col].tolist()
-                for u, i, r in zip(us, ids, roles):
-                    if u <= wm_us:
-                        continue  # late-beyond-watermark: dropped
-                    if r == trigger_role:
-                        pend.append((u, i))
-                    elif r == reply_role:
-                        replies.append(u)
-        pend.sort()
-        out, remain = [], []
-        for u, i in pend:
-            if u + sla <= wm_us:
-                within = [r for r in replies if u < r <= u + sla]
-                nxt = min(within) if within else None
-                out.append((i, u, u + sla, nxt, nxt is None))
-            else:
-                remain.append((u, i))
-        # replies stay relevant while some pending trigger's window can
-        # still reach them: r > wm - sla covers every remaining trigger
-        # (u > wm - sla for all pending u, and relevant r > u)
-        replies = [r for r in replies if r > wm_us - sla]
-        state.update(
-            (
-                json.dumps([[u, i] for u, i in remain]),
-                json.dumps(replies),
-            )
-        )
-        if remain:
-            state.setTimeoutTimestamp(
-                max(
-                    (remain[0][0] + sla) // 1000,
-                    state.getCurrentWatermarkMs() + 1,
-                )
-            )
-        if out:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(out),
-                    id_col: [i for i, *_ in out],
-                    "ts_us": [u for _, u, *_ in out],
-                    "deadline_us": [d for _, _, d, *_ in out],
-                    "next_reply_us": pd.array(
-                        [n for *_, n, _ in out], dtype="Int64"
-                    ),
-                    "breached": [b for *_, b in out],
-                }
-            )
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )

@@ -480,135 +480,6 @@ def debounce(
     )
 
 
-def debounce_stream(
-    events: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    min_gap_us: int = 60_000_000,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming twin of ``debounce``: the kept-anchor throttle as a
-    stateful operator (``applyInPandasWithState``, event-time timeouts).
-
-    Finalize-on-watermark semantics: an event's keep/drop decision is
-    emitted exactly once, when the watermark passes its timestamp — at
-    that point every earlier event has either been processed or is
-    late-beyond-watermark (dropped, the documented policy), so the anchor
-    recurrence sees the same event order as the batch operator and the
-    two agree row-for-row on in-watermark data (pytest asserts stream ==
-    batch on the same input). Buffered not-yet-final events re-arm an
-    event-time timeout at their earliest timestamp; the per-key anchor
-    (last kept ts) persists after the buffer drains so a throttle window
-    spanning micro-batches still holds.
-
-    State per key = O(events inside the watermark delay), exactly the
-    bound every stateful op in this repo carries; the anchor itself is a
-    single BIGINT.
-    """
-    import json as _json
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import (
-        GroupState,
-        GroupStateTimeout,
-    )
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from .windows import with_watermark
-
-    events = with_watermark(events, ts_col, watermark_delay)
-    key_fields = [
-        StructField(f.name, f.dataType)
-        for f in events.schema.fields
-        if f.name in keys
-    ]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField(id_col, LongType()),
-            StructField("ts_us", LongType()),
-            StructField("kept", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("last", LongType()),
-            StructField("us_json", StringType()),
-            StructField("eid_json", StringType()),
-        ]
-    )
-
-    def _unpack(state):
-        if not state.exists:
-            return -1, [], []
-        last, us_json, eid_json = state.get
-        return last, _json.loads(us_json), _json.loads(eid_json)
-
-    def _emit(key, finalized):
-        rows = {
-            f.name: [k] * len(finalized)
-            for f, k in zip(key_fields, key)
-        }
-        rows[id_col] = [e for _, e, _ in finalized]
-        rows["ts_us"] = [u for u, _, _ in finalized]
-        rows["kept"] = [k for _, _, k in finalized]
-        return pd.DataFrame(rows)
-
-    def fn(key, pdfs, state: GroupState):
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        last, us, eid = _unpack(state)
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                new_us = (
-                    pd.to_datetime(pdf[ts_col]).astype("int64") // 1000
-                ).tolist()
-                new_eid = pdf[id_col].astype("int64").tolist()
-                for u, e in zip(new_us, new_eid):
-                    if u > wm_us:  # late-beyond-watermark: dropped
-                        us.append(u)
-                        eid.append(e)
-        pending = sorted(zip(us, eid))
-        finalized, remain = [], []
-        for u, e in pending:
-            if u <= wm_us:
-                kept = last < 0 or u - last >= min_gap_us
-                if kept:
-                    last = u
-                finalized.append((u, e, kept))
-            else:
-                remain.append((u, e))
-        state.update(
-            (
-                last,
-                _json.dumps([u for u, _ in remain]),
-                _json.dumps([e for _, e in remain]),
-            )
-        )
-        if remain:
-            state.setTimeoutTimestamp(
-                max(remain[0][0] // 1000, state.getCurrentWatermarkMs() + 1)
-            )
-        if finalized:
-            yield _emit(key, finalized)
-
-    return events.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 def autocorr(
     resampled: DataFrame,
     keys: list[str],
@@ -798,144 +669,6 @@ def window_funnel(
         F.expr("size(filter(_anchors, s -> s >= 0))")
         .cast("int")
         .alias("funnel_depth"),
-    )
-
-
-def window_funnel_stream(
-    events: DataFrame,
-    steps: list[str],
-    window_us: int,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming twin of :func:`window_funnel`: live conversion-depth
-    tracking as a stateful operator (``applyInPandasWithState``,
-    event-time timeouts) — the CEP deployment of the funnel, emitting one
-    row per (key, depth) the moment a user FIRST reaches each funnel
-    level, instead of a batch recompute.
-
-    Finalize-on-watermark (the ``debounce_stream`` contract): events are
-    buffered until the watermark passes them, then folded in (ts, id)
-    order through the same chain-anchor recurrence as the batch operator
-    — so on in-watermark data the stream's deepest emitted level per key
-    equals the batch ``funnel_depth`` exactly (pytest asserts parity).
-    Events arriving later than the watermark are dropped (documented
-    policy); buffered events re-arm an event-time timeout.
-
-    State per key = K chain anchors (BIGINTs) + the in-watermark-delay
-    event buffer — the same O(delay) bound as every stateful op here.
-
-    Output (append): (key, depth:int, at_us:bigint) — depth levels are
-    emitted at most once per key, in increasing order.
-    """
-    import json as _json
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import (
-        GroupState,
-        GroupStateTimeout,
-    )
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from .windows import with_watermark
-
-    if not steps:
-        raise ValueError("steps must be non-empty")
-    n_steps = len(steps)
-    step_idx = {s: i + 1 for i, s in enumerate(steps)}
-    w_us = int(window_us)
-
-    events = with_watermark(events, ts_col, watermark_delay).where(
-        F.col(type_col).isin(list(steps))
-    )
-    key_field = [f for f in events.schema.fields if f.name == key][0]
-    out_schema = StructType(
-        [
-            StructField(key, key_field.dataType),
-            StructField("depth", IntegerType()),
-            StructField("at_us", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("anchors_json", StringType()),
-            StructField("emitted", IntegerType()),
-            StructField("buf_json", StringType()),
-        ]
-    )
-
-    def _unpack(state):
-        if not state.exists:
-            return [-1] * n_steps, 0, []
-        anchors_json, emitted, buf_json = state.get
-        return _json.loads(anchors_json), emitted, [
-            tuple(r) for r in _json.loads(buf_json)
-        ]
-
-    def fn(key_tuple, pdfs, state: GroupState):
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        anchors, emitted, buf = _unpack(state)
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                us_col = (
-                    pd.to_datetime(pdf[ts_col]).astype("int64") // 1000
-                ).tolist()
-                eids = pdf[id_col].astype("int64").tolist()
-                ks = [step_idx[t] for t in pdf[type_col].tolist()]
-                for u, e, k in zip(us_col, eids, ks):
-                    if u > wm_us:  # not yet final; late-beyond-wm dropped
-                        buf.append((u, e, k))
-        buf.sort()
-        out, remain = [], []
-        for u, e, k in buf:
-            if u <= wm_us:
-                if k == 1:
-                    anchors[0] = max(anchors[0], u)
-                elif anchors[k - 2] >= 0 and u - anchors[k - 2] <= w_us:
-                    anchors[k - 1] = max(anchors[k - 1], anchors[k - 2])
-                depth = 0
-                for a in anchors:
-                    if a < 0:
-                        break
-                    depth += 1
-                while emitted < depth:
-                    emitted += 1
-                    out.append((emitted, u))
-            else:
-                remain.append((u, e, k))
-        state.update(
-            (_json.dumps(anchors), emitted, _json.dumps(remain))
-        )
-        if remain:
-            state.setTimeoutTimestamp(
-                max(remain[0][0] // 1000, state.getCurrentWatermarkMs() + 1)
-            )
-        if out:
-            yield pd.DataFrame(
-                {
-                    key: [key_tuple[0]] * len(out),
-                    "depth": [d for d, _ in out],
-                    "at_us": [u for _, u in out],
-                }
-            )
-
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 

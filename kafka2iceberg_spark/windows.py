@@ -514,61 +514,6 @@ def range_join_within(
     )
 
 
-def interval_join_stream(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    interval_sec: int,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming interval join (Flink IntervalJoin analogue): pairs with
-    ``left_ts < right_ts <= left_ts + interval_sec`` sharing the ``on``
-    keys, as a native Spark stream-stream inner join.
-
-    In streaming no banding is needed: the time-range join condition plus
-    both sides' watermarks bound each side's state store — Spark retains
-    a left row only until the watermark passes ``left_ts + interval`` and
-    a right row until its own watermark, exactly the state Flink's
-    IntervalJoin keeps. Matches emit eagerly (inner join), the range
-    condition prunes state continuously, and the output schema matches
-    the batch ``range_join_within`` (overlapping non-key columns suffixed
-    ``_l``/``_r``) so batch and streaming results are directly comparable
-    — tested for parity.
-    """
-    overlap = set(left.columns) & set(right.columns) - set(on)
-
-    def _side(df, ts_col, suffix):
-        out = df.select(
-            *[F.col(k).alias(f"{k}{suffix}__key") for k in on],
-            *[
-                F.col(c).alias(f"{c}{suffix}" if c in overlap else c)
-                for c in df.columns
-                if c not in on
-            ],
-        )
-        t = f"{ts_col}{suffix}" if ts_col in overlap else ts_col
-        return with_watermark(out, t, watermark_delay), t
-
-    lw, lt = _side(left, left_ts, "_l")
-    rw, rt = _side(right, right_ts, "_r")
-    cond = (
-        (F.col(rt) > F.col(lt))
-        & (
-            F.col(rt)
-            <= F.col(lt) + F.expr(f"INTERVAL {interval_sec} SECONDS")
-        )
-    )
-    for k in on:
-        cond = cond & (F.col(f"{k}_l__key") == F.col(f"{k}_r__key"))
-    return (
-        lw.join(rw, cond, "inner")
-        .withColumnsRenamed({f"{k}_l__key": k for k in on})
-        .drop(*[f"{k}_r__key" for k in on])
-    )
-
-
 def multitouch_attribution(
     touches: DataFrame,
     conversions: DataFrame,
@@ -783,8 +728,7 @@ def quota_admit(
     the quota windows are embarrassingly parallel across keys.
 
     Output: every input row's (key, tiebreak, ts_us, window_us,
-    admitted). ``quota_stream`` is the live twin (bounded state,
-    finalize-on-watermark) and matches this row-for-row.
+    admitted).
     """
     from .timeseries import _bucket_us
 
@@ -819,123 +763,6 @@ def _interval_us(spec: str) -> int:
         "days": 86_400_000_000,
     }[unit]
     return int(n) * mult
-
-
-def quota_stream(
-    events: DataFrame,
-    key: str,
-    ts_col: str,
-    window: str,
-    quota: int,
-    tiebreak: str,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming twin of ``quota_admit``: live admission control with
-    state bounded at ``quota`` rows per open window, regardless of how
-    hard a hot key floods it.
-
-    The trick is that rejection is MONOTONE: a row is rejected exactly
-    when ``quota`` rows with smaller (ts, tiebreak) exist in its window,
-    and that set only ever grows — so the operator keeps just the
-    ``quota`` smallest rows buffered per open window, emits an eager
-    ``admitted=false`` verdict the moment a row arrives (or is evicted
-    by a smaller-ts arrival) past the cutoff, and emits the buffered
-    survivors as ``admitted=true`` when the watermark passes the window
-    end (from then on nothing in-watermark can evict them). A flood of
-    N rows into one window costs O(N) verdicts but holds O(quota) state
-    — the degenerate hot key is exactly the case the cap exists for.
-
-    Late-beyond-watermark rows are dropped (the repo's shared policy);
-    on in-watermark data the emitted verdicts equal ``quota_admit``
-    row-for-row (pytest-pinned). Output schema matches the batch twin.
-    """
-    import bisect
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    dur_us = _interval_us(window)
-    events = with_watermark(events, ts_col, watermark_delay)
-    key_field = [f for f in events.schema.fields if f.name == key][0]
-    tie_field = [f for f in events.schema.fields if f.name == tiebreak][0]
-    out_schema = StructType(
-        [
-            StructField(key, key_field.dataType),
-            StructField(tiebreak, tie_field.dataType),
-            StructField("ts_us", LongType()),
-            StructField("window_us", LongType()),
-            StructField("admitted", BooleanType()),
-        ]
-    )
-    state_schema = StructType([StructField("buf_json", StringType())])
-
-    import json as _json
-
-    def fn(kt, pdfs, state: GroupState):
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        bufs: dict = (
-            _json.loads(state.get[0]) if state.exists else {}
-        )  # window_us(str) -> sorted [[ts_us, tiebreak], ...] capped at quota
-        out = []
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                us = (
-                    pd.to_datetime(pdf[ts_col]).astype("int64") // 1000
-                ).tolist()
-                for u, t in zip(us, pdf[tiebreak].tolist()):
-                    if u <= wm_us:
-                        continue  # late-beyond-watermark: dropped
-                    wus = u - u % dur_us
-                    buf = bufs.setdefault(str(wus), [])
-                    bisect.insort(buf, [u, t])
-                    if len(buf) > quota:
-                        eu, et = buf.pop()  # evicted: rejected forever
-                        out.append((et, eu, wus, False))
-        closed = [
-            w for w in bufs if int(w) + dur_us <= wm_us
-        ]
-        for wus in closed:
-            for u, t in bufs.pop(wus):
-                out.append((t, u, int(wus), True))
-        if bufs:
-            state.update((_json.dumps(bufs),))
-            next_close = min(int(w) + dur_us for w in bufs)
-            state.setTimeoutTimestamp(
-                max(next_close // 1000, state.getCurrentWatermarkMs() + 1)
-            )
-        elif state.exists:
-            # all windows closed: drop the key's state row entirely —
-            # otherwise every key ever seen leaves an empty '{}' entry in
-            # the store forever (state must be O(open windows), not
-            # O(distinct keys ever))
-            state.remove()
-        if out:
-            yield pd.DataFrame(
-                {
-                    key: [kt[0]] * len(out),
-                    tiebreak: [t for t, *_ in out],
-                    "ts_us": [u for _, u, _, _ in out],
-                    "window_us": [w for _, _, w, _ in out],
-                    "admitted": [a for *_, a in out],
-                }
-            )
-
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
 
 
 def gap_sensitivity(

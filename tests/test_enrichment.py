@@ -1,50 +1,13 @@
-"""Streaming dimension enrichment (Flink broadcast-state analogue).
-
-pipeline.start_enriched_sink re-reads the dimension at its current snapshot
-every micro-batch: dim upserts landing between batches are visible to the
-next batch with no stream restart (processing-time temporal join), while
-already-committed facts keep the dimension version current at THEIR ingest
-time. Unmatched facts surface with NULL enrichment, never dropped.
+"""Dimension enrichment (Flink broadcast-state analogue):
+pipeline.enrich_with_dim broadcast-LEFT-joins a dimension into the facts.
+Unmatched facts surface with NULL enrichment, never dropped.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
-from pyspark.sql import functions as F
-
-from kafka2iceberg_spark.gen import GenConfig, write_stream_files
-from kafka2iceberg_spark.ingest import parse
-from kafka2iceberg_spark.pipeline import (
-    enrich_with_dim,
-    file_broker_stream,
-    start_enriched_sink,
-)
-from kafka2iceberg_spark.schema import transcript_task
-from kafka2iceberg_spark.sink import IcebergLite
+from kafka2iceberg_spark.pipeline import enrich_with_dim
 
 TOOLS = ["search", "python", "browser", "calculator"]
-
-
-def _envelope_file(path: str, rows: list[dict], offset0: int) -> None:
-    with open(path, "w") as fh:
-        for i, row in enumerate(rows):
-            env = {
-                "data": [row],
-                "database": "chat",
-                "table": "transcripts",
-                "type": "INSERT",
-                "isDdl": False,
-                "ts": 1725184800000,
-                "es": 1725184800000,
-                "old": None,
-                "pkNames": ["conv_id", "turn_idx"],
-                "sql": "",
-                "_offset": offset0 + i,
-                "_partition": 0,
-            }
-            fh.write(json.dumps(env, separators=(",", ":")) + "\n")
 
 
 def _dim_rows(spark, pairs):
@@ -61,89 +24,3 @@ def test_enrich_with_dim_left_join_and_prefix(spark):
         facts, dim, on="tool"
     ).collect()}
     assert out == {"c1": "team_v1", "c2": None, "c3": None}
-
-
-def test_enriched_sink_refreshes_dim_between_batches(spark, tmp_path):
-    broker = str(tmp_path / "broker")
-    paths = write_stream_files(
-        GenConfig(
-            n_convs=4,
-            turns_per_conv=8,
-            mega_convs=0,
-            dup_fraction=0.0,
-            delete_fraction=0.0,
-        ),
-        broker,
-        files=1,
-    )
-    os.utime(paths[0], (1_000_000, 1_000_000))
-
-    dim = IcebergLite(str(tmp_path / "dim"), pk=["tool"], partition_field=None)
-    dim.commit_upsert(_dim_rows(spark, [(t, "team_v1") for t in TOOLS]), "dim-0")
-
-    spec = transcript_task()
-    out = IcebergLite(str(tmp_path / "out"), pk=[], partition_field=None)
-    ck = str(tmp_path / "ck")
-
-    def run_once():
-        raw = file_broker_stream(spark, broker, max_files_per_trigger=10)
-        q = start_enriched_sink(
-            parse(raw, spec), dim, out, ck, on="tool",
-            trigger={"availableNow": True},
-        )
-        q.awaitTermination()
-
-    run_once()
-    r1 = out.read(spark)
-    n1 = r1.count()
-    tool_rows = r1.where(F.col("tool").isNotNull())
-    assert tool_rows.count() > 0
-    # every matched row carries the v1 dimension; unmatched rows keep NULL
-    assert tool_rows.where(F.col("dim_owner") != "team_v1").count() == 0
-    assert (
-        r1.where(F.col("tool").isNull() & F.col("dim_owner").isNotNull()).count()
-        == 0
-    )
-
-    # dimension evolves mid-stream: owners change AND a brand-new tool row
-    # appears; then a second batch of envelopes arrives
-    dim.commit_upsert(
-        _dim_rows(
-            spark,
-            [(t, "team_v2") for t in TOOLS] + [("newtool", "team_new")],
-        ),
-        "dim-1",
-    )
-    ts = "2024-09-01 10:00:00"
-    _envelope_file(
-        os.path.join(broker, "zz-batch2.jsonl"),
-        [
-            {"conv_id": "conv_x2", "turn_idx": 0, "role": "user",
-             "text": "hi", "tool": "null", "ts": ts},
-            {"conv_id": "conv_x2", "turn_idx": 1, "role": "tool",
-             "text": "r", "tool": "search", "ts": ts},
-            {"conv_id": "conv_x2", "turn_idx": 2, "role": "tool",
-             "text": "r2", "tool": "newtool", "ts": ts},
-        ],
-        offset0=900_000,
-    )
-    os.utime(os.path.join(broker, "zz-batch2.jsonl"), (1_100_000, 1_100_000))
-
-    run_once()
-    r2 = out.read(spark)
-    assert r2.count() == n1 + 3
-    x2 = {r["turn_idx"]: r["dim_owner"]
-          for r in r2.where("conv_id = 'conv_x2'").collect()}
-    # refreshed owners + the new dim row are visible to the new batch...
-    assert x2 == {0: None, 1: "team_v2", 2: "team_new"}
-    # ...while batch-1 facts keep the enrichment they were ingested with
-    assert (
-        r2.where(
-            (F.col("conv_id") != "conv_x2") & F.col("tool").isNotNull()
-        ).where(F.col("dim_owner") != "team_v1").count()
-        == 0
-    )
-
-    # replay with no new input commits nothing new (batch-id guard)
-    run_once()
-    assert out.read(spark).count() == n1 + 3

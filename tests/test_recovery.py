@@ -191,3 +191,77 @@ def test_pairs_resume_no_duplicates(spark, tmp_path, spec):
     assert got == ref, "resumed pairs run diverges from single-shot"
     keys = [(c, u) for c, u, _, _ in got]
     assert len(keys) == len(set(keys)), "duplicate pair emissions"
+
+
+def _batch_ids(table):
+    return [
+        table.snapshot_at(v).get("batch_id")
+        for v in range(table.current_version() + 1)
+    ]
+
+
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_upsert_sink_retries_after_concurrent_compaction(
+    spark, tmp_path, spec, monkeypatch, strategy
+):
+    """A standalone compaction that links the version the upsert sink's
+    second batch allocated makes that commit lose with CommitConflict; the
+    sink retries the batch on the new head instead of dying, and the table
+    ends identical to an uninterrupted run, each batch committed once."""
+    from perfbench.helpers import content_hash
+
+    staged = write_stream_files(CFG, str(tmp_path / "staged"), files=4)
+    broker = str(tmp_path / "broker")
+    _feed(staged, broker, 4)
+    twin = IcebergLite(str(tmp_path / "twin"), pk=spec.primary_keys)
+    run_ingest_once(spark, broker, spec, twin, str(tmp_path / "twin_ck"),
+                    strategy=strategy)
+
+    tbl = IcebergLite(str(tmp_path / "tbl"), pk=spec.primary_keys)
+    compactor = IcebergLite(tbl.location, pk=spec.primary_keys)
+    link = tbl._write_snapshot
+    rewritten = []
+
+    def racing_link(snap):
+        if snap["batch_id"] == "1" and not rewritten:
+            rewritten.append(
+                compactor.compact(spark, min_files_per_partition=1)
+            )
+        link(snap)
+
+    monkeypatch.setattr(tbl, "_write_snapshot", racing_link)
+    run_ingest_once(spark, broker, spec, tbl, str(tmp_path / "ck"),
+                    strategy=strategy)
+
+    assert rewritten and rewritten[0] > 0  # the compaction really committed
+    assert tbl.snapshot_at(tbl.current_version())["batch_id"] == "1"
+    assert content_hash(tbl.read(spark).collect()) == content_hash(
+        twin.read(spark).collect()
+    )
+    ids = [b for b in _batch_ids(tbl) if b is not None]
+    assert sorted(ids) == sorted(b for b in _batch_ids(twin) if b is not None)
+    assert ids.count("1") == 1
+
+
+def test_upsert_sink_raises_when_every_retry_conflicts(
+    spark, tmp_path, spec, monkeypatch
+):
+    """A conflict that outlasts the bounded retries still fails the query."""
+    from kafka2iceberg_spark.sink import CommitConflict
+
+    staged = write_stream_files(CFG, str(tmp_path / "staged"), files=2)
+    broker = str(tmp_path / "broker")
+    _feed(staged, broker, 2)
+    tbl = IcebergLite(str(tmp_path / "tbl"), pk=spec.primary_keys)
+    tbl.create()
+    tries = []
+
+    def always_conflict(snap):
+        tries.append(snap["version"])
+        raise CommitConflict("lost the race")
+
+    monkeypatch.setattr(tbl, "_write_snapshot", always_conflict)
+    with pytest.raises(Exception, match="CommitConflict"):
+        run_ingest_once(spark, broker, spec, tbl, str(tmp_path / "ck"))
+    assert len(tries) == 4  # the first try and three retries
+    assert tbl.current_version() == 0

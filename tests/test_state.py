@@ -131,6 +131,44 @@ def _stream_parity(spark, tmp_path, rows_by_file):
     return got, batch
 
 
+def test_sla_breaches_batch_hand_computed(spark):
+    """Timeout-pattern CEP with a 2-minute SLA: a reply inside the SLA
+    absolves a user turn and is reported; a reply after the deadline, a
+    tool turn, or silence breaches with no absolving reply."""
+    from pyspark.sql import functions as F
+
+    from kafka2iceberg_spark.state import sla_breaches_batch
+
+    base = "2024-01-01 00:"
+    rows = [
+        ("A", base + "00:00", 0, "user"),
+        ("A", base + "01:00", 1, "assistant"),  # absolves 0
+        ("A", base + "05:00", 2, "user"),  # never answered
+        ("B", base + "00:00", 3, "user"),
+        ("B", base + "03:00", 4, "assistant"),  # after 3's deadline
+        ("B", base + "10:00", 5, "user"),
+        ("B", base + "10:30", 6, "tool"),  # not a reply
+        ("C", base + "00:00", 7, "user"),
+        ("C", base + "01:30", 8, "assistant"),  # absolves 7
+    ]
+    df = spark.createDataFrame(
+        rows, "conv_id string, ts string, event_id long, role string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    got = {
+        r.event_id: (r.ts_us, r.deadline_us, r.next_reply_us, r.breached)
+        for r in sla_breaches_batch(df, sla_us=120_000_000).collect()
+    }
+    t0 = 1_704_067_200_000_000  # 2024-01-01 00:00 UTC
+    minute = 60_000_000
+    assert got == {
+        0: (t0, t0 + 2 * minute, t0 + minute, False),
+        2: (t0 + 5 * minute, t0 + 7 * minute, None, True),
+        3: (t0, t0 + 2 * minute, None, True),
+        5: (t0 + 10 * minute, t0 + 12 * minute, None, True),
+        7: (t0, t0 + 2 * minute, t0 + 90_000_000, False),
+    }
+
+
 def test_stream_matches_batch_pairs(spark, tmp_path):
     rows_by_file = [
         [("c1", 0, "user", "q0"), ("c2", 0, "user", "x0")],

@@ -577,3 +577,39 @@ def test_gap_sensitivity_matches_sessionize_on_generator_data(spark):
     ]:
         real = win.sessionize(t, gap_str).count()
         assert sweep[gap_us] == real, (gap_str, sweep[gap_us], real)
+
+
+def test_quota_admit_hand_computed(spark):
+    """Per (key, 1-hour window) the 3 earliest turns by (ts, tiebreak)
+    are admitted and the rest rejected, whatever the input order: A has 7
+    turns in hour 0 (3 in, 4 out) and 2 in hour 1; B sits exactly at the
+    quota."""
+    from kafka2iceberg_spark.windows import quota_admit
+
+    rows = [("A", i, f"2024-01-01 00:{5 * i + 1:02d}:00") for i in range(7)]
+    rows += [
+        ("A", 100, "2024-01-01 01:10:00"),
+        ("A", 101, "2024-01-01 01:20:00"),
+    ]
+    rows += [("B", i, f"2024-01-01 00:{7 * i + 2:02d}:00") for i in range(3)]
+    shuffled = sorted(rows, key=lambda r: (-r[1], r[0]))
+
+    def verdicts(rs):
+        df = spark.createDataFrame(
+            rs, "conv_id string, turn_idx long, ts string"
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
+        return {
+            (r.conv_id, r.turn_idx): (r.window_us, r.admitted)
+            for r in quota_admit(
+                df, "conv_id", "ts", "1 hour", 3, "turn_idx"
+            ).collect()
+        }
+
+    got = verdicts(rows)
+    assert verdicts(shuffled) == got  # event-time, not arrival, order
+    hour0 = 1_704_067_200_000_000  # 2024-01-01 00:00 UTC
+    assert [got[("A", i)] for i in range(7)] == (
+        [(hour0, True)] * 3 + [(hour0, False)] * 4
+    )
+    assert got[("A", 100)] == got[("A", 101)] == (hour0 + 3_600_000_000, True)
+    assert all(got[("B", i)] == (hour0, True) for i in range(3))

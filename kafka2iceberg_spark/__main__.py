@@ -35,6 +35,7 @@ from .config import (
     task_from_params,
 )
 from .pipeline import (
+    _retry_conflict,
     file_broker_stream,
     kafka_stream,
     parsed_stream,
@@ -131,13 +132,15 @@ def main(argv: list[str] | None = None) -> None:
         # expire_snapshots + remove_orphan_files procedures analogue):
         # compact small files (optionally SORT/Z-order clustered), then
         # expire old snapshots. Runs against the table alone — no broker
-        # source. Scheduling contract: the COMPACTION commit is CAS-
-        # protected (a racing ingest commit surfaces as CommitConflict,
-        # loudly), but EXPIRATION physically deletes files and must not
-        # run concurrently with a live writer — schedule expire-keep runs
+        # source. Scheduling contract: the COMPACTION and RETENTION commits
+        # are CAS-protected and may run beside a live ingest — one that
+        # loses the version race (CommitConflict) re-plans from the new
+        # head and retries, a bounded number of times. EXPIRATION
+        # physically deletes files and must not run concurrently with a
+        # live writer, so it is never retried — schedule expire-keep runs
         # in the ingest job's maintenance.every-batches slot or while the
         # ingest job is stopped (sink.expire_snapshots docstring).
-        rewritten = table.compact(
+        rewritten = _retry_conflict(lambda: table.compact(
             spark,
             min_files_per_partition=int(
                 params.get("maintenance.min-files", "2")
@@ -145,7 +148,7 @@ def main(argv: list[str] | None = None) -> None:
             sort_by=_csv(params, "maintenance.sort-by") or None,
             target_files=int(params.get("maintenance.target-files", "1")),
             zorder_by=_csv(params, "maintenance.zorder-by") or None,
-        )
+        ))
         report = {"partitions_rewritten": rewritten}
         if "maintenance.retention" in params:
             # event-time TTL from the standalone job: drop rows older than
@@ -171,11 +174,13 @@ def main(argv: list[str] | None = None) -> None:
                 cutoff = int(mx) - _interval_us(
                     params["maintenance.retention"]
                 )
-                report["retention"] = table.delete_range(
-                    spark,
-                    ret_col,
-                    hi=_us_to_ts(cutoff),
-                    batch_id=f"retention:{cutoff}",
+                report["retention"] = _retry_conflict(
+                    lambda: table.delete_range(
+                        spark,
+                        ret_col,
+                        hi=_us_to_ts(cutoff),
+                        batch_id=f"retention:{cutoff}",
+                    )
                 ) or "replayed no-op"
         if "maintenance.expire-keep" in params:
             report["expired"] = table.expire_snapshots(

@@ -146,23 +146,6 @@ def pagerank_round_plan(edges: DataFrame) -> DataFrame:
     )
 
 
-def degree_stats(edges: DataFrame) -> DataFrame:
-    """Per-node in/out degree from one pass over each direction — the
-    basic graph profile (skew detection before running anything iterative:
-    a node with 10^7 neighbours wants the salted path)."""
-    outd = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").alias("out_deg")
-    )
-    ind = edges.groupBy(F.col("dst").alias("node")).agg(
-        F.count("*").alias("in_deg")
-    )
-    return outd.join(ind, "node", "full").select(
-        "node",
-        F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-        F.coalesce("in_deg", F.lit(0)).alias("in_deg"),
-    )
-
-
 def butterfly_pairs(
     rel: DataFrame,
     left_col: str = "cust",

@@ -4,11 +4,10 @@ Image/audio/video content rides through the engine as ``binary`` columns with
 a typed metadata struct — Spark's schema, partitioning and Arrow batching all
 work unchanged on bytes. This module makes the *plumbing* real (schemas, blob
 derivation, metadata extraction, batched feature UDFs) while the actual
-codec step is stubbed: the container ships no image/audio libraries, so
-``decode_image``/``decode_audio`` raise ``NotImplementedError`` unless a
-library is importable, and ``fake_features`` provides a deterministic
-byte-level stand-in so the Spark-side dataflow (mapInPandas over Arrow
-batches, partition-preserving, no per-row Python) is fully testable.
+codec step is a deterministic byte-level stand-in (``extract_features``,
+``sample_frames``), so the Spark-side dataflow (mapInPandas over Arrow
+batches, partition-preserving) is fully testable without image/audio
+libraries.
 
 At 100 TB: blobs dominate bytes, so (a) keep them OUT of shuffles — derive
 features first, shuffle features; (b) read with large
@@ -64,34 +63,6 @@ def as_blobs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     )
 
 
-def decode_image(payload: bytes) -> "object":
-    """Real decode — gated on an image library being importable (STUB)."""
-    try:
-        from PIL import Image  # noqa: F401  (not shipped in this container)
-        import io
-
-        return Image.open(io.BytesIO(payload))
-    except ImportError as exc:  # pragma: no cover - container has no PIL
-        raise NotImplementedError(
-            "image decode requires PIL/pillow; install it on the cluster "
-            "image — the Spark-side plumbing (schema/batching/partitioning) "
-            "is codec-agnostic"
-        ) from exc
-
-
-def decode_audio(payload: bytes) -> "object":
-    """Real decode — gated on an audio library being importable (STUB)."""
-    try:
-        import soundfile  # noqa: F401
-        import io
-
-        return soundfile.read(io.BytesIO(payload))
-    except ImportError as exc:  # pragma: no cover
-        raise NotImplementedError(
-            "audio decode requires soundfile; see decode_image note"
-        ) from exc
-
-
 def extract_features(blobs: DataFrame, batch_hint: int | None = None) -> DataFrame:
     """Deterministic byte-level features via mapInPandas (Arrow batches).
 
@@ -134,24 +105,6 @@ def extract_features(blobs: DataFrame, batch_hint: int | None = None) -> DataFra
     return blobs.mapInPandas(fn, schema=FEATURE_SCHEMA)
 
 
-def frame_sample_plan(blobs: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan* (STUB codec): the real operator would
-    mapInPandas-decode and emit (doc_id, frame_idx, frame_payload); here we
-    emit the sampling schedule rows (doc_id, frame_idx) derived from
-    metadata only — the distributed shape of the op without the codec."""
-    est_frames = (F.col("n_bytes") / F.lit(64)).cast("long")
-    return blobs.select(
-        "doc_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(est_frames - 1, F.lit(0)),
-                F.lit(every_n),
-            )
-        ).alias("frame_idx"),
-    )
-
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -169,12 +122,11 @@ def sample_frames(
     """Video frame sampling with a deterministic stand-in codec: the
     payload is treated as a stream of fixed-size ``frame_bytes`` frames;
     every ``every_n``-th frame is extracted and summarized (length,
-    integer mean byte value, head bytes) — the completed version of
-    :func:`frame_sample_plan`: same sampling schedule, but the frames
-    are actually SLICED from the payload inside a mapInPandas over
-    Arrow batches, which is byte-for-byte the dataflow a real decoder
-    plugs into (swap the slicing loop for cv2/av frame extraction; the
-    schema, batching, and partition behavior do not change).
+    integer mean byte value, head bytes). The frames are SLICED from
+    the payload inside a mapInPandas over Arrow batches, which is
+    byte-for-byte the dataflow a real decoder plugs into (swap the
+    slicing loop for cv2/av frame extraction; the schema, batching, and
+    partition behavior do not change).
 
     Per-blob Python work is the codec stand-in (real decoders are also
     per-payload C calls); everything around it is Arrow-batched, and

@@ -14,8 +14,8 @@ floor-to-width).
 
 Spec EVOLUTION (reference parity: Iceberg partition-spec evolution): a
 table may change its spec mid-life; files written under an old spec stay
-valid and readable, new files land under the new spec, and scan planning
-prunes each manifest against the spec that produced it. At 100 TB this is
+valid and readable, new files land under the new spec, and range reads
+skip files by their column stats whichever spec wrote them. At 100 TB this is
 what lets a pipeline move from day- to hour-granularity (or add a bucket
 dimension for a hot key) without an O(table) rewrite.
 
@@ -32,7 +32,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _SPEC_RE = re.compile(
@@ -40,8 +40,7 @@ _SPEC_RE = re.compile(
     r"^\s*(bucket|truncate)\s*\(\s*(\d+)\s*,\s*(\w+)\s*\)\s*$"
 )
 
-# lexicographic order of the formatted value == chronological order, which
-# is what makes range pruning on these transforms a string comparison
+# lexicographic order of the formatted value == chronological order
 _TIME_FMT = {"day": "yyyy-MM-dd", "month": "yyyy-MM", "hour": "yyyy-MM-dd-HH"}
 
 
@@ -136,9 +135,9 @@ def spec_expr(
         if len(spec) > 1:
             # multi-field values are '_'-joined, so '_' inside a field value
             # (identity strings; the null sentinel itself is
-            # '__HIVE_DEFAULT_PARTITION__') would corrupt the split at prune
-            # time. Percent-escape, Iceberg-path style; single-field layouts
-            # stay byte-identical to pre-evolution tables.
+            # '__HIVE_DEFAULT_PARTITION__') would make the value ambiguous
+            # to split. Percent-escape, Iceberg-path style; single-field
+            # layouts stay byte-identical to pre-evolution tables.
             e = F.replace(
                 F.replace(e, F.lit("%"), F.lit("%25")),
                 F.lit("_"),
@@ -161,83 +160,3 @@ _PREFIX_RE = re.compile(r"^s(\d+)-")
 def spec_id_of_pval(pval: str) -> int:
     m = _PREFIX_RE.match(pval)
     return int(m.group(1)) if m else 0
-
-
-def strip_prefix(pval: str) -> str:
-    return _PREFIX_RE.sub("", pval)
-
-
-def unescape_field(v: str) -> str:
-    """Reverse spec_expr's multi-field percent-escaping ('_' and '%')."""
-    return v.replace("%5F", "_").replace("%25", "%")
-
-
-def transform_literal(
-    spark: SparkSession, f: PartitionField, value
-) -> str | None:
-    """Apply ``f``'s transform to a plan-time literal — the residual the
-    pruner compares against manifest partition values. One row through the
-    same Spark expressions that wrote the values, so write path and prune
-    path can never disagree (the plan_scan/_file_stats normalizer lesson)."""
-    if value is None:
-        return None
-    df = spark.range(1).select(F.lit(value).alias(f.source))
-    if f.transform == "truncate" and isinstance(value, int):
-        e = (F.col(f.source) - F.pmod(F.col(f.source), F.lit(f.param))).cast(
-            "string"
-        )
-    else:
-        e = field_expr(f, "\0null\0")
-    out = df.select(e.alias("v")).collect()[0]["v"]
-    return None if out == "\0null\0" else out
-
-
-_ORDERED = {"day", "month", "hour", "truncate", "identity"}
-
-
-def field_may_match(
-    f: PartitionField,
-    field_value: str,
-    lo_t: str | None,
-    hi_t: str | None,
-    null_sentinel: str,
-    numeric: bool = False,
-) -> bool:
-    """Can a partition whose transformed value is ``field_value`` contain
-    rows with lo <= source <= hi (bounds pre-transformed via
-    ``transform_literal``)? Conservative: unknown ⇒ True.
-
-    - time/truncate/identity transforms are ORDER-PRESERVING in their
-      string encodings (dates by construction; integer-sourced
-      truncate/identity compared numerically), so range pruning is a
-      direct comparison;
-    - bucket is order-destroying: only an equality bound (lo == hi)
-      prunes, exactly Iceberg's residual evaluation rule.
-
-    ``numeric`` must be True when the SOURCE COLUMN's bound literals were
-    integers: decimal strings are not lexically ordered ('12' < '9'), so
-    the caller — who still holds the typed bounds — decides, never a
-    regex on the value (a digit-string identity partition of a STRING
-    column must keep lexical order).
-    """
-    if field_value == null_sentinel:
-        return lo_t is None and hi_t is None
-    if f.transform == "bucket":
-        if lo_t is not None and lo_t == hi_t:
-            return field_value == lo_t
-        return True
-    if f.transform not in _ORDERED:
-        return True
-    try:
-        fv, lo_c, hi_c = field_value, lo_t, hi_t
-        if numeric and f.transform in ("truncate", "identity"):
-            fv = int(field_value)
-            lo_c = None if lo_t is None else int(lo_t)
-            hi_c = None if hi_t is None else int(hi_t)
-        if lo_c is not None and fv < lo_c:
-            return False
-        if hi_c is not None and fv > hi_c:
-            return False
-    except (ValueError, TypeError):
-        return True
-    return True

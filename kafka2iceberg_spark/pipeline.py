@@ -375,23 +375,23 @@ def _start_foreach_batch(
     return writer.start()
 
 
-#: Tries at one micro-batch's upsert: the first plus three retries. A
-#: maintenance commit (compaction, expiration) that links the version the
-#: upsert allocated makes it lose with ``CommitConflict``; ``commit_upsert``
-#: re-reads the head and the replay guard on every call, so the whole call
-#: is safe to repeat.
-_UPSERT_TRIES = 4
+#: Tries at one commit that can lose the version race: the first plus
+#: three retries. A concurrent commit (a live ingest against maintenance,
+#: or maintenance against the ingest) that links the allocated version
+#: first makes it lose with ``CommitConflict``.
+_CONFLICT_TRIES = 4
 
 
-def _commit_upsert(
-    table: IcebergLite, batch_df: DataFrame, batch_id: str, strategy: str
-) -> bool:
-    """``table.commit_upsert``, retried on ``CommitConflict``."""
-    for attempt in range(_UPSERT_TRIES):
+def _retry_conflict(fn):
+    """``fn()``, retried on ``CommitConflict``. Only for commits that
+    re-read the head and their replay guard on every call, so that a
+    whole call is safe to repeat: ``commit_upsert``, ``compact`` and a
+    batch-id-guarded ``delete_range``."""
+    for attempt in range(_CONFLICT_TRIES):
         try:
-            return table.commit_upsert(batch_df, batch_id, strategy=strategy)
+            return fn()
         except CommitConflict:
-            if attempt == _UPSERT_TRIES - 1:
+            if attempt == _CONFLICT_TRIES - 1:
                 raise
 
 
@@ -467,10 +467,14 @@ def start_upsert_sink(
                 c = F.col(name).isNotNull()
                 cond = c if cond is None else (cond & c)
             clean = batch_df.filter(cond) if cond is not None else batch_df
-            _commit_upsert(table, clean, str(batch_id), strategy)
+            _retry_conflict(lambda: table.commit_upsert(
+                clean, str(batch_id), strategy=strategy
+            ))
             dead_letter.commit_append(bad, str(batch_id))
         else:
-            _commit_upsert(table, batch_df, str(batch_id), strategy)
+            _retry_conflict(lambda: table.commit_upsert(
+                batch_df, str(batch_id), strategy=strategy
+            ))
         if maintenance_every and (int(batch_id) + 1) % maintenance_every == 0:
             if retention_us:
                 mx = robust_event_max(

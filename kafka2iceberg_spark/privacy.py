@@ -15,8 +15,7 @@ Crash model: deletes run table-by-table under ONE shared ``forget_id``
 replay guard per table — not atomic across tables, and deliberately so:
 erasure is MONOTONE (a half-completed request leaves some tables already
 scrubbed, which is strictly closer to compliance), and re-running the
-same request heals to completion with committed tables as no-ops. The
-verification report is the completion certificate.
+same request heals to completion with committed tables as no-ops.
 """
 
 from __future__ import annotations
@@ -26,9 +25,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "forget_entity",
-    "verify_forgotten",
     "pseudonymize",
-    "pseudonym_map",
 ]
 
 
@@ -61,30 +58,6 @@ def pseudonymize(
     return out
 
 
-def pseudonym_map(
-    df: DataFrame, col: str, salt: str, id_len: int = 16
-) -> DataFrame:
-    """Escrow table for keyed re-identification: the distinct
-    (surrogate, original) mapping for one identifier column. Stored
-    SEPARATELY from the released data (holder of the salt or this table
-    can reverse the pseudonymization; holders of the release alone
-    cannot). One distinct-aggregate shuffle over the identifier domain —
-    O(entities), never O(rows)."""
-    return (
-        df.select(F.col(col).cast("string").alias("original"))
-        .where(F.col("original").isNotNull())
-        .distinct()
-        .select(
-            F.substring(
-                F.md5(F.concat(F.lit(salt + ":"), F.col("original"))),
-                1,
-                id_len,
-            ).alias("surrogate"),
-            "original",
-        )
-    )
-
-
 def forget_entity(
     spark: SparkSession,
     tables: dict,
@@ -115,34 +88,3 @@ def forget_entity(
         report[name] = res or {}
     return report
 
-
-def verify_forgotten(
-    spark: SparkSession,
-    tables: dict,
-    col: str,
-    value,
-) -> DataFrame:
-    """Completion certificate: per table, rows remaining and rows still
-    matching the erased entity (must be 0). One metadata-pruned scan per
-    table — the same manifest stats that planned the delete prove most
-    files can't contain the entity without opening them."""
-    parts = []
-    for name, table in tables.items():
-        df = table.read(spark)
-        parts.append(
-            df.agg(
-                F.lit(name).alias("table"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(
-                    (F.col(col) == F.lit(value)).cast("long")
-                ).alias("n_entity_rows"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select(
-        "table", "n_rows", F.coalesce("n_entity_rows", F.lit(0)).alias(
-            "n_entity_rows"
-        )
-    )

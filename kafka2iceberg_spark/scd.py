@@ -45,7 +45,6 @@ __all__ = [
     "TemporalEnrich",
     "scd2",
     "scd2_apply_batch",
-    "scd2_from_changelog",
 ]
 
 _DEL_SENTINEL = "\x00<deleted>"
@@ -110,45 +109,6 @@ def scd2(
         F.col("_next_ts").isNull().alias("is_current"),
     )
     return out
-
-
-def scd2_from_changelog(
-    change_df: DataFrame,
-    key: list[str],
-    tracked: list[str],
-    change_type_col: str = "_change_type",
-    version_col: str = "_commit_version",
-) -> DataFrame:
-    """Net a table_stream changelog micro-batch into SCD2 change rows.
-
-    An upsert surfaces in the changelog as a delete event (old image) plus
-    an insert event (new image) in the SAME commit — for dimension history
-    that pair is ONE update, not a close-and-reopen. Netting per
-    (key, commit): a commit with an insert event for the key is an update
-    carrying the insert's attributes; a commit with only a delete event is
-    a true tombstone. One hash aggregate on (key, commit) — no window, no
-    second shuffle.
-
-    Intervals are clocked in COMMIT-VERSION time (``ts =
-    timestamp_seconds(_commit_version)``) — the changelog carries no
-    event-time for deletes, and version time is the CDC-native clock
-    (Iceberg/Delta ``VERSION AS OF``). Feed the result to :func:`scd2` or
-    :func:`scd2_apply_batch` with ``order=["ts"]``.
-    """
-    is_ins = F.col(change_type_col) == F.lit("insert")
-    agg = change_df.groupBy(*key, version_col).agg(
-        F.max(
-            F.when(is_ins, F.struct(*[F.col(c) for c in tracked]))
-        ).alias("_ins"),
-        F.max(is_ins.cast("int")).alias("_has_ins"),
-    )
-    return agg.select(
-        *key,
-        *[F.col(f"_ins.{c}").alias(c) for c in tracked],
-        (F.col("_has_ins") == 0).alias("is_del"),
-        F.timestamp_seconds(F.col(version_col)).alias("ts"),
-        F.col(version_col),
-    )
 
 
 def scd2_apply_batch(

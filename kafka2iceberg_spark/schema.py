@@ -1,4 +1,4 @@
-"""Type lattice + task-spec → Spark StructType (reference FieldUtils semantics).
+"""Type lattice + Canal-JSON envelope schema (reference FieldUtils semantics).
 
 Reference type mapping re-expressed (FieldUtils.java:18-68, SURVEY.md §1.2):
   string (fallback) → StringType      bigint/long → LongType
@@ -48,17 +48,6 @@ def spark_type(type_str: str) -> T.DataType:
         return T.DoubleType() if t == "double" else T.FloatType()
     # reference fallback: unknown → string (FieldUtils.java:18-19, 45-46)
     return T.StringType()
-
-
-def struct_type(spec: TaskSpec) -> T.StructType:
-    """Task spec → StructType honoring not-null (intended semantics)."""
-    not_null = set(spec.not_null_cols)
-    return T.StructType(
-        [
-            T.StructField(f.name, spark_type(f.type), f.name not in not_null)
-            for f in spec.ordered_fields
-        ]
-    )
 
 
 # ---------------------------------------------------------------------------

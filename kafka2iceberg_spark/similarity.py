@@ -40,10 +40,6 @@ def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-def cosine(x: Column, y: Column) -> Column:
-    return _dot(x, y) / (F.sqrt(_dot(x, x)) * F.sqrt(_dot(y, y)))
-
-
 def _cosine_topk(
     c: DataFrame, q: DataFrame, k: int, carry: list[str], cond
 ) -> DataFrame:
@@ -271,30 +267,12 @@ def ivf_topk(
     )
 
 
-def lsh_bucket(
-    vec: Column, dim: int, table: int, n_planes: int = 8
-) -> Column:
-    """Bucket id = sign-bit string of projections onto n_planes hyperplanes.
-
-    Pure-expression form (used for small sides / plan inspection); the hot
-    path uses the Arrow-vectorized ``lsh_buckets_udf`` below — one numpy
-    matmul per batch instead of n_planes×dim folded lambda evaluations.
-    """
-    bits = []
-    for pl in range(n_planes):
-        plane = F.array(*[F.lit(v) for v in _hyperplane(table, pl, dim)])
-        proj = _dot(_as_double(vec), plane)
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def lsh_buckets_udf(dim: int, n_tables: int, n_planes: int):
     """pandas UDF: embedding → array of n_tables bucket-id strings.
 
     All hyperplanes stack into one (dim, n_tables·n_planes) matrix; per Arrow
-    batch the projections are a single matmul — the U1-style vectorized path
-    (identical bucket values to lsh_bucket except at measure-zero exact-0
-    projections)."""
+    batch the projections are a single matmul; a bucket id is the sign-bit
+    string of a table's n_planes projections."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -335,7 +313,6 @@ def lsh_topk(
     n_planes: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bucket_impl: str = "arrow",
 ) -> DataFrame:
     """Approximate cosine top-k via random-hyperplane LSH + exact rerank.
 
@@ -356,16 +333,8 @@ def lsh_topk(
     query set is) are then broadcast back against the corpus, so each
     side's vectors are read exactly once and never shuffled.
 
-    ``bucket_impl``: ``"arrow"`` (default) hashes via the vectorized
-    pandas-UDF matmul — one numpy GEMM per Arrow batch. Measured fastest
-    at every scale tried (the GEMM amortizes the Arrow round-trip within
-    one ~10k-row batch); ``"expr"`` computes the same sign buckets as
-    pure column expressions over the inlined plane literals — zero Python
-    workers, but ArrayAggregate/ZipWith lambdas evaluate interpreted
-    per element (~4× slower measured at sf0.1), so it exists for
-    plan-inspection and Python-less deployments, not the hot path.
-    Bucket values are identical except at measure-zero exact-0
-    projections.
+    Buckets come from ``lsh_buckets_udf``: one numpy GEMM per Arrow
+    batch, which amortizes the Arrow round-trip within a ~10k-row batch.
 
     When LSH pays off: per corpus row, bucketing costs n_tables·n_planes
     plane-dots while brute (norms precomputed per row) costs ≈|queries|
@@ -374,10 +343,6 @@ def lsh_topk(
     BENCH_r05.json records this crossover (``ann_crossover``: LSH 0.78×
     brute at 5k corpus vectors, 3.07× at 40k, 6.92× at 160k).
     """
-    if bucket_impl not in ("arrow", "expr"):
-        raise ValueError(
-            f"bucket_impl must be 'arrow' or 'expr', got {bucket_impl!r}"
-        )
     corpus_vecs = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _as_double(F.col(vec_col)).alias("neighbor_e"),
@@ -387,16 +352,7 @@ def lsh_topk(
         _as_double(F.col(vec_col)).alias("query_e"),
     )
 
-    if bucket_impl == "arrow":
-        buckets = lsh_buckets_udf(dim, n_tables, n_planes)
-    else:
-        def buckets(vec_col_: Column) -> Column:
-            return F.array(
-                *[
-                    lsh_bucket(vec_col_, dim, t, n_planes)
-                    for t in range(n_tables)
-                ]
-            )
+    buckets = lsh_buckets_udf(dim, n_tables, n_planes)
 
     def bucket_ids(vecs: DataFrame, role: str) -> DataFrame:
         return vecs.select(

@@ -786,14 +786,13 @@ class IcebergLite:
             return [PS.PartitionField("day", self.partition_field)]
         return []
 
-    def spec_registry(self, snap: dict | None = None) -> tuple[dict[int, list], int]:
+    def spec_registry(self) -> tuple[dict[int, list], int]:
         """(spec_id -> fields) for every spec the table has ever had, plus
         the current default spec id — Iceberg's partition-specs metadata."""
-        if snap is None:
-            try:
-                snap = self.current_snapshot()
-            except FileNotFoundError:
-                snap = {}
+        try:
+            snap = self.current_snapshot()
+        except FileNotFoundError:
+            snap = {}
         reg: dict[int, list] = {0: self._legacy_spec()}
         for sid, js in (snap.get("partition_specs") or {}).items():
             reg[int(sid)] = PS.spec_from_json(js)
@@ -809,8 +808,7 @@ class IcebergLite:
     def evolve_partition_spec(self, fields: list[str]) -> int:
         """Change the table's partition layout WITHOUT rewriting any data
         (Iceberg partition-spec evolution). Existing files stay under their
-        original spec's values; new commits write under the new spec; scan
-        planning prunes each partition against the spec that produced it.
+        original spec's values; new commits write under the new spec.
         Metadata-only commit — O(1) regardless of table size, which is the
         whole point at 100 TB (vs an O(table) re-layout rewrite)."""
         parsed = PS.parse_spec(fields)
@@ -845,92 +843,6 @@ class IcebergLite:
         return F.concat(
             F.lit(PS.pval_prefix(sid)), PS.spec_expr(fields, df, NULL_PARTITION)
         )
-
-    def prune_partitions(
-        self,
-        spark: SparkSession,
-        col: str,
-        lo=None,
-        hi=None,
-        snap: dict | None = None,
-    ) -> dict:
-        """Partition-level pruning across ALL specs the table has lived
-        under: each manifest's partition value is judged against the spec
-        that wrote it (Iceberg residual evaluation). Range bounds prune
-        order-preserving transforms (day/month/hour/truncate/identity);
-        an equality bound (lo == hi) additionally prunes hash buckets.
-        Metadata-only — no file IO."""
-        if snap is None:
-            snap = self.current_snapshot()
-        reg, _ = self.spec_registry(snap)
-        keep: set[str] = set()
-        total = pruned = 0
-        # transformed bounds per (spec_id, field index), evaluated once
-        bounds_cache: dict[tuple[int, int], tuple] = {}
-        for pval in snap["manifests"]:
-            total += 1
-            sid = PS.spec_id_of_pval(pval)
-            fields = reg.get(sid)
-            rel = [
-                (i, f) for i, f in enumerate(fields or []) if f.source == col
-            ]
-            if not fields or not rel or pval == "all":
-                keep.add(pval)  # spec can't prune on this column
-                continue
-            raw = PS.strip_prefix(pval)
-            # multi-field values are '_'-joined with percent-escaped fields
-            # (spec_expr), so the split is unambiguous and reversed here
-            vals = (
-                [raw]
-                if len(fields) == 1
-                else [
-                    PS.unescape_field(v)
-                    for v in raw.split("_", len(fields) - 1)
-                ]
-            )
-            if len(vals) != len(fields):
-                keep.add(pval)
-                continue
-            # integer bounds ⇒ numeric ordering for truncate/identity
-            # values ('12' < '9' lexically); bool excluded (it is an int)
-            numeric = any(
-                isinstance(b, int) and not isinstance(b, bool)
-                for b in (lo, hi)
-            )
-            ok = True
-            for i, f in rel:
-                if (sid, i) not in bounds_cache:
-                    bounds_cache[(sid, i)] = (
-                        PS.transform_literal(spark, f, lo),
-                        PS.transform_literal(spark, f, hi),
-                    )
-                lo_t, hi_t = bounds_cache[(sid, i)]
-                if not PS.field_may_match(
-                    f, vals[i], lo_t, hi_t, NULL_PARTITION, numeric=numeric
-                ):
-                    ok = False
-                    break
-            if ok:
-                keep.add(pval)
-            else:
-                pruned += 1
-        return {"partitions": keep, "total": total, "pruned": pruned}
-
-    def read_partition_range(
-        self, spark: SparkSession, col: str, lo=None, hi=None
-    ) -> DataFrame:
-        """Semantically ``read().where(lo <= col <= hi)``, but partitions
-        whose transformed values cannot intersect the bounds are never
-        listed, let alone read — hidden-partitioning query routing."""
-        plan = self.prune_partitions(spark, col, lo, hi)
-        df = self.read_partitions(spark, plan["partitions"])
-        if df is None:
-            df = self.read(spark).limit(0)
-        if lo is not None:
-            df = df.where(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            df = df.where(F.col(col) <= F.lit(hi))
-        return df
 
     def _write_files(
         self, df: DataFrame, batch_id: str, seq: int = 0
@@ -1455,29 +1367,6 @@ class IcebergLite:
         finally:
             df.unpersist()
 
-    def count_rows(self, version: int | None = None) -> int | None:
-        """Metadata-only COUNT(*): the sum of per-file row counts from the
-        manifests (Iceberg's count pushdown). Returns None — caller falls
-        back to ``read().count()`` — when the count is not provable from
-        metadata alone: outstanding equality deletes (MOR rows may be
-        superseded) or a file missing its row stat. No data IO either way.
-        """
-        snap = (
-            self.current_snapshot()
-            if version is None
-            else self.snapshot_at(version)
-        )
-        if snap.get("delete_manifests"):
-            return None
-        total = 0
-        for files in self.resolve_manifests(snap).values():
-            for f in files:
-                rows = f.get("rows")
-                if rows is None:
-                    return None
-                total += rows
-        return total
-
     def commit_overwrite(
         self, df: DataFrame, batch_id: str, dynamic: bool = True
     ) -> bool:
@@ -1970,44 +1859,13 @@ class IcebergLite:
         )
         return len(affected)
 
-    def read_appends_between(
-        self, spark: SparkSession, from_version: int, to_version: int
-    ) -> DataFrame | None:
-        """Incremental read: rows in data files added by DATA snapshots
-        between two versions (Iceberg incremental append scan analogue).
-
-        Walks the snapshot chain step by step instead of diffing only the
-        endpoints, and skips snapshots with no batch_id (compaction /
-        table-create): files a compaction introduces are rewrites of
-        already-consumed rows, so a consumer whose range spans a compaction
-        does not re-read compacted partitions — the same rule as Iceberg's
-        incremental append scan skipping replace snapshots. Exact for
-        append-only tables; for CoW-upsert (and overwrite) commits the
-        rewritten partitions' files are new by construction, so consumers
-        see the post-merge/post-restatement rows of every partition touched
-        in the range (document downstream accordingly; the streaming source
-        refuses these kinds outright). Returns None when the range added no
-        files.
-
-        Cost: per step, only partitions whose manifest NAME changed are
-        opened — untouched partitions share the same manifest file.
-        """
-        added = self.added_files_between(from_version, to_version)
-        if not added:
-            return None
-        # read the incremental files under the schema committed AT the
-        # range's end, so a consumer sees widened/added columns exactly as
-        # of the version it caught up to
-        return self._read_files(
-            spark, added, self.snapshot_at(to_version)
-        )
-
     def added_files_between(
         self, from_version: int, to_version: int
     ) -> list[str]:
         """Data-file paths added by DATA snapshots in (from, to] — the
-        shared walk behind the incremental batch read and the streaming
-        table source."""
+        walk behind the streaming table source's append scan. Snapshots
+        with no batch_id (compaction, materialize, create) add nothing:
+        their files rewrite rows already added."""
         return [
             p for p, _v in self.added_files_with_versions(
                 from_version, to_version

@@ -16,16 +16,16 @@ Scale/semantics notes:
   producer's file layout; executors read parquet via pyarrow and emit
   Arrow record batches (vectorized end to end, zero per-row Python).
 - Rows are conformed to the table schema AS OF the range end (add-column
-  null-fill + integer/float widening), matching the batch incremental
-  read's evolution semantics.
+  null-fill + integer/float widening), so a consumer catching up across
+  a schema change sees one coherent type.
 - Append-scan semantics, like Iceberg's incremental read: compaction /
   materialize snapshots are skipped (their files are rewrites of
   already-consumed rows). MOR upsert commits stream exactly (their data
   files ARE the batch's rows); CoW upsert commits are REFUSED with a
   clear error (their files rewrite already-streamed rows — Iceberg's
   streaming read refuses overwrite snapshots for the same reason).
-  Equality-DELETE events do not stream (append scan) — a consumer
-  needing full CDC semantics reads the delete files alongside.
+  Equality-DELETE events do not stream in the append scan; a consumer
+  needing full CDC semantics opens the stream with ``changelog=True``.
 - Snapshot expiration must retain at least the consumer's lag (same
   operational rule as Iceberg streaming reads).
 
@@ -39,12 +39,9 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
 )
@@ -196,21 +193,16 @@ class _TableStreamReader(DataSourceStreamReader):
 
 
 class IcebergLiteDataSource(DataSource):
-    """``spark.read[Stream].format("iceberglite").option("location", ...)``.
+    """``spark.readStream.format("iceberglite").option("location", ...)``.
 
-    Streaming options:
+    Streaming only; a batch ``spark.read`` of a table is
+    ``IcebergLite.read``. Options:
       location          table root (required)
       startingVersion   first snapshot version already CONSUMED (exclusive
                         lower bound); 0 replays the table from creation.
                         Default: the current version at stream start
                         ("latest", like Kafka's default).
       changelog         "true" → CDC events (_change_type/_commit_version)
-
-    Batch options (plain ``spark.read`` — see :class:`_TableBatchReader`
-    for the pushdown/file-skipping and MOR-reconciliation contract):
-      location          table root (required)
-      version           time travel to a snapshot version
-      branch            read a named branch/tag head (exclusive w/ version)
     """
 
     @classmethod
@@ -226,19 +218,8 @@ class IcebergLiteDataSource(DataSource):
     def _changelog(self) -> bool:
         return str(self.options.get("changelog", "false")).lower() == "true"
 
-    def _batch_snapshot_args(self) -> tuple[int | None, str | None]:
-        v = self.options.get("version")
-        return (int(v) if v is not None else None, self.options.get("branch"))
-
     def schema(self) -> T.StructType:
-        t = IcebergLite(self._location(), pk=[])
-        version, branch = self._batch_snapshot_args()
-        if version is not None:
-            schema = t.table_schema(t.snapshot_at(version))
-        elif branch is not None:
-            schema = t.table_schema(t.head_snapshot(branch))
-        else:
-            schema = t.table_schema()
+        schema = IcebergLite(self._location(), pk=[]).table_schema()
         if schema is None:
             hint = os.path.join(self._location(), "_schema.json")
             if not os.path.exists(hint):
@@ -266,276 +247,6 @@ class IcebergLiteDataSource(DataSource):
             changelog=self._changelog(),
         )
 
-    def reader(self, schema: T.StructType) -> "_TableBatchReader":
-        version, branch = self._batch_snapshot_args()
-        if self._changelog():
-            # the batch reader scans snapshots, not per-commit events; a
-            # silent fallthrough would emit rows missing the two changelog
-            # columns the declared schema promises (runtime mismatch)
-            raise ValueError(
-                "changelog reads are streaming-only: use "
-                "table_stream(spark, location, starting_version=0, "
-                "changelog=True) and drain with trigger(availableNow=True)"
-            )
-        if version is not None and branch is not None:
-            raise ValueError("pass version OR branch, not both")
-        cls = _TableBatchReader
-        active = SparkSession.getActiveSession()
-        if active is not None and str(
-            active.conf.get(
-                "spark.sql.python.filterPushdown.enabled", "false"
-            )
-        ).lower() == "true":
-            cls = _TableBatchReaderPushdown
-        return cls(self._location(), schema, version, branch)
-
-
-_SEQ_RE_PY = r"/s(\d{8})-"
-
-#: Driver-side cap on the outstanding equality-delete set shipped to read
-#: tasks. MOR delete files are small by design (maintenance folds them in);
-#: a table that blows past this needs materialize_deletes()/compact() — or
-#: the join-based IcebergLite.read — not a bigger broadcast.
-MAX_INLINE_DELETE_ROWS = 200_000
-
-
-def _path_seq(path: str) -> int:
-    import re
-
-    m = re.search(_SEQ_RE_PY, path)
-    return int(m.group(1)) if m else -1
-
-
-class _BatchFilesPartition(InputPartition):
-    def __init__(
-        self,
-        path: str,
-        schema_json: str,
-        pk_names: tuple[str, ...] | None,
-        drop_keys: frozenset | None,
-    ) -> None:
-        self.path = path
-        self.schema_json = schema_json
-        self.pk_names = pk_names
-        self.drop_keys = drop_keys  # equality-delete keys newer than this file
-
-
-class _TableBatchReader(DataSourceReader):
-    """Batch read path: ``spark.read.format("iceberglite")``.
-
-    What the streaming source is to readStream, this is to plain SQL —
-    any committed snapshot (head, ``version`` time travel, or a named
-    ``branch``/tag) queryable with one partition per data file and
-    executor-side Arrow decode, zero per-row Python.
-
-    Two planning features ride the manifest metadata:
-
-    * **Filter pushdown → file skipping** (``pushFilters``): comparison
-      filters on top-level columns tighten per-column scan bounds; every
-      data file whose stats range cannot intersect them is never opened.
-      ALL filters are returned to Spark for post-scan re-application —
-      pruning is a pure file-count optimization, so a partially-pushable
-      predicate can never change results.
-    * **MOR reconciliation without a join**: outstanding equality-delete
-      keys are loaded driver-side (delete files are small by design,
-      capped at MAX_INLINE_DELETE_ROWS) and each read task drops
-      superseded rows of files OLDER than the delete's sequence — the
-      Iceberg v2 read contract, delivered as a per-batch Arrow mask.
-    """
-
-    def __init__(
-        self,
-        location: str,
-        schema: T.StructType,
-        version: int | None,
-        branch: str | None,
-    ) -> None:
-        self._table = IcebergLite(location, pk=[])
-        self._schema = schema
-        self._version = version
-        self._branch = branch
-        self._bounds: dict[str, list] = {}  # col -> [lo, hi] (raw values)
-
-    def _merge_bound(self, col: str, lo=None, hi=None) -> None:
-        norm = IcebergLite._norm_stat_value
-        cur = self._bounds.setdefault(col, [None, None])
-        try:
-            if lo is not None and (
-                cur[0] is None or norm(lo) > norm(cur[0])
-            ):
-                cur[0] = lo
-            if hi is not None and (
-                cur[1] is None or norm(hi) < norm(cur[1])
-            ):
-                cur[1] = hi
-        except TypeError:
-            pass  # incomparable: leave the existing bound
-
-    def _snapshot(self) -> dict:
-        if self._version is not None:
-            return self._table.snapshot_at(self._version)
-        if self._branch is not None:
-            return self._table.head_snapshot(self._branch)
-        return self._table.current_snapshot()
-
-    def _delete_sets(self, snap: dict) -> list[tuple[int, tuple, frozenset]]:
-        """[(delete_seq, pk_names, key rows)] from the outstanding delete
-        files — driver-side metadata+small-data read, capped."""
-        import pyarrow.parquet as pq
-
-        out = []
-        total = 0
-        for ref in snap.get("delete_manifests") or []:
-            for f in self._table._load_manifest(ref):
-                tbl = pq.read_table(f["path"])
-                total += len(tbl)
-                if total > MAX_INLINE_DELETE_ROWS:
-                    raise ValueError(
-                        "outstanding equality-delete set exceeds "
-                        f"{MAX_INLINE_DELETE_ROWS} rows; run "
-                        "materialize_deletes()/compact() on the table or "
-                        "read it via IcebergLite.read (join-based MOR)"
-                    )
-                names = tuple(tbl.column_names)
-                keys = frozenset(
-                    zip(*[tbl.column(n).to_pylist() for n in names])
-                )
-                out.append((_path_seq(f["path"]), names, keys))
-        return out
-
-    def partitions(self) -> list[InputPartition]:
-        snap = self._snapshot()
-        schema = self._table.table_schema(snap) or self._schema
-        schema_json = json.dumps(schema.jsonValue())
-        deletes = self._delete_sets(snap)
-        norm = IcebergLite._norm_stat_value
-        # the applicable delete set depends ONLY on the file's sequence
-        # number, and distinct sequences are O(commits), not O(files):
-        # memoize the suffix unions so planning is O(seqs × delete_rows)
-        # instead of O(files × delete_rows), and every same-seq partition
-        # shares one frozenset object on the driver
-        seq_drop: dict[int, tuple] = {}
-
-        def _drop_for(file_seq: int) -> tuple:
-            if file_seq not in seq_drop:
-                drop: set = set()
-                names: tuple | None = None
-                for dseq, nm, keys in deletes:
-                    if dseq > file_seq:
-                        names = nm
-                        drop |= keys
-                seq_drop[file_seq] = (
-                    names, frozenset(drop) if drop else None
-                )
-            return seq_drop[file_seq]
-
-        parts: list[InputPartition] = []
-        for files in self._table.resolve_manifests(snap).values():
-            for f in files:
-                skip = False
-                for col, (lo, hi) in self._bounds.items():
-                    rng = (f.get("stats") or {}).get(col)
-                    if rng is None:
-                        continue
-                    mn, mx = rng
-                    try:
-                        if lo is not None and mx < norm(lo):
-                            skip = True
-                        if hi is not None and mn > norm(hi):
-                            skip = True
-                    except TypeError:
-                        continue
-                    if skip:
-                        break
-                if skip:
-                    continue
-                pk_names, drop_keys = _drop_for(_path_seq(f["path"]))
-                parts.append(
-                    _BatchFilesPartition(
-                        f["path"], schema_json, pk_names, drop_keys
-                    )
-                )
-        return parts
-
-    def read(self, partition: _BatchFilesPartition):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        target = _arrow_schema(
-            T.StructType.fromJson(json.loads(partition.schema_json))
-        )
-        pf = pq.ParquetFile(partition.path)
-        want = [n for n in target.names if n in pf.schema_arrow.names]
-        for batch in pf.iter_batches(columns=want):
-            out = _conform_arrow_table(pa.Table.from_batches([batch]), target)
-            if partition.drop_keys:
-                cols = [
-                    out.column(n).to_pylist() for n in partition.pk_names
-                ]
-                mask = pa.array(
-                    [k not in partition.drop_keys for k in zip(*cols)],
-                    pa.bool_(),
-                )
-                out = out.filter(mask)
-            yield from out.to_batches()
-
-
-class _TableBatchReaderPushdown(_TableBatchReader):
-    """The pushdown-capable variant. Spark refuses ANY reader that
-    implements ``pushFilters`` while
-    ``spark.sql.python.filterPushdown.enabled`` is false, so the method
-    lives on this subclass and ``IcebergLiteDataSource.reader()`` picks
-    the class from the active session's conf — pushdown kicks in the
-    moment the user enables it, plain reads never break without it."""
-
-    def pushFilters(self, filters):
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        for f in filters:
-            attr = getattr(f, "attribute", None)
-            value = getattr(f, "value", None)
-            if (
-                not isinstance(attr, tuple)
-                or len(attr) != 1
-                or value is None
-            ):
-                continue
-            col = attr[0]
-            # strict bounds used inclusively: a superset of files — safe
-            if isinstance(f, EqualTo):
-                self._merge_bound(col, lo=value, hi=value)
-            elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                self._merge_bound(col, lo=value)
-            elif isinstance(f, (LessThan, LessThanOrEqual)):
-                self._merge_bound(col, hi=value)
-        return filters  # Spark re-applies everything post-scan
-
-
-def table_batch(
-    spark: SparkSession,
-    location: str,
-    version: int | None = None,
-    branch: str | None = None,
-) -> DataFrame:
-    """Convenience: register the source (idempotent) and open a batch read
-    (``spark.read.format("iceberglite")``) — head snapshot by default,
-    ``version`` for time travel, ``branch`` for a named ref. Enable
-    ``spark.sql.python.filterPushdown.enabled`` to get manifest-stats file
-    skipping for pushable predicates."""
-    spark.dataSource.register(IcebergLiteDataSource)
-    reader = spark.read.format(FORMAT_NAME).option("location", location)
-    if version is not None:
-        reader = reader.option("version", str(version))
-    if branch is not None:
-        reader = reader.option("branch", branch)
-    return reader.load()
-
 
 def table_stream(
     spark: SparkSession,
@@ -559,30 +270,3 @@ def table_stream(
         reader = reader.option("changelog", "true")
     return reader.load()
 
-
-def apply_changelog(
-    batch_df: DataFrame, table: IcebergLite, batch_id: str
-) -> bool:
-    """Fold a changelog micro-batch into a downstream replica table.
-
-    Per PK keep the newest event — ordered by ``_commit_version``, insert
-    beating delete WITHIN a version (a MOR upsert's delete only covers
-    OLDER sequences, so its same-version insert survives) — then commit it
-    as an upsert with deletes mapped to ``is_cdc_delete``. Chaining
-    ``table_stream(..., changelog=True)`` through this in a foreachBatch
-    makes the replica converge to the source table exactly, including CDC
-    deletes."""
-    pk = table.pk
-    w = Window.partitionBy(*pk).orderBy(
-        F.col(COMMIT_VERSION_COL).desc(),
-        (F.col(CHANGE_TYPE_COL) == "insert").desc(),
-    )
-    latest = (
-        batch_df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .withColumn(
-            "is_cdc_delete", F.col(CHANGE_TYPE_COL) == F.lit("delete")
-        )
-        .drop("_rn", CHANGE_TYPE_COL, COMMIT_VERSION_COL)
-    )
-    return table.commit_upsert(latest, batch_id)

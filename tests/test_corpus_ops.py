@@ -183,20 +183,6 @@ def test_extract_features_deterministic(spark, docs):
     assert row["byte_entropy_q"] > 0
 
 
-def test_decode_stub_gated(spark):
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(b"\x89PNG...")
-    with pytest.raises(NotImplementedError):
-        mm.decode_audio(b"RIFF...")
-
-
-def test_frame_sample_plan_shape(spark, docs):
-    blobs = mm.as_blobs(docs.where("doc_id = 1"))
-    frames = mm.frame_sample_plan(blobs, every_n=10).collect()
-    assert all(r["frame_idx"] % 10 == 0 for r in frames)
-    assert len(frames) >= 1
-
-
 def test_ivf_recall_vs_brute(spark, emb):
     """IVF with 2 probed cells must recover a solid share of exact top-5;
     with ALL cells probed it must equal brute force exactly."""

@@ -300,19 +300,6 @@ def test_incompatible_change_rejected_at_commit(spark, tmp_path):
     assert t.read(spark).count() == 4
 
 
-def test_incremental_read_promotes_to_range_end_schema(spark, tmp_path):
-    """read_appends_between spanning a widening returns the schema committed
-    at the range END — a catching-up consumer sees one coherent type."""
-    t = IcebergLite(str(tmp_path / "tbl"), pk=[], partition_field="ts")
-    t.commit_append(_wbatch(spark, 0, 3), "0")
-    v1 = t.current_version()
-    t.commit_append(_wbatch(spark, 3, 6), "1")
-    t.commit_append(_wbatch(spark, 6, 9, amount_type="long"), "2")
-    inc = t.read_appends_between(spark, v1, t.current_version())
-    assert dict(inc.dtypes)["amount"] == "bigint"
-    assert {r.turn_idx for r in inc.collect()} == set(range(3, 9))
-
-
 def test_spec_widening_restart_streaming(spark, tmp_path):
     """Upstream ``ALTER TABLE ... MODIFY turn_idx BIGINT`` analogue: the job
     restarts with a widened task spec and the SAME checkpoint/table. The

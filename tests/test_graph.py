@@ -72,12 +72,6 @@ def test_copurchase_edges_bidirectional_no_sinks(spark):
     assert {14, 16, 7, 9} <= srcs
 
 
-def test_degree_stats(spark):
-    e = _edges(spark, [(1, 2), (1, 3), (3, 1)])
-    d = {x["node"]: (x["out_deg"], x["in_deg"]) for x in gr.degree_stats(e).collect()}
-    assert d == {1: (2, 1), 2: (0, 1), 3: (1, 1)}
-
-
 def _undirected(spark, pairs):
     return spark.createDataFrame(pairs, "node_a long, node_b long")
 

@@ -1,4 +1,4 @@
-"""Metadata-only COUNT(*) and atomic (dynamic) overwrite commits."""
+"""Atomic (dynamic and static) overwrite commits."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,22 +28,6 @@ def _day(spark, day, ids, text="x"):
     ).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def test_count_rows_metadata_only(spark, tmp_path):
-    t = IcebergLite(str(tmp_path / "t"), pk=["conv_id", "turn_idx"])
-    t.commit_append(_day(spark, 1, range(10)), "b1")
-    t.commit_append(_day(spark, 2, range(10, 17)), "b2")
-    assert t.count_rows() == 17 == t.read(spark).count()
-    assert t.count_rows(version=1) == 10  # time travel
-    # outstanding MOR deletes -> not provable from metadata
-    dele = _day(spark, 1, [3]).withColumn("is_cdc_delete", F.lit(True))
-    t.commit_upsert(dele, "b3", strategy="mor")
-    assert t.count_rows() is None
-    assert t.read(spark).count() == 16
-    # materializing the deletes makes it metadata-provable again
-    t.materialize_deletes(spark)
-    assert t.count_rows() == 16
-
-
 def test_dynamic_overwrite_replaces_only_touched_partitions(spark, tmp_path):
     t = IcebergLite(str(tmp_path / "t"), pk=["conv_id", "turn_idx"])
     t.commit_append(_day(spark, 1, range(5), "old"), "b1")
@@ -60,7 +44,7 @@ def test_dynamic_overwrite_replaces_only_touched_partitions(spark, tmp_path):
     # replay guard + time travel to the pre-overwrite snapshot
     assert t.commit_overwrite(_day(spark, 1, range(3), "new"), "bf1") is False
     assert t.read(spark, version=2).count() == 10
-    assert t.count_rows() == 8
+    assert t.read(spark).count() == 8
 
 
 def test_static_overwrite_replaces_table(spark, tmp_path):
@@ -72,7 +56,8 @@ def test_static_overwrite_replaces_table(spark, tmp_path):
     rows = t.read(spark).collect()
     assert {r.text for r in rows} == {"fresh"} and len(rows) == 2
     # static overwrite cleared outstanding deletes with the data
-    assert t.count_rows() == 2
+    assert not t.current_snapshot().get("delete_manifests")
+    assert t.read(spark).count() == 2
 
 
 def test_streaming_source_refuses_overwrite(spark, tmp_path):

@@ -2,8 +2,7 @@
 spec.md "Partition Transforms" / partition-spec evolution semantics).
 
 Evolution is metadata-only: files written under an old spec stay valid,
-new commits land under the new spec, reads see both, and pruning judges
-each partition value against the spec that wrote it. CoW upserts across
+new commits land under the new spec, and reads see both. CoW upserts across
 a spec boundary stay exactly-once via a sequence-scoped equality delete
 covering the old layout (rewriting the legacy layout would be O(table)).
 """
@@ -13,7 +12,6 @@ from __future__ import annotations
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from kafka2iceberg_spark import partition_spec as PS
 from kafka2iceberg_spark.sink import IcebergLite
@@ -21,7 +19,6 @@ from kafka2iceberg_spark.sink import IcebergLite
 PK = ["conv_id", "turn_idx"]
 D1 = datetime.datetime(2024, 9, 1, 5, 0, 0)
 D2 = datetime.datetime(2024, 9, 2, 17, 30, 0)
-D3 = datetime.datetime(2024, 10, 7, 23, 59, 0)
 
 
 def _batch(spark, rows):
@@ -90,7 +87,7 @@ def test_bucket_is_deterministic(spark):
 def test_multi_field_spec_any_order(spark, tmp_path):
     # identity may appear in ANY position: field values are percent-escaped
     # before the '_' join, so separators inside values (including the null
-    # sentinel, which contains '_') split unambiguously at plan time
+    # sentinel, which contains '_') keep every partition value unambiguous
     t = IcebergLite(
         str(tmp_path / "ok"),
         pk=PK,
@@ -103,12 +100,8 @@ def test_multi_field_spec_any_order(spark, tmp_path):
     ]
     t.commit_append(_batch(spark, rows), "b0")
     assert t.read(spark).count() == 3
-    # pruning on ts must keep the NULL-ts partition only for unbounded
-    # scans, and parse every pval without corruption
-    plan = t.prune_partitions(spark, "ts", lo=D2, hi=D2)
-    got = t.read_partition_range(spark, "ts", lo=D2, hi=D2).collect()
-    assert [r.conv_id for r in got] == ["plain"]
-    assert plan["pruned"] >= 1
+    got = t.scan_range(spark, "ts", D2, D2).collect()
+    assert [(r.conv_id, r.turn_idx) for r in got] == [("plain", 2)]
     t.drop()
 
 
@@ -179,84 +172,6 @@ def test_spec_survives_restart_and_expire(spark, table):
     assert t2.current_spec()[0] == 1  # registry rides retained snapshots
 
 
-# -- pruning across specs --------------------------------------------------
-
-
-def test_prune_partitions_across_specs(spark, table):
-    table.commit_append(
-        _batch(spark, [("c1", 0, "a", D1, 0, 0, False)]), "0"
-    )
-    table.evolve_partition_spec(["hour(ts)"])
-    table.commit_append(
-        _batch(
-            spark,
-            [("c2", 0, "b", D2, 1, 0, False), ("c3", 0, "c", D3, 2, 0, False)],
-        ),
-        "1",
-    )
-    # day range covering only D2: prunes the day partition (spec 0) AND the
-    # hour partitions (spec 1) outside the range
-    plan = table.prune_partitions(
-        spark,
-        "ts",
-        lo=datetime.datetime(2024, 9, 2),
-        hi=datetime.datetime(2024, 9, 3),
-    )
-    assert plan["partitions"] == {"s1-2024-09-02-17"}
-    assert plan["pruned"] == 2
-    df = table.read_partition_range(
-        spark,
-        "ts",
-        lo=datetime.datetime(2024, 9, 2),
-        hi=datetime.datetime(2024, 9, 3),
-    )
-    assert [r["conv_id"] for r in df.collect()] == ["c2"]
-
-
-def test_prune_bucket_equality_only(spark, tmp_path):
-    t = IcebergLite(
-        str(tmp_path / "b"), pk=PK, partition_spec=["bucket(8, conv_id)"]
-    )
-    rows = [(f"c{i}", 0, "x", D1, i, 0, False) for i in range(64)]
-    t.commit_append(_batch(spark, rows), "0")
-    # equality bound prunes to exactly one bucket
-    plan = t.prune_partitions(spark, "conv_id", lo="c7", hi="c7")
-    assert len(plan["partitions"]) == 1
-    got = t.read_partition_range(spark, "conv_id", lo="c7", hi="c7")
-    assert [r["conv_id"] for r in got.collect()] == ["c7"]
-    # a RANGE over a hash bucket cannot prune (order-destroying transform)
-    plan = t.prune_partitions(spark, "conv_id", lo="c1", hi="c2")
-    assert plan["pruned"] == 0
-    t.drop()
-
-
-def test_prune_matches_full_scan(spark, table):
-    """Pruned read ≡ full read + filter, on a mixed-spec table."""
-    table.commit_append(
-        _batch(
-            spark,
-            [(f"c{i}", 0, "x", [D1, D2, D3][i % 3], i, 0, False) for i in range(30)],
-        ),
-        "0",
-    )
-    table.evolve_partition_spec(["month(ts)"])
-    table.commit_append(
-        _batch(
-            spark,
-            [(f"d{i}", 0, "y", [D1, D2, D3][i % 3], 100 + i, 0, False) for i in range(30)],
-        ),
-        "1",
-    )
-    lo, hi = datetime.datetime(2024, 9, 1, 12), datetime.datetime(2024, 10, 7)
-    expect = (
-        table.read(spark)
-        .where((F.col("ts") >= lo) & (F.col("ts") <= hi))
-        .count()
-    )
-    got = table.read_partition_range(spark, "ts", lo, hi)
-    assert got.count() == expect
-
-
 # -- upserts across a spec boundary ---------------------------------------
 
 
@@ -304,38 +219,3 @@ def test_same_spec_upsert_writes_no_delete_files(spark, table):
     )
     assert not table.current_snapshot().get("delete_manifests")
 
-
-def test_identity_int_partition_prunes_numerically(spark, tmp_path):
-    # decimal partition values are not lexically ordered ('12' < '9'):
-    # integer bounds must compare numerically or partitions vanish
-    t = IcebergLite(
-        str(tmp_path / "num"),
-        pk=["conv_id", "turn_idx"],
-        partition_spec=["identity(turn_idx)"],
-    )
-    rows = [(f"c{i}", i, "t", D1, i, 0, False) for i in (5, 9, 12, 15, 100)]
-    t.commit_append(_batch(spark, rows), "b0")
-    got = sorted(
-        r.turn_idx
-        for r in t.read_partition_range(spark, "turn_idx", lo=9, hi=15)
-        .collect()
-    )
-    assert got == [9, 12, 15]
-    plan = t.prune_partitions(spark, "turn_idx", lo=9, hi=15)
-    assert plan["pruned"] == 2  # 5 and 100
-    # digit-string identity partitions of a STRING column keep lexical order
-    s = IcebergLite(
-        str(tmp_path / "str"),
-        pk=["conv_id", "turn_idx"],
-        partition_spec=["identity(conv_id)"],
-    )
-    srows = [(c, 1, "t", D1, 1, 0, False) for c in ("12", "2", "9")]
-    s.commit_append(_batch(spark, srows), "b0")
-    sgot = sorted(
-        r.conv_id
-        for r in s.read_partition_range(spark, "conv_id", lo="100", hi="3")
-        .collect()
-    )
-    assert sgot == ["12", "2"]  # lexical range; numeric compare would drop 2
-    t.drop()
-    s.drop()

@@ -10,6 +10,7 @@ strictly incremental and batch ids disjoint.
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 
@@ -265,3 +266,71 @@ def test_upsert_sink_raises_when_every_retry_conflicts(
         run_ingest_once(spark, broker, spec, tbl, str(tmp_path / "ck"))
     assert len(tries) == 4  # the first try and three retries
     assert tbl.current_version() == 0
+
+
+def _turns(spark, lo, hi):
+    return spark.createDataFrame(
+        [
+            (f"c{i % 3}", i, "user", f"t{i}", None,
+             datetime.datetime(2024, 9, 1, 12, 0, i % 60))
+            for i in range(lo, hi)
+        ],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp",
+    )
+
+
+def test_maintenance_job_retries_compaction_after_concurrent_append(
+    spark, tmp_path, spec, monkeypatch
+):
+    """A live ingest's append that links the version the standalone
+    maintenance job's compaction allocated makes the compaction lose with
+    CommitConflict; the job re-plans from the new head and finishes, and
+    the table ends identical to a twin where the append ran first."""
+    from kafka2iceberg_spark.__main__ import main
+    from perfbench.helpers import content_hash
+
+    def maintain(location):
+        main([
+            "source-database=chat", "source-table=transcripts",
+            f"table.location={location}", "shuffle.partitions=8",
+            "maintenance.run=true", "maintenance.min-files=2",
+        ])
+
+    def seed(name):
+        t = IcebergLite(str(tmp_path / name), pk=spec.primary_keys,
+                        partition_field="ts")
+        t.commit_append(_turns(spark, 0, 4), "0")
+        t.commit_append(_turns(spark, 4, 8), "1")
+        return t
+
+    twin = seed("twin")
+    twin.commit_append(_turns(spark, 8, 11), "live")
+    maintain(twin.location)
+
+    tbl = seed("tbl")
+    live = IcebergLite(tbl.location, pk=spec.primary_keys,
+                       partition_field="ts")
+    link = IcebergLite._write_snapshot
+    raced = []
+
+    def racing_link(self, snap):
+        if snap.get("commit_kind") == "compact" and not raced:
+            raced.append(snap["version"])
+            live.commit_append(_turns(spark, 8, 11), "live")
+        link(self, snap)
+
+    monkeypatch.setattr(IcebergLite, "_write_snapshot", racing_link)
+    v = tbl.current_version()
+    maintain(tbl.location)
+
+    assert raced == [v + 1]  # the append took the compaction's version
+    head = tbl.current_snapshot()
+    assert head["commit_kind"] == "compact" and head["version"] == v + 2
+    assert "live" in tbl.committed_batches()
+    # the retried compaction was planned on the new head: it folded the
+    # appended file in too
+    assert all(len(f) == 1 for f in tbl.resolve_manifests(head).values())
+    rows = tbl.read(spark).collect()
+    assert {r.turn_idx for r in rows} == set(range(11))
+    assert content_hash(rows) == content_hash(twin.read(spark).collect())

@@ -176,66 +176,6 @@ def test_scd2_incremental_batch_replay_is_noop(spark, tmp_path):
     assert table.current_version() == v_before
 
 
-def test_scd2_full_cdc_loop_from_changelog_stream(spark, tmp_path):
-    """The complete streaming loop: MOR upserts land in a source table →
-    table_stream(changelog=True) replays its commits as CDC events →
-    scd2_from_changelog nets each upsert's delete+insert pair into one
-    update → scd2_apply_batch maintains the history table, all inside one
-    foreachBatch streaming query. Intervals are commit-version-clocked."""
-    from kafka2iceberg_spark.table_stream import table_stream
-
-    dim_schema = T.StructType(
-        [
-            T.StructField("k", T.StringType()),
-            T.StructField("attr", T.StringType()),
-            T.StructField("is_cdc_delete", T.BooleanType()),
-        ]
-    )
-    src = IcebergLite(str(tmp_path / "src"), pk=["k"])
-    commits = [
-        [("a", "x", False), ("b", "q", False)],   # v1: inserts
-        [("a", "y", False)],                      # v2: update a: x->y
-        [("a", None, True)],                      # v3: delete a
-        [("a", "y", False), ("b", "q", False)],   # v4: re-insert a; b no-op upsert
-    ]
-    for i, rows in enumerate(commits):
-        assert src.commit_upsert(
-            spark.createDataFrame(rows, dim_schema), f"c{i}", strategy="mor"
-        )
-
-    hist = IcebergLite(str(tmp_path / "hist"), pk=["k", "valid_from_us"])
-
-    def _apply(df, bid):
-        nets = scd.scd2_from_changelog(df, key=["k"], tracked=["attr"])
-        scd.scd2_apply_batch(
-            spark, hist, nets, f"e{bid}",
-            key=["k"], order=["ts"], tracked=["attr"], delete_col="is_del",
-        )
-
-    q = (
-        table_stream(spark, str(tmp_path / "src"), 0, changelog=True)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = {
-        (r["k"], r["attr"], r["valid_from_us"] // 1_000_000,
-         None if r["valid_to_us"] is None else r["valid_to_us"] // 1_000_000)
-        for r in hist.read(spark).collect()
-    }
-    # b's v4 upsert repeats its attrs -> netted update compresses away
-    # (no new interval); a's delete closes y at v3; re-insert reopens at v4
-    assert got == {
-        ("a", "x", 1, 2),
-        ("a", "y", 2, 3),
-        ("a", "y", 4, None),
-        ("b", "q", 1, None),
-    }
-
-
 def test_scd2_cross_batch_noop_extends_interval(spark, tmp_path):
     """A batch whose only change repeats the open attrs mints no version
     and leaves the open interval open."""

@@ -66,6 +66,8 @@ def test_ref_map_defaults_and_overrides():
     spec = config.task_from_params(config.parse_args(ARGS))
     assert spec.ref_map["dt"] == "data.ts"
     assert spec.ref_map["text"] == "data.text"
+    dt = next(f for f in spec.ordered_fields if f.name == "dt")
+    assert isinstance(schema.spark_type(dt.type), T.DateType)
 
 
 def test_type_lattice():
@@ -82,13 +84,3 @@ def test_type_lattice():
     assert schema.spark_type("decimal(16,4)") == T.DecimalType(16, 4)
     assert schema.spark_type("decimal( 7 , 2 )") == T.DecimalType(7, 2)
     assert schema.spark_type("whatever") == T.StringType()
-
-
-def test_struct_type_nullability():
-    spec = config.task_from_params(config.parse_args(ARGS))
-    st = schema.struct_type(spec)
-    by_name = {f.name: f for f in st.fields}
-    assert not by_name["conv_id"].nullable
-    assert not by_name["turn_idx"].nullable
-    assert by_name["text"].nullable
-    assert isinstance(by_name["dt"].dataType, T.DateType)

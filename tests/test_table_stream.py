@@ -152,47 +152,6 @@ def test_table_stream_refuses_cow_upsert_commits(spark, tmp_path):
     assert raised
 
 
-def test_changelog_stream_replicates_with_deletes(spark, tmp_path):
-    """changelog=True emits insert AND delete events; apply_changelog folds
-    them into a replica that converges to the source table exactly — the
-    full CDC loop, deletes included."""
-    from kafka2iceberg_spark.table_stream import apply_changelog
-
-    work = str(tmp_path)
-    gen.write_stream_files(
-        gen.GenConfig(n_convs=12, turns_per_conv=8, seed=11,
-                      delete_fraction=0.15),
-        f"{work}/broker", files=4,
-    )
-    spec = transcript_task()
-    t = IcebergLite(f"{work}/t", pk=spec.primary_keys)
-    pipeline.run_ingest_once(spark, f"{work}/broker", spec, t, f"{work}/ck",
-                             strategy="mor")
-
-    replica = IcebergLite(f"{work}/replica", pk=spec.primary_keys)
-    q = (
-        table_stream(spark, f"{work}/t", 0, changelog=True)
-        .writeStream.foreachBatch(
-            lambda df, bid: apply_changelog(df, replica, str(bid))
-        )
-        .option("checkpointLocation", f"{work}/ck2")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    src = sorted(map(tuple, t.read(spark).select(cols).collect()))
-    dst = sorted(map(tuple, replica.read(spark).select(cols).collect()))
-    assert src == dst and len(src) > 0
-    # the generator really produced delete events (else this is vacuous)
-    n_delete_keys = sum(
-        f["rows"]
-        for ref in (t.current_snapshot().get("delete_manifests") or [])
-        for f in t._load_manifest(ref)
-    )
-    assert n_delete_keys > 0
-
-
 def test_changelog_events_shape(spark, tmp_path):
     t = IcebergLite(str(tmp_path / "t"), pk=["conv_id", "turn_idx"])
     df1 = spark.createDataFrame(

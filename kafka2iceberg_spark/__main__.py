@@ -46,6 +46,10 @@ from .schema import transcript_task
 from .sink import IcebergLite
 
 _TRUE = {"true", "1", "yes"}
+_ROCKSDB = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+}
 
 
 def _csv(params: dict[str, str], key: str) -> list[str]:
@@ -54,26 +58,38 @@ def _csv(params: dict[str, str], key: str) -> list[str]:
 
 
 def build_session(params: dict[str, str]) -> SparkSession:
+    """The job's session. The defaults below (64 shuffle partitions, AQE,
+    the RocksDB state store) apply only to a session this call creates: a
+    session already running keeps its own settings, and only the params
+    given explicitly are written into it. Both get the UTC session time
+    zone, which the pipeline's event-time casts assume."""
+    explicit = {"spark.sql.session.timeZone": "UTC"}
+    if "shuffle.partitions" in params:
+        explicit["spark.sql.shuffle.partitions"] = params["shuffle.partitions"]
+    rocksdb = params.get("state.rocksdb", "true").lower() in _TRUE
+    if rocksdb and "state.rocksdb" in params:
+        explicit.update(_ROCKSDB)
+
+    running = SparkSession.getActiveSession()
+    if running is not None:
+        for key, value in explicit.items():
+            running.conf.set(key, value)
+        return running
+
     b = SparkSession.builder.appName(
         params.get("app.name", "kafka2iceberg_spark")
     )
     if params.get("local", "").lower() in _TRUE:
         b = b.master(f"local[{params.get('local.cores', '*')}]")
-    b = (
-        b.config(
-            "spark.sql.shuffle.partitions",
-            params.get("shuffle.partitions", "64"),
-        )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    if params.get("state.rocksdb", "true").lower() in _TRUE:
-        b = b.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
+    conf = {
+        "spark.sql.shuffle.partitions": "64",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        **(_ROCKSDB if rocksdb else {}),
+        **explicit,
+    }
+    for key, value in conf.items():
+        b = b.config(key, value)
     return b.getOrCreate()
 
 

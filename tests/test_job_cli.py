@@ -7,9 +7,24 @@ recipe and was validated manually — semantics here are identical.
 
 from __future__ import annotations
 
-from kafka2iceberg_spark.__main__ import main
+from kafka2iceberg_spark.__main__ import build_session, main
 from kafka2iceberg_spark.gen import GenConfig, write_stream_files
 from kafka2iceberg_spark.sink import IcebergLite
+
+
+def test_build_session_keeps_running_session_settings(spark):
+    """The CLI's defaults apply only to a session it creates; explicit
+    params are still written into a running one."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        assert build_session({}) is spark
+        assert spark.conf.get(key) == "8"
+        build_session({"shuffle.partitions": "16"})
+        assert spark.conf.get(key) == "16"
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_cli_end_to_end(spark, tmp_path):

@@ -2401,13 +2401,12 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter point-lookup pruning audit, pure relational form of
-    bloom.py's sidecar math: build a 256-bit / 3-hash membership bitmap
-    over one nation's customer keys (double hashing off portable md5
-    prefixes, bloom.py:41-44), probe it with every ordering customer, and
-    report pass/true-hit/false-positive counts plus the measured fp rate.
-    The bit set (≤256 rows) broadcasts — the runtime-filter shape used to
-    skip files on pk lookups at 100 TB (bloom.plan_scan_eq)."""
+    """Bloom-filter pruning audit in pure relational form: build a
+    256-bit / 3-hash membership bitmap over one nation's customer keys
+    (double hashing off portable md5 prefixes), probe it with every
+    ordering customer, and report pass/true-hit/false-positive counts plus
+    the measured fp rate. The bit set (≤256 rows) broadcasts — the
+    runtime-filter shape that prunes a probe-side scan before a join."""
     from kafka2iceberg_spark import bloom as bl
 
     cust = _read(spark, sf_dir, "customer")

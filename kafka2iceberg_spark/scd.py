@@ -170,12 +170,8 @@ def scd2_apply_batch(
         # touches O(open files), not O(history)), then a broadcast
         # semi-join against the batch's distinct keys.
         try:
-            existing = (
-                table.scan_is_null(spark, "valid_to_us")
-                if hasattr(table, "scan_is_null")
-                else table.read(spark).where(F.col("valid_to_us").isNull())
-            )
-        except Exception:
+            existing = table.scan_is_null(spark, "valid_to_us")
+        except FileNotFoundError:
             existing = None  # first batch: table not created yet
         if existing is not None:
             touched = ch.select(*key).distinct()

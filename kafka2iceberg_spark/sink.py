@@ -478,7 +478,7 @@ class IcebergLite:
 
     def _commit_refs_only(self, refs: dict, kind: str) -> None:
         """Metadata-only commit that changes the ref registry (create
-        branch/tag, fast-forward, rollback). Its parent is the metadata
+        branch/tag, drop a ref, fast-forward). Its parent is the metadata
         head; content carries the main head's so time travel to this
         version still resolves, but no ref ever points AT a refs-only
         snapshot except through the explicit version it names."""
@@ -562,20 +562,6 @@ class IcebergLite:
             refs, f"fast-forward:{to_branch}<-{from_branch}"
         )
         return src["version"]
-
-    def rollback(self, version: int) -> int:
-        """Point main back at a retained older snapshot (Iceberg
-        ``rollback_to_snapshot``). Metadata-only; newer snapshots stay
-        retained (and replayable) until expiration."""
-        refs = self.refs()
-        self.snapshot_at(version)
-        if not self.is_ancestor(version, refs["main"]["version"]):
-            raise ValueError(
-                f"v{version} is not on main's history"
-            )
-        refs["main"] = {"version": int(version), "type": "branch"}
-        self._commit_refs_only(refs, f"rollback:{version}")
-        return int(version)
 
     def _write_snapshot(self, snap: dict) -> None:
         """Atomic commit with optimistic concurrency.
@@ -1016,44 +1002,105 @@ class IcebergLite:
             return v
         return None
 
-    def plan_scan(
-        self, col: str, lo=None, hi=None, version: int | None = None
-    ) -> dict:
-        """File-skipping scan plan: which data files can contain rows with
-        ``lo <= col <= hi`` (either bound optional), judged from manifest
-        min/max stats. Files without stats for ``col`` are conservatively
-        kept. This is the Iceberg planning step that keeps a selective
-        read O(matching files) at 100 TB — no data IO happens here, only
-        manifest JSON already on the driver.
-        """
-        snap = (
+    def _pin(self, version: int | None) -> dict:
+        """The snapshot a plan or scan reads: ``version``, or main's head."""
+        return (
             self.current_snapshot()
             if version is None
             else self.snapshot_at(version)
         )
-        lo_n = self._norm_stat_value(lo)
-        hi_n = self._norm_stat_value(hi)
-        paths: list[str] = []
-        total = skipped = 0
-        for files in self.resolve_manifests(snap).values():
-            for f in files:
-                total += 1
-                rng = (f.get("stats") or {}).get(col)
-                keep = True
-                if rng is not None:
-                    mn, mx = rng
-                    try:
-                        if lo_n is not None and mx < lo_n:
-                            keep = False
-                        if hi_n is not None and mn > hi_n:
-                            keep = False
-                    except TypeError:
-                        keep = True  # incomparable bound types: no pruning
-                if keep:
-                    paths.append(f["path"])
-                else:
-                    skipped += 1
-        return {"paths": paths, "files_total": total, "files_skipped": skipped}
+
+    @staticmethod
+    def _stats_relation(f: dict, col: str, lo_n, hi_n) -> str:
+        """Where a data file's manifest min/max for ``col`` sits against the
+        normalized bounds ``[lo_n, hi_n]`` (None = open): ``"disjoint"``
+        (no value can match), ``"inside"`` (every non-null value matches)
+        or ``"overlap"``. Missing stats, or stats that do not compare with
+        the bounds, read as ``"overlap"``: pruning skips only what the
+        manifest proves."""
+        rng = (f.get("stats") or {}).get(col)
+        if rng is None:
+            return "overlap"
+        mn, mx = rng
+        try:
+            below = lo_n is not None and mx < lo_n
+            above = hi_n is not None and mn > hi_n
+            inside = (lo_n is None or mn >= lo_n) and (
+                hi_n is None or mx <= hi_n
+            )
+        except TypeError:
+            return "overlap"  # incomparable bound types: no pruning
+        if below or above:
+            return "disjoint"
+        return "inside" if inside else "overlap"
+
+    def _in_range(self, col: str, lo, hi):
+        """``keep`` rule of a ``lo <= col <= hi`` scan (either bound
+        optional): every file whose min/max stats may overlap the bounds."""
+        lo_n, hi_n = self._norm_stat_value(lo), self._norm_stat_value(hi)
+        return lambda f: self._stats_relation(f, col, lo_n, hi_n) != "disjoint"
+
+    @staticmethod
+    def _may_hold_null(col: str):
+        """``keep`` rule of a ``col IS NULL`` scan: min/max ranges cannot
+        express ``IS NULL``, the manifest null count can. Files without a
+        recorded count are kept."""
+        return lambda f: (f.get("nulls") or {}).get(col) != 0
+
+    @staticmethod
+    def _range_cond(col: str, lo, hi) -> Column:
+        """``lo <= col <= hi`` as a Column (either bound optional)."""
+        cond = F.lit(True)
+        if lo is not None:
+            cond = cond & (F.col(col) >= F.lit(lo))
+        if hi is not None:
+            cond = cond & (F.col(col) <= F.lit(hi))
+        return cond
+
+    def _plan(self, snap: dict, keep) -> dict:
+        """File-skipping scan plan over ``snap``'s manifests: the data files
+        ``keep(entry)`` cannot rule out. This is the Iceberg planning step
+        that keeps a selective read O(matching files) at 100 TB — no data
+        IO happens here, only manifest JSON already on the driver."""
+        files = [f for fs in self.resolve_manifests(snap).values() for f in fs]
+        paths = [f["path"] for f in files if keep(f)]
+        return {
+            "paths": paths,
+            "files_total": len(files),
+            "files_skipped": len(files) - len(paths),
+        }
+
+    def _scan(
+        self,
+        spark: SparkSession,
+        version: int | None,
+        keep,
+        residual: Column,
+    ) -> DataFrame:
+        """Read the files ``keep`` cannot rule out, MOR deletes applied,
+        then the ``residual`` predicate — semantically identical to
+        ``read(spark, version).where(residual)``, but the complement of
+        files is never opened."""
+        # pin the snapshot ONCE: resolving it again after planning would
+        # let a concurrent commit hand the file plan and the delete set
+        # different snapshots (a read matching no committed state)
+        snap = self._pin(version)
+        paths = self._plan(snap, keep)["paths"]
+        if not paths:
+            df = self.read(spark, snap["version"]).limit(0)
+        else:
+            df = self._apply_equality_deletes(
+                spark, self._read_files(spark, paths, snap), snap
+            )
+        return df.where(residual)
+
+    def plan_scan(
+        self, col: str, lo=None, hi=None, version: int | None = None
+    ) -> dict:
+        """Which data files can contain rows with ``lo <= col <= hi``
+        (either bound optional), judged from manifest min/max stats. Files
+        without stats for ``col`` are conservatively kept."""
+        return self._plan(self._pin(version), self._in_range(col, lo, hi))
 
     def scan_range(
         self,
@@ -1063,93 +1110,29 @@ class IcebergLite:
         hi=None,
         version: int | None = None,
     ) -> DataFrame:
-        """Read with manifest-stats file skipping + the residual predicate.
-
-        Semantically identical to ``read(spark).where(lo <= col <= hi)``
-        (tested), but only the files whose stats ranges intersect the
-        bounds are opened — the complement of files is never touched.
-        """
-        # pin the snapshot ONCE: resolving it again after planning would
-        # let a concurrent commit hand the file plan and the delete set
-        # different snapshots (a read matching no committed state)
-        if version is None:
-            version = self.current_version()
-        snap = self.snapshot_at(version)
-        plan = self.plan_scan(col, lo, hi, version)
-        if not plan["paths"]:
-            empty = self.read(spark, version).limit(0)
-            df = empty
-        else:
-            df = self._apply_equality_deletes(
-                spark, self._read_files(spark, plan["paths"], snap), snap
-            )
-        if lo is not None:
-            df = df.where(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            df = df.where(F.col(col) <= F.lit(hi))
-        return df
+        """Read ``lo <= col <= hi`` opening only the files whose stats
+        ranges intersect the bounds (:meth:`plan_scan`)."""
+        return self._scan(
+            spark, version, self._in_range(col, lo, hi),
+            self._range_cond(col, lo, hi),
+        )
 
     def plan_scan_null(self, col: str, version: int | None = None) -> dict:
         """Which data files can hold NULLs in ``col``, judged from the
-        manifest null counts — min/max ranges cannot express ``IS NULL``,
-        the null-count stat can. Files without a recorded count are
-        conservatively kept. Metadata-only."""
-        snap = (
-            self.current_snapshot()
-            if version is None
-            else self.snapshot_at(version)
-        )
-        paths: list[str] = []
-        total = skipped = 0
-        for files in self.resolve_manifests(snap).values():
-            for f in files:
-                total += 1
-                nc = (f.get("nulls") or {}).get(col)
-                if nc == 0:
-                    skipped += 1
-                else:
-                    paths.append(f["path"])
-        return {"paths": paths, "files_total": total, "files_skipped": skipped}
+        manifest null counts. Metadata-only."""
+        return self._plan(self._pin(version), self._may_hold_null(col))
 
     def scan_is_null(
         self, spark: SparkSession, col: str, version: int | None = None
     ) -> DataFrame:
         """Read ``col IS NULL`` opening only files the null counts cannot
-        rule out — semantically identical to ``read().where(isNull)``.
-        The open-interval scan of an SCD2 dimension (``valid_to IS NULL``)
-        is the canonical use: open rows concentrate in recent files, so at
-        scale this touches O(open files), not O(history)."""
-        # pin the snapshot ONCE: resolving it again after planning would
-        # let a concurrent commit hand the file plan and the delete set
-        # different snapshots (a read matching no committed state)
-        if version is None:
-            version = self.current_version()
-        snap = self.snapshot_at(version)
-        plan = self.plan_scan_null(col, version)
-        if not plan["paths"]:
-            return self.read(spark, version).limit(0)
-        df = self._apply_equality_deletes(
-            spark, self._read_files(spark, plan["paths"], snap), snap
+        rule out. The open-interval scan of an SCD2 dimension
+        (``valid_to IS NULL``) is the canonical use: open rows concentrate
+        in recent files, so at scale this touches O(open files), not
+        O(history)."""
+        return self._scan(
+            spark, version, self._may_hold_null(col), F.col(col).isNull()
         )
-        return df.where(F.col(col).isNull())
-
-    def build_blooms(
-        self, spark: SparkSession, cols: list[str], fpp: float = 0.01
-    ) -> int:
-        """Attach per-file bloom sidecars for ``cols`` (Puffin analogue);
-        one executor task per data file, metadata-only commit. See
-        bloom.build_blooms."""
-        from . import bloom as bl
-
-        return bl.build_blooms(self, spark, cols, fpp)
-
-    def plan_scan_eq(
-        self, col: str, value, version: int | None = None
-    ) -> dict:
-        """Point-lookup plan: min/max stats + bloom sidecars. Metadata-only."""
-        from . import bloom as bl
-
-        return bl.plan_scan_eq(self, col, value, version)
 
     def scan_point(
         self,
@@ -1158,23 +1141,12 @@ class IcebergLite:
         value,
         version: int | None = None,
     ) -> DataFrame:
-        """Read ``col = value`` opening only files the stats AND blooms
-        cannot rule out. Semantically identical to
-        ``read(spark).where(col = value)`` (tested) — bloom false positives
-        are filtered by the residual predicate, never surfaced."""
-        # pin the snapshot ONCE: resolving it again after planning would
-        # let a concurrent commit hand the file plan and the delete set
-        # different snapshots (a read matching no committed state)
-        if version is None:
-            version = self.current_version()
-        snap = self.snapshot_at(version)
-        plan = self.plan_scan_eq(col, value, version)
-        if not plan["paths"]:
-            return self.read(spark, version).limit(0).where(F.lit(False))
-        df = self._apply_equality_deletes(
-            spark, self._read_files(spark, plan["paths"], snap), snap
+        """Read ``col = value`` opening only files whose min/max stats can
+        hold ``value``. ``value`` None matches nothing (SQL ``= NULL``)."""
+        return self._scan(
+            spark, version, self._in_range(col, value, value),
+            F.col(col) == F.lit(value),
         )
-        return df.where(F.col(col) == F.lit(value))
 
     def _save_schema_hint(self, schema: T.StructType) -> None:
         """Persist the reconciled schema for the empty-table read path.
@@ -1453,135 +1425,39 @@ class IcebergLite:
         retention deletes: a date-clustered table deletes whole days by
         manifest surgery and rewrites only the two boundary files.
         """
-        out = self._rewrite_range(
-            spark, "delete", col, lo, hi, batch_id,
-            lambda df, cond: df.where(~cond), drop_contained=True,
-        )
-        if out is None:
-            return None
-        counts, rows, v_new = out
-        return {**counts, "rows_kept_in_rewrite": rows, "version": v_new}
-
-    def update_range(
-        self,
-        spark: SparkSession,
-        col: str,
-        set_exprs: dict,
-        lo=None,
-        hi=None,
-        batch_id: str | None = None,
-    ) -> dict | None:
-        """Row-level ``UPDATE ... SET ... WHERE lo <= col <= hi``
-        (copy-on-write) — the restatement/redaction complement to
-        :meth:`delete_range`, with the same manifest-stats planning:
-
-        * files the stats prove DISJOINT from the range carry forward by
-          reference (zero data IO);
-        * every file that may hold a match is rewritten with each
-          ``set_exprs[name]`` (a Column, or a literal) applied to the rows
-          inside the range and all other rows copied verbatim — unlike
-          DELETE there is no metadata-only fast path, because matching
-          rows change content rather than disappear.
-
-        MOR equality deletes are applied during the rewrite (rewritten
-        files take sequence ``v_new``); NULLs in ``col`` never match and
-        are copied unchanged. Replay-guarded by ``batch_id``; the updated
-        columns must already exist (no implicit evolution in an UPDATE).
-        At 100 TB this is the GDPR-redaction shape: a date-bounded UPDATE
-        touches O(matching files), not O(table).
-        """
-        if not set_exprs:
-            raise ValueError("update_range needs at least one SET column")
-        schema = self.table_schema()
-        for name in set_exprs:
-            if schema is not None and name not in schema.fieldNames():
-                raise ValueError(
-                    f"UPDATE SET column {name!r} is not in the table schema"
-                )
-
-        def _set_col(c: str, cond: Column) -> Column:
-            e = set_exprs[c]
-            if not isinstance(e, Column):
-                e = F.lit(e)
-            return F.when(cond, e).otherwise(F.col(c)).alias(c)
-
-        out = self._rewrite_range(
-            spark, "update", col, lo, hi, batch_id,
-            lambda df, cond: df.select(
-                *[
-                    _set_col(c, cond) if c in set_exprs else F.col(c)
-                    for c in df.columns
-                ]
-            ),
-        )
-        if out is None:
-            return None
-        counts, rows, v_new = out
-        return {**counts, "rows_in_rewrite": rows, "version": v_new}
-
-    def _rewrite_range(
-        self,
-        spark: SparkSession,
-        kind: str,
-        col: str,
-        lo,
-        hi,
-        batch_id: str | None,
-        rewrite,
-        drop_contained: bool = False,
-    ) -> tuple[dict, int, int] | None:
-        """Shared copy-on-write plan + commit of :meth:`delete_range` and
-        :meth:`update_range`: files the manifest stats prove disjoint from
-        ``lo <= col <= hi`` carry forward, every other file is read (MOR
-        deletes applied) and replaced by ``rewrite(df, cond)``, where
-        ``cond`` is the NULL-safe range match. ``drop_contained`` adds
-        DELETE's metadata-only drop of files wholly inside the range with
-        zero nulls in ``col``. Returns (file counts, rewritten rows,
-        version), or None when ``batch_id`` was already committed."""
         if lo is None and hi is None:
-            raise ValueError(f"{kind}_range needs at least one bound")
+            raise ValueError("delete_range needs at least one bound")
         self.create()
         batch_id = str(batch_id if batch_id is not None else uuid.uuid4().hex)
         if batch_id in self.committed_batches():
             return None
-        lo_n = self._norm_stat_value(lo)
-        hi_n = self._norm_stat_value(hi)
+        lo_n, hi_n = self._norm_stat_value(lo), self._norm_stat_value(hi)
+        # a bound outside the stats domain (normalizes to None) reads as
+        # open, which can prove a file disjoint from it but never inside it
+        provable = (lo is None or lo_n is not None) and (
+            hi is None or hi_n is not None
+        )
         v_new, snap, refs = self._commit_meta("main")
 
         carried: dict[str, list[dict]] = {}
         rewrite_paths: list[str] = []
-        counts = {"files_rewritten": 0, "files_carried": 0}
-        if drop_contained:
-            counts["files_dropped"] = 0
+        counts = {"files_rewritten": 0, "files_carried": 0, "files_dropped": 0}
         for pv, files in self.resolve_manifests(snap).items():
-            keep: list[dict] = []
+            carried[pv] = []
             for f in files:
-                rng = (f.get("stats") or {}).get(col)
-                disjoint = contained = False
-                if rng is not None:
-                    mn, mx = rng
-                    try:
-                        disjoint = (lo_n is not None and mx < lo_n) or (
-                            hi_n is not None and mn > hi_n
-                        )
-                        contained = (
-                            drop_contained
-                            and not disjoint
-                            and (lo_n is None or mn >= lo_n)
-                            and (hi_n is None or mx <= hi_n)
-                            and (f.get("nulls") or {}).get(col) == 0
-                        )
-                    except TypeError:
-                        pass  # incomparable bounds: conservative rewrite
-                if disjoint:
-                    keep.append(f)
+                rel = self._stats_relation(f, col, lo_n, hi_n)
+                if rel == "disjoint":
+                    carried[pv].append(f)
                     counts["files_carried"] += 1
-                elif contained:
+                elif (
+                    rel == "inside"
+                    and provable
+                    and (f.get("nulls") or {}).get(col) == 0
+                ):
                     counts["files_dropped"] += 1  # file simply not kept
                 else:
                     rewrite_paths.append(f["path"])
                     counts["files_rewritten"] += 1
-            carried[pv] = keep
 
         new: dict[str, list[dict]] = {}
         rows = 0
@@ -1589,12 +1465,8 @@ class IcebergLite:
             df = self._apply_equality_deletes(
                 spark, self._read_files(spark, rewrite_paths, snap), snap
             )
-            cond = F.lit(True)
-            if lo is not None:
-                cond = cond & (F.col(col) >= F.lit(lo))
-            if hi is not None:
-                cond = cond & (F.col(col) <= F.lit(hi))
-            out = rewrite(df, F.coalesce(cond, F.lit(False))).cache()
+            match = F.coalesce(self._range_cond(col, lo, hi), F.lit(False))
+            out = df.where(~match).cache()
             try:
                 rows = out.count()
                 if rows:
@@ -1610,13 +1482,13 @@ class IcebergLite:
         # delete manifests carry forward: the carried files still need
         # them; rewritten files have sequence v_new and are immune
         self._commit(
-            v_new, snap, refs, kind, ref="main", batch_id=batch_id,
+            v_new, snap, refs, "delete", ref="main", batch_id=batch_id,
             manifests=manifests,
             lineage=[
                 {
                     "batch_id": batch_id,
                     "rows": rows,
-                    "kind": kind,
+                    "kind": "delete",
                     "col": col,
                     **counts,
                     "offsets": {},
@@ -1624,7 +1496,7 @@ class IcebergLite:
                 }
             ],
         )
-        return counts, rows, v_new
+        return {**counts, "rows_kept_in_rewrite": rows, "version": v_new}
 
     def commit_upsert(
         self,

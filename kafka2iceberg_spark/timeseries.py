@@ -1259,52 +1259,3 @@ class RollupLadder:
 
     def read(self, spark, tier: str) -> DataFrame:
         return self.catalog.read(spark, tier)
-
-    def stitch_plan(
-        self, spark, lo_us: int, hi_us: int
-    ) -> list[tuple[str, int, int]]:
-        """Tile decomposition of ``[lo_us, hi_us)``: interior spans served
-        by the coarsest folded tier, edges recursing to finer tiers —
-        the range-scan shape that keeps a month-long query off the raw
-        (and even the finest) data. Bounds must be finest-step-aligned."""
-        _, step0 = self.tiers[0]
-        if lo_us % step0 or hi_us % step0:
-            raise ValueError("stitch bounds must align to the finest step")
-        his = self.fold_his(spark)
-        plan: list[tuple[str, int, int]] = []
-
-        def cover(k: int, lo: int, hi: int) -> None:
-            if lo >= hi:
-                return
-            name, step = self.tiers[k]
-            if k == 0:
-                plan.append((name, lo, hi))
-                return
-            a_lo = -(-lo // step) * step  # ceil-align
-            a_hi = min((hi // step) * step, his.get(name, lo))
-            if a_lo < a_hi:
-                cover(k - 1, lo, a_lo)
-                plan.append((name, a_lo, a_hi))
-                cover(k - 1, a_hi, hi)
-            else:
-                cover(k - 1, lo, hi)
-
-        cover(len(self.tiers) - 1, lo_us, hi_us)
-        return plan
-
-    def stitch(self, spark, lo_us: int, hi_us: int) -> DataFrame:
-        """Total (n, s) over ``[lo_us, hi_us)`` from the tile plan —
-        equals the raw-data aggregate for all arrived rows."""
-        parts = None
-        for name, lo, hi in self.stitch_plan(spark, lo_us, hi_us):
-            p = self.read(spark, name).where(
-                (F.col("bucket_us") >= F.lit(lo))
-                & (F.col("bucket_us") < F.lit(hi))
-            )
-            parts = p if parts is None else parts.unionByName(p)
-        if parts is None:
-            raise ValueError("empty stitch range")
-        return parts.agg(
-            F.coalesce(F.sum("n"), F.lit(0)).alias("n"),
-            F.coalesce(F.sum("s"), F.lit(0)).alias("s"),
-        )

@@ -13,20 +13,6 @@ from kafka2iceberg_spark.sink import IcebergLite
 DIM, N_TABLES, N_PLANES, K = 8, 4, 3, 3
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-
-
 def _vec(i):
     # deterministic, sign-varied, no exact-zero projections in practice
     return [((i * 7 + j * 13) % 17 - 8) / 4.0 + 0.01 for j in range(DIM)]

@@ -136,6 +136,21 @@ def test_delete_on_non_partition_column(spark, tmp_path):
     assert t.read(spark).count() == 30
 
 
+def test_delete_open_and_incomparable_bounds(spark, tmp_path):
+    """A one-sided range carries the files its bound excludes. A bound the
+    LONG stats cannot compare with (a Decimal) proves no file inside the
+    range: nothing is dropped by metadata, only matching rows go."""
+    from decimal import Decimal
+
+    t = _mk_table(spark, str(tmp_path / "t"), days=3)
+    res = t.delete_range(spark, "v", hi=1004, batch_id="d1")
+    assert res["files_rewritten"] == 1 and res["files_carried"] == 2
+    res = t.delete_range(spark, "v", lo=Decimal("3005"), batch_id="d2")
+    assert res["files_dropped"] == 0
+    got = sorted(r["v"] for r in t.read(spark).collect())
+    assert got == [*range(1005, 1010), *range(2000, 2010), *range(3000, 3005)]
+
+
 def test_delete_after_mor_upsert_applies_deletes_first(spark, tmp_path):
     """Rows superseded by MOR equality deletes must NOT resurrect when
     their file is rewritten with a newer sequence."""

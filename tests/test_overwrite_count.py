@@ -7,20 +7,6 @@ from kafka2iceberg_spark.sink import IcebergLite
 from kafka2iceberg_spark.table_stream import table_stream
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-
-
 def _day(spark, day, ids, text="x"):
     return spark.createDataFrame(
         [(f"c{i}", i, text, f"2024-09-{day:02d} 10:00:00") for i in ids],

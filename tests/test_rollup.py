@@ -1,10 +1,8 @@
 """RollupLadder: continuous-aggregate tiers stay exact under out-of-order
-and late arrival (invalidation re-folds), replay no-ops, and the stitch
-plan serves ranges from the coarsest folded tiles."""
+and late arrival (invalidation re-folds), and replays are no-ops."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from kafka2iceberg_spark.sink import IcebergLite
@@ -109,7 +107,7 @@ def test_replay_noop(spark, tmp_path):
     assert _tier(spark, rl, "hour") == {0: (1, 1)}
 
 
-def test_three_tier_ladder_and_stitch(spark, tmp_path):
+def test_three_tier_ladder(spark, tmp_path):
     tiers = [("minute", MIN_US), ("hour", HOUR_US), ("day", DAY_US)]
     rl = _mk(spark, tmp_path, tiers)
     import random
@@ -128,23 +126,3 @@ def test_three_tier_ladder_and_stitch(spark, tmp_path):
         if hi is not None:
             want = {b: v for b, v in want.items() if b < hi}
         assert _tier(spark, rl, name) == want, name
-
-    # stitch an unaligned-to-day range: interior days from the day tier,
-    # edges from hour then minute tiles
-    lo = 5 * HOUR_US + 30 * MIN_US
-    hi = 2 * DAY_US + 3 * HOUR_US + 10 * MIN_US
-    plan = rl.stitch_plan(spark, lo, hi)
-    assert ("day", DAY_US, 2 * DAY_US) in plan
-    assert {t for t, *_ in plan} == {"minute", "hour", "day"}
-    got = rl.stitch(spark, lo, hi).collect()[0]
-    in_range = [(t, v) for t, v in pairs if lo <= t < hi]
-    assert (got["n"], got["s"]) == (
-        len(in_range), sum(v for _, v in in_range)
-    )
-
-
-def test_stitch_alignment_guard(spark, tmp_path):
-    rl = _mk(spark, tmp_path)
-    rl.apply_batch(_rows(spark, [(0, 1)]), "b0", wm_us=DAY_US)
-    with pytest.raises(ValueError):
-        rl.stitch_plan(spark, 1, HOUR_US)

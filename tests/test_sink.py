@@ -443,6 +443,25 @@ def test_plan_scan_skips_disjoint_files(spark, tmp_path):
     assert t.scan_range(spark, "turn_idx", lo=25).count() == 5
     assert t.plan_scan("turn_idx", lo=25)["files_skipped"] >= 2
 
+    # point lookups: same rows as the plain filter, on a hit and a miss
+    def point(col, v):
+        got = sorted(map(tuple, t.scan_point(spark, col, v).collect()))
+        want = t.read(spark).where(F.col(col) == F.lit(v)).collect()
+        assert got == sorted(map(tuple, want)), (col, v)
+        return got
+
+    assert len(point("turn_idx", 13)) == 1
+    assert point("turn_idx", 99) == []
+    assert len(point("conv_id", "c13")) == 1
+    assert point("conv_id", "c13x") == []  # inside a file's min/max
+    # the point plan opens only the file whose min/max holds the value
+    assert len(t.scan_point(spark, "turn_idx", 13).inputFiles()) == 1
+    # a naive TIMESTAMP probe against tz-aware footer stats is never pruned
+    ts = BASE + datetime.timedelta(minutes=13)
+    assert [r[1] for r in point("ts", ts)] == [13]
+    # col = NULL matches nothing, as in SQL
+    assert t.scan_point(spark, "turn_idx", None).count() == 0
+
 
 def test_plan_scan_timestamp_bounds_and_unknown_column(spark, tmp_path):
     t = IcebergLite(str(tmp_path / "tbl"), pk=[], partition_field="ts")

@@ -7,20 +7,6 @@ from pyspark.sql import functions as F
 from kafka2iceberg_spark import sketches as sk
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-
-
 def _vals(spark, n, prefix="v"):
     return spark.range(n).select(
         F.concat(F.lit(prefix), F.col("id")).alias("v")

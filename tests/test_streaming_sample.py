@@ -6,25 +6,10 @@ guard); the stratified variant keeps k per stratum."""
 import os
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
 from kafka2iceberg_spark import sketches as sk
 from kafka2iceberg_spark.sink import IcebergLite
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
 
 
 def _wave(spark, src_dir, ids, mtime, tag):

@@ -8,20 +8,6 @@ from kafka2iceberg_spark.sink import CommitConflict, IcebergLite
 from kafka2iceberg_spark.transactions import CatalogLite, TxnState
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-
-
 def _rows(spark, ids, text="x"):
     return spark.createDataFrame(
         [(f"c{i}", i, text, "2024-09-01 00:00:00") for i in ids],

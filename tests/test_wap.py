@@ -1,4 +1,4 @@
-"""Branches, tags, write-audit-publish, and rollback on IcebergLite.
+"""Branches, tags and write-audit-publish on IcebergLite.
 
 Mirrors Iceberg's ref semantics (branch/tag registry in table metadata,
 fast-forward publish, snapshot retention pinned by refs) — the audit
@@ -38,6 +38,9 @@ def test_branch_write_isolated_from_main(spark, table):
     assert table.read(spark, branch="audit").count() == 8
     # metadata head advanced past main (table-global version numbers)
     assert table.current_version() == table.head_version("audit")
+    # pruned scans read main's head too, not the newer branch snapshot
+    assert table.scan_point(spark, "conv_id", "conv_10").count() == 0
+    assert table.scan_range(spark, "turn_idx", 0, 20).count() == 5
 
 
 def test_fast_forward_publishes_without_rewrite(spark, table):
@@ -75,6 +78,11 @@ def test_fast_forward_requires_ancestry(spark, table):
         table.fast_forward("audit")
     # main content never saw branch rows
     assert table.read(spark).count() == 6
+    # an incremental consumer parked on the branch's lineage fails loudly
+    with pytest.raises(ValueError, match="not an ancestor"):
+        table.lineage_versions(
+            table.head_version("audit"), table.head_version("main")
+        )
 
 
 def test_streaming_offsets_follow_main_not_branch(spark, table):
@@ -115,23 +123,6 @@ def test_tag_is_not_writable(spark, table):
     table.tag("pin")
     with pytest.raises(ValueError, match="tag"):
         table.commit_append(_df(spark, range(5, 7)), "b1", branch="pin")
-
-
-def test_rollback_and_recommit(spark, table):
-    table.commit_append(_df(spark, range(3)), "b0")
-    good = table.head_version("main")
-    table.commit_append(_df(spark, range(10, 15)), "bad-batch")
-    assert table.read(spark).count() == 8
-    table.rollback(good)
-    assert table.read(spark).count() == 3
-    # new commits build on the rolled-back base, not the bad head
-    table.commit_append(_df(spark, range(20, 22)), "b2")
-    assert table.read(spark).count() == 5
-    got = {r["conv_id"] for r in table.read(spark).select("conv_id").collect()}
-    assert not any(c in got for c in ("conv_10", "conv_14"))
-    # an incremental consumer parked on the abandoned lineage fails loudly
-    with pytest.raises(ValueError, match="not an ancestor"):
-        table.lineage_versions(good + 1, table.head_version("main"))
 
 
 def test_branch_refs_survive_main_commits(spark, table):

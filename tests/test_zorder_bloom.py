@@ -1,24 +1,9 @@
-"""Z-order compaction multi-dimensional file skipping + bloom point lookups."""
+"""Z-order compaction: multi-dimensional file skipping."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from kafka2iceberg_spark import bloom as bl
 from kafka2iceberg_spark.sink import IcebergLite
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
 
 
 def _grid(spark, n=64):
@@ -73,79 +58,3 @@ def test_zorder_rejects_strings(spark, tmp_path):
             spark, zorder_by=["conv_id", "x"], target_files=2,
             min_files_per_partition=1,
         )
-
-
-def test_bloom_unit_roundtrip():
-    vals = [f"key{i}" for i in range(1000)]
-    bitmap, m, k = bl.build_bitmap(vals, fpp=0.01)
-    assert all(bl.might_contain(bitmap, m, k, v) for v in vals)  # no FN ever
-    fp = sum(
-        bl.might_contain(bitmap, m, k, f"absent{i}") for i in range(2000)
-    )
-    assert fp < 2000 * 0.05  # ~1% target, generous margin
-
-
-def test_bloom_point_lookup_skips_files(spark, tmp_path):
-    t = IcebergLite(str(tmp_path / "b"), pk=["conv_id", "turn_idx"])
-    # 8 batches of disjoint high-cardinality keys, same day -> 8 files whose
-    # conv_id [min,max] ranges all overlap (shared prefix) -> stats useless
-    for b in range(8):
-        df = spark.range(500).select(
-            F.concat(F.lit("conv-"), (F.col("id") * 8 + b)).alias("conv_id"),
-            F.lit(b).cast("int").alias("turn_idx"),
-            F.lit("2024-09-01 00:00:00").cast("timestamp").alias("ts"),
-        )
-        t.commit_append(df, f"b{b}")
-    assert t.build_blooms(spark, ["conv_id"]) == 8
-    assert t.build_blooms(spark, ["conv_id"]) == 0  # idempotent
-    needle = "conv-1201"  # lives in batch 1201 % 8 = 1 only
-    plan = t.plan_scan_eq("conv_id", needle)
-    assert plan["files_total"] == 8
-    assert plan["files_skipped_bloom"] >= 6, plan
-    rows = t.scan_point(spark, "conv_id", needle).collect()
-    assert len(rows) == 1 and rows[0].conv_id == needle
-    # absent key: bloom proves absence for (almost) every file; result empty
-    miss = t.scan_point(spark, "conv_id", "conv-999999").count()
-    assert miss == 0
-
-
-def test_bloom_survives_compaction_rebuild(spark, tmp_path):
-    t = IcebergLite(str(tmp_path / "bc"), pk=["conv_id"])
-    for b in range(3):
-        df = spark.range(100).select(
-            F.concat(F.lit("k"), (F.col("id") * 3 + b)).alias("conv_id"),
-            F.lit("2024-09-01 00:00:00").cast("timestamp").alias("ts"),
-        )
-        t.commit_append(df, f"b{b}")
-    t.build_blooms(spark, ["conv_id"])
-    # compaction rewrites files -> new files lack blooms -> rebuild covers them
-    t.compact(spark)
-    assert t.build_blooms(spark, ["conv_id"]) == 1
-    plan = t.plan_scan_eq("conv_id", "k5")
-    assert plan["files_total"] == 1
-    assert t.scan_point(spark, "conv_id", "k5").count() == 1
-
-
-def test_bloom_timestamp_probe_no_false_negative(spark, tmp_path):
-    # regression: parquet returns TIMESTAMP(LTZ) values tz-AWARE at bloom
-    # build time while callers probe with naive-UTC datetimes; without tz
-    # unification in bloom._norm every timestamp probe missed and the file
-    # was wrongly skipped (silent row loss)
-    import datetime as dt
-
-    t = IcebergLite(str(tmp_path / "ts"), pk=["conv_id", "turn_idx"])
-    df = spark.range(100).select(
-        F.concat(F.lit("c"), F.col("id")).alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        (
-            F.lit("2024-09-01 00:00:00").cast("timestamp")
-            + F.make_interval(secs=F.col("id"))
-        ).alias("ts"),
-    )
-    t.commit_append(df, "b0")
-    assert t.build_blooms(spark, ["ts"]) == 1
-    needle = dt.datetime(2024, 9, 1, 0, 0, 42)
-    plan = t.plan_scan_eq("ts", needle)
-    assert plan["files_skipped_bloom"] == 0, plan  # present -> never skipped
-    rows = t.scan_point(spark, "ts", needle).collect()
-    assert len(rows) == 1 and rows[0].conv_id == "c42"

@@ -16,9 +16,6 @@ Scaling split mirrors Iceberg's own planning model:
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -30,7 +27,6 @@ _SNAPSHOT_SCHEMA = T.StructType(
         T.StructField("parent_id", T.StringType()),
         T.StructField("batch_id", T.StringType()),
         T.StructField("commit_kind", T.StringType()),
-        T.StructField("default_spec_id", T.IntegerType()),
         T.StructField("partitions", T.IntegerType()),
         T.StructField("delete_manifests", T.IntegerType()),
     ]
@@ -39,7 +35,6 @@ _SNAPSHOT_SCHEMA = T.StructType(
 _PARTITION_SCHEMA = T.StructType(
     [
         T.StructField("partition", T.StringType()),
-        T.StructField("spec_id", T.IntegerType()),
         T.StructField("file_count", T.IntegerType()),
         T.StructField("row_count", T.LongType()),
     ]
@@ -54,17 +49,6 @@ _MANIFEST_SCHEMA = T.StructType(
 )
 
 
-def _retained_snapshots(table) -> list[dict]:
-    v = table.current_version()
-    out = []
-    for i in range((v or -1) + 1):
-        p = os.path.join(table.meta_dir, f"v{i}.json")
-        if os.path.exists(p):
-            with open(p) as fh:
-                out.append(json.load(fh))
-    return out
-
-
 def snapshots_table(table, spark: SparkSession) -> DataFrame:
     rows = [
         (
@@ -73,11 +57,10 @@ def snapshots_table(table, spark: SparkSession) -> DataFrame:
             s.get("parent"),
             s.get("batch_id"),
             s.get("commit_kind"),
-            s.get("default_spec_id", 0),
             len(s.get("manifests") or {}),
             len(s.get("delete_manifests") or []),
         )
-        for s in _retained_snapshots(table)
+        for s in table.retained_snapshots()
     ]
     return spark.createDataFrame(rows, _SNAPSHOT_SCHEMA)
 
@@ -85,7 +68,7 @@ def snapshots_table(table, spark: SparkSession) -> DataFrame:
 def history_table(table, spark: SparkSession) -> DataFrame:
     """The ancestry chain of the CURRENT snapshot (Iceberg ``$history``:
     is_current_ancestor distinguishes the live lineage from dead branches)."""
-    snaps = {s["snapshot_id"]: s for s in _retained_snapshots(table)}
+    snaps = {s["snapshot_id"]: s for s in table.retained_snapshots()}
     try:
         cur = table.current_snapshot()
     except FileNotFoundError:
@@ -102,21 +85,13 @@ def history_table(table, spark: SparkSession) -> DataFrame:
 
 
 def partitions_table(table, spark: SparkSession, version: int | None = None) -> DataFrame:
-    from . import partition_spec as PS
-
     snap = (
         table.current_snapshot() if version is None else table.snapshot_at(version)
     )
-    rows = []
-    for pv, files in table.resolve_manifests(snap).items():
-        rows.append(
-            (
-                pv,
-                PS.spec_id_of_pval(pv),
-                len(files),
-                sum(f.get("rows") or 0 for f in files),
-            )
-        )
+    rows = [
+        (pv, len(files), sum(f.get("rows") or 0 for f in files))
+        for pv, files in table.resolve_manifests(snap).items()
+    ]
     return spark.createDataFrame(rows, _PARTITION_SCHEMA)
 
 
@@ -217,7 +192,7 @@ def snapshot_diffs(table, spark: SparkSession) -> DataFrame:
     (version, parent_version, files_added, files_removed, rows_added,
     rows_removed).
     """
-    snaps = _retained_snapshots(table)
+    snaps = table.retained_snapshots()
     by_id = {s["snapshot_id"]: s["version"] for s in snaps}
     parent_pairs = [
         (s["version"], by_id[s["parent"]])

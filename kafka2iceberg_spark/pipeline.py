@@ -385,8 +385,8 @@ _CONFLICT_TRIES = 4
 def _retry_conflict(fn):
     """``fn()``, retried on ``CommitConflict``. Only for commits that
     re-read the head and their replay guard on every call, so that a
-    whole call is safe to repeat: ``commit_upsert``, ``compact`` and a
-    batch-id-guarded ``delete_range``."""
+    whole call is safe to repeat: ``commit_upsert``, ``compact``,
+    ``materialize_deletes`` and a batch-id-guarded ``delete_range``."""
     for attempt in range(_CONFLICT_TRIES):
         try:
             return fn()
@@ -453,7 +453,8 @@ def start_upsert_sink(
     Deleted rows remain time-travelable until the expiration step of the
     same tick ages their snapshots out.
 
-    A batch whose upsert loses the version race to a concurrent
+    A batch whose upsert or maintenance-tick commit (retention delete,
+    materialize, compaction) loses the version race to a concurrent
     maintenance commit (``CommitConflict``, e.g. the standalone
     compaction job) is retried on the new head up to three times before
     the query fails.
@@ -482,19 +483,22 @@ def start_upsert_sink(
                 )
                 if mx is not None:
                     cutoff = int(mx) - int(retention_us)
-                    table.delete_range(
+                    _retry_conflict(lambda: table.delete_range(
                         batch_df.sparkSession,
                         retention_col,
                         hi=_us_to_ts(cutoff),
                         batch_id=f"retention:{batch_id}",
-                    )
+                    ))
             if strategy == "mor":
-                table.materialize_deletes(batch_df.sparkSession)
-            table.compact(
+                _retry_conflict(
+                    lambda: table.materialize_deletes(batch_df.sparkSession)
+                )
+            _retry_conflict(lambda: table.compact(
                 batch_df.sparkSession,
                 sort_by=compact_sort_by,
                 target_files=compact_target_files,
-            )
+            ))
+            # expiration deletes files: never retried (see __main__)
             table.expire_snapshots(keep_last=keep_snapshots)
 
     return _start_foreach_batch(parsed, commit, checkpoint, "update", trigger)
@@ -800,7 +804,9 @@ def start_dynamic_sink(
     batches parse; journal replay and duplicate DDL delivery are no-ops
     because ``evolve_spec`` is idempotent on column presence. The
     journal is written before the table commit: a crash between the two
-    re-applies the DDL harmlessly on redelivery.
+    re-applies the DDL harmlessly on redelivery. An upsert that loses the
+    version race to a concurrent maintenance commit is retried on the new
+    head, as in :func:`start_upsert_sink`.
     """
     import json
     import os
@@ -837,6 +843,6 @@ def start_dynamic_sink(
                 f"ddl:{batch_id}",
             )
         rows = ingest.parse(batch_df, state["spec"], **kafka_cols)
-        table.commit_upsert(rows, str(batch_id))
+        _retry_conflict(lambda: table.commit_upsert(rows, str(batch_id)))
 
     return _start_foreach_batch(raw, commit, checkpoint, "update", trigger)

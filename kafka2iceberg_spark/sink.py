@@ -47,8 +47,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from . import partition_spec as PS
-
 #: Session confs the sink scopes to its own writes (``_scoped_conf``).
 #: INT64-micros parquet timestamps: INT96 carries no min/max statistics,
 #: which would blind plan_scan on every time predicate.
@@ -262,16 +260,10 @@ class IcebergLite:
         location: str,
         pk: list[str],
         partition_field: str | None = "ts",  # partitioned by days(ts)
-        partition_spec: list[str] | None = None,  # e.g. ["day(ts)", "bucket(16, conv_id)"]
     ) -> None:
         self.location = location
         self.pk = list(pk)
         self.partition_field = partition_field
-        # explicit hidden-partitioning spec (Iceberg transforms); None keeps
-        # the legacy days(partition_field) layout as spec 0
-        self._ctor_spec = (
-            PS.parse_spec(partition_spec) if partition_spec else None
-        )
         self.data_dir = os.path.join(location, "data")
         self.meta_dir = os.path.join(location, "metadata")
         self.manifest_dir = os.path.join(self.meta_dir, "manifests")
@@ -287,19 +279,10 @@ class IcebergLite:
         os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.meta_dir, exist_ok=True)
         if self.current_version() is None:
-            specs = {}
-            if self._ctor_spec:
-                # explicit hidden-partitioning spec: registered as spec 1
-                # (spec 0 stays the legacy bare-value day layout, so the
-                # two can never produce colliding partition values)
-                specs = {
-                    "partition_specs": {"1": PS.spec_to_json(self._ctor_spec)},
-                    "default_spec_id": 1,
-                }
             try:
                 self._commit(
                     0, None, {"main": {"version": 0, "type": "branch"}},
-                    "create", ref="main", **specs,
+                    "create", ref="main",
                 )
             except CommitConflict:
                 pass  # another writer created the (identical, empty) v0
@@ -344,7 +327,7 @@ class IcebergLite:
 
     def metadata_head(self) -> dict:
         """Newest committed snapshot file — the table-metadata head. With
-        branches in play this may be a branch/tag commit; content readers
+        branches in play this may be a branch commit; content readers
         want :meth:`current_snapshot` (the ``main`` ref) instead."""
         v = self.current_version()
         if v is None:
@@ -353,9 +336,9 @@ class IcebergLite:
             return json.load(fh)
 
     def refs(self, meta: dict | None = None) -> dict[str, dict]:
-        """Named refs (Iceberg branch/tag registry): name -> {version,
-        type}. Refs ride every snapshot like the partition-spec registry;
-        legacy linear tables resolve to {main -> newest}."""
+        """Named refs (Iceberg branch registry): name -> {version, type}.
+        Refs ride every snapshot; legacy linear tables resolve to
+        {main -> newest}."""
         if meta is None:
             meta = self.metadata_head()
         refs = meta.get("refs") or {
@@ -366,13 +349,13 @@ class IcebergLite:
     def current_snapshot(self) -> dict:
         """Head CONTENT snapshot of the ``main`` branch (what readers,
         compaction, and incremental consumers follow). Equal to the
-        metadata head unless a branch/tag commit is newer."""
+        metadata head unless a branch commit is newer."""
         meta = self.metadata_head()
         mv = self.refs(meta)["main"]["version"]
         return meta if mv == meta["version"] else self.snapshot_at(mv)
 
     def head_snapshot(self, branch: str = "main") -> dict:
-        """Head content snapshot of a named branch or tag."""
+        """Head content snapshot of a named branch."""
         meta = self.metadata_head()
         refs = self.refs(meta)
         if branch not in refs:
@@ -401,11 +384,9 @@ class IcebergLite:
         every branch gets a unique, monotonically increasing number — the
         Iceberg sequence-number rule), so concurrent writers on ANY refs
         collide on the same next version and optimistic concurrency keeps
-        working. A commit to an unknown branch forks it from main's head.
-
-        The partition-spec registry is table-global, so a base older than
-        the metadata head is handed back carrying the HEAD's registry —
-        ``_commit`` then carries it forward without re-reading the head."""
+        working. A commit to an unknown branch forks it from main's head;
+        a commit to a ref on disk that is not a branch (a read-only tag)
+        is refused."""
         meta = self.metadata_head()
         refs = self.refs(meta)
         entry = refs.get(branch)
@@ -416,11 +397,7 @@ class IcebergLite:
         base = (
             meta
             if entry["version"] == meta["version"]
-            else {
-                **self.snapshot_at(entry["version"]),
-                "partition_specs": meta.get("partition_specs") or {},
-                "default_spec_id": meta.get("default_spec_id", 0),
-            }
+            else self.snapshot_at(entry["version"])
         )
         v_new = meta["version"] + 1
         refs[branch] = {"version": v_new, "type": "branch"}
@@ -443,12 +420,12 @@ class IcebergLite:
     ) -> None:
         """The one commit path: builds the snapshot and claims ``v_new``.
 
-        Content (``manifests``, ``delete_manifests``, ``schema``) and the
-        partition-spec registry carry forward from ``base`` — the content
-        head ``_commit_meta`` returned, or None for a table's v0 — unless
-        the caller overrides them; ``extra`` adds or replaces fields
-        (the spec registry on evolution, informational lists on
-        maintenance commits). Every snapshot therefore has the same keys."""
+        Content (``manifests``, ``delete_manifests``, ``schema``) carries
+        forward from ``base`` — the content head ``_commit_meta`` returned,
+        or None for a table's v0 — unless the caller overrides it;
+        ``extra`` adds informational lists on maintenance commits. Every
+        snapshot therefore has the same keys; extra keys in snapshots
+        written by older versions are ignored."""
         base = base or {}
         self._write_snapshot(
             {
@@ -470,15 +447,13 @@ class IcebergLite:
                     else delete_manifests
                 ),
                 "lineage": list(lineage),
-                "partition_specs": base.get("partition_specs") or {},
-                "default_spec_id": base.get("default_spec_id", 0),
                 **extra,
             }
         )
 
     def _commit_refs_only(self, refs: dict, kind: str) -> None:
         """Metadata-only commit that changes the ref registry (create
-        branch/tag, drop a ref, fast-forward). Its parent is the metadata
+        a branch, drop a ref, fast-forward). Its parent is the metadata
         head; content carries the main head's so time travel to this
         version still resolves, but no ref ever points AT a refs-only
         snapshot except through the explicit version it names."""
@@ -502,17 +477,6 @@ class IcebergLite:
         self.snapshot_at(at)  # must be retained
         refs[name] = {"version": at, "type": "branch"}
         self._commit_refs_only(refs, f"create-branch:{name}")
-        return at
-
-    def tag(self, name: str, version: int | None = None) -> int:
-        """Immutable named pointer to a snapshot (Iceberg tag). Tagged
-        versions are protected from ``expire_snapshots`` until the tag is
-        dropped — an audit/reproducibility pin at zero storage cost."""
-        refs = self.refs()
-        at = refs["main"]["version"] if version is None else int(version)
-        self.snapshot_at(at)
-        refs[name] = {"version": at, "type": "tag"}
-        self._commit_refs_only(refs, f"tag:{name}")
         return at
 
     def drop_ref(self, name: str) -> None:
@@ -752,83 +716,38 @@ class IcebergLite:
             for pv, ref in snap["manifests"].items()
         }
 
+    def retained_snapshots(self) -> list[dict]:
+        """Every snapshot file ``expire_snapshots`` has not removed, oldest
+        first (empty for an uncreated table)."""
+        v = self.current_version()
+        snaps = []
+        for i in range(0 if v is None else v + 1):
+            try:
+                snaps.append(self.snapshot_at(i))
+            except FileNotFoundError:
+                continue  # expired
+        return snaps
+
     def lineage(self) -> list[dict]:
         """Per-commit lineage records (north_rule metrics surface)."""
-        snaps = []
-        v = self.current_version()
-        for i in range((v or 0) + 1):
-            p = os.path.join(self.meta_dir, f"v{i}.json")
-            if os.path.exists(p):
-                with open(p) as fh:
-                    snaps.append(json.load(fh))
-        return [rec for s in snaps for rec in s.get("lineage", [])]
+        return [
+            rec
+            for s in self.retained_snapshots()
+            for rec in s.get("lineage", [])
+        ]
 
     # -- data ---------------------------------------------------------------
 
-    def _legacy_spec(self) -> list[PS.PartitionField]:
-        """Spec 0: the constructor's days(partition_field) layout (bare
-        partition values, kept byte-identical for existing tables)."""
-        if self.partition_field:
-            return [PS.PartitionField("day", self.partition_field)]
-        return []
-
-    def spec_registry(self) -> tuple[dict[int, list], int]:
-        """(spec_id -> fields) for every spec the table has ever had, plus
-        the current default spec id — Iceberg's partition-specs metadata."""
-        try:
-            snap = self.current_snapshot()
-        except FileNotFoundError:
-            snap = {}
-        reg: dict[int, list] = {0: self._legacy_spec()}
-        for sid, js in (snap.get("partition_specs") or {}).items():
-            reg[int(sid)] = PS.spec_from_json(js)
-        default = snap.get("default_spec_id")
-        if default is None:
-            default = 1 if (self._ctor_spec and 1 in reg) else 0
-        return reg, int(default)
-
-    def current_spec(self) -> tuple[int, list]:
-        reg, default = self.spec_registry()
-        return default, reg[default]
-
-    def evolve_partition_spec(self, fields: list[str]) -> int:
-        """Change the table's partition layout WITHOUT rewriting any data
-        (Iceberg partition-spec evolution). Existing files stay under their
-        original spec's values; new commits write under the new spec.
-        Metadata-only commit — O(1) regardless of table size, which is the
-        whole point at 100 TB (vs an O(table) re-layout rewrite)."""
-        parsed = PS.parse_spec(fields)
-        self.create()
-        v_new, snap, refs = self._commit_meta("main")
-        # the spec registry is table-global: _commit_meta hands back the
-        # metadata head's, whichever ref ``snap`` is the head of
-        reg_json = dict(snap.get("partition_specs") or {})
-        new_id = max([int(k) for k in reg_json] + [0]) + 1
-        reg_json[str(new_id)] = PS.spec_to_json(parsed)
-        self._commit(
-            v_new, snap, refs, "evolve-spec", ref="main",
-            partition_specs=reg_json, default_spec_id=new_id,
-        )
-        return new_id
-
     def _partition_expr(self, df: DataFrame):
-        sid, fields = self.current_spec()
-        if sid == 0:
-            # legacy layout, byte-identical to pre-evolution tables
-            if self.partition_field and self.partition_field in df.columns:
-                return F.coalesce(
-                    F.to_date(F.col(self.partition_field)).cast("string"),
-                    F.lit(NULL_PARTITION),
-                )
-            return F.lit("all")
-        missing = [f.source for f in fields if f.source not in df.columns]
-        if missing:
-            raise ValueError(
-                f"partition spec {sid} needs column(s) {missing} absent from batch"
+        """The table's one layout, hidden ``days(partition_field)``: a
+        ``YYYY-MM-DD`` value per row, NULL days in ``NULL_PARTITION``, and
+        ``"all"`` for an unpartitioned table."""
+        if self.partition_field and self.partition_field in df.columns:
+            return F.coalesce(
+                F.to_date(F.col(self.partition_field)).cast("string"),
+                F.lit(NULL_PARTITION),
             )
-        return F.concat(
-            F.lit(PS.pval_prefix(sid)), PS.spec_expr(fields, df, NULL_PARTITION)
-        )
+        return F.lit("all")
 
     def _write_files(
         self, df: DataFrame, batch_id: str, seq: int = 0
@@ -909,7 +828,7 @@ class IcebergLite:
         branch: str | None = None,
     ) -> DataFrame:
         """Read a committed snapshot (main's head, time-travel to
-        ``version``, or a named ``branch``/tag head).
+        ``version``, or a named ``branch`` head).
 
         Snapshot files are immutable and every version's manifest is
         retained, so reading an old version is just resolving its file list
@@ -1569,37 +1488,15 @@ class IcebergLite:
             }
             for pv, files in new.items():
                 manifests[pv] = self._write_manifest(files)
-            delete_manifests = list(snap.get("delete_manifests") or [])
-            # partition-spec evolution: rows for this batch's PKs may still
-            # live under OLD-spec partition values the current-spec
-            # ``affected`` set can't name. Rewriting every legacy partition
-            # would be O(table); instead cover them with one equality-delete
-            # file at seq V+1 (applies only to seq < V+1, so this commit's
-            # own rewritten rows are untouched) — CoW for the current
-            # layout, MOR across layouts, folded in by compaction.
-            sid, _ = self.current_spec()
-            if any(
-                PS.spec_id_of_pval(pv) != sid
-                for pv in snap["manifests"]
-                if pv not in affected
-            ):
-                delete_manifests.append(
-                    self._write_manifest(
-                        self._write_delete_entries(
-                            spark, batch, reconciled, v_new
-                        )
-                    )
-                )
+            # delete manifests carry forward: outstanding MOR deletes still
+            # cover the partitions this CoW merge did NOT touch; the
+            # rewritten partitions' rows get sequence V+1 (> every delete),
+            # so double-application is impossible
             self._commit(
                 v_new, snap, refs, "upsert-cow", ref=branch,
                 batch_id=batch_id,
                 schema=reconciled.jsonValue(),
                 manifests=manifests,
-                # outstanding MOR deletes still cover the partitions this
-                # CoW merge did NOT touch; the rewritten partitions' rows
-                # get sequence V+1 (> every delete), so double-application
-                # is impossible
-                delete_manifests=delete_manifests,
                 lineage=[lineage],
             )
             return True
@@ -1966,10 +1863,10 @@ class IcebergLite:
             os.path.join(self.meta_dir, f"v{oldest_keep}.json")
         ):
             oldest_keep += 1
-        # refs (branch heads + tags) pin their snapshots regardless of the
+        # refs (branch heads) pin their snapshots regardless of the
         # retention window — Iceberg retains referenced snapshots until the
-        # ref is dropped; without this a tag older than keep_last would
-        # dangle and its files would be GC'd from under it
+        # ref is dropped; without this a branch forked before keep_last
+        # would dangle and its files would be GC'd from under it
         protected = {int(e["version"]) for e in self.refs().values()}
         # 1. fold expiring batch ids forward
         inherited: set[str] = set()

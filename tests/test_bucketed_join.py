@@ -2,10 +2,9 @@
 shuffle. Writing both sides bucketBy(N, key) + sortBy(key) lets Spark
 plan the join with NO Exchange on either side (and no Sort when sortBy
 matches) — at 100 TB this is the difference between re-shuffling two
-fact tables per join and reading them pre-partitioned. IcebergLite's
-bucket(N, col) hidden-partition transform (partition_spec.py) is the
-write-side half; this pins the read-side contract on Spark's native
-bucketed catalog tables."""
+fact tables per join and reading them pre-partitioned. IcebergLite
+partitions by day only, so this pins the contract on Spark's native
+bucketed catalog tables, which do both the write and the read side."""
 
 from __future__ import annotations
 

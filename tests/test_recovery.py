@@ -201,22 +201,38 @@ def _batch_ids(table):
     ]
 
 
-@pytest.mark.parametrize("strategy", ["cow", "mor"])
+@pytest.mark.parametrize("sink", ["cow", "mor", "dynamic"])
 def test_upsert_sink_retries_after_concurrent_compaction(
-    spark, tmp_path, spec, monkeypatch, strategy
+    spark, tmp_path, spec, monkeypatch, sink
 ):
     """A standalone compaction that links the version the upsert sink's
     second batch allocated makes that commit lose with CommitConflict; the
-    sink retries the batch on the new head instead of dying, and the table
-    ends identical to an uninterrupted run, each batch committed once."""
+    sink (``start_upsert_sink`` under cow or mor, or the DDL-driven
+    ``start_dynamic_sink``) retries the batch on the new head instead of
+    dying, and the table ends identical to an uninterrupted run, each
+    batch committed once."""
+    from kafka2iceberg_spark.pipeline import (
+        file_broker_stream, start_dynamic_sink,
+    )
     from perfbench.helpers import content_hash
 
     staged = write_stream_files(CFG, str(tmp_path / "staged"), files=4)
     broker = str(tmp_path / "broker")
     _feed(staged, broker, 4)
+
+    def run(table, ck):
+        if sink == "dynamic":
+            start_dynamic_sink(
+                file_broker_stream(spark, broker, 2), spec, table,
+                str(tmp_path / ck), str(tmp_path / f"{ck}.journal"),
+                trigger={"availableNow": True},
+            ).awaitTermination()
+        else:
+            run_ingest_once(spark, broker, spec, table, str(tmp_path / ck),
+                            strategy=sink)
+
     twin = IcebergLite(str(tmp_path / "twin"), pk=spec.primary_keys)
-    run_ingest_once(spark, broker, spec, twin, str(tmp_path / "twin_ck"),
-                    strategy=strategy)
+    run(twin, "twin_ck")
 
     tbl = IcebergLite(str(tmp_path / "tbl"), pk=spec.primary_keys)
     compactor = IcebergLite(tbl.location, pk=spec.primary_keys)
@@ -231,8 +247,7 @@ def test_upsert_sink_retries_after_concurrent_compaction(
         link(snap)
 
     monkeypatch.setattr(tbl, "_write_snapshot", racing_link)
-    run_ingest_once(spark, broker, spec, tbl, str(tmp_path / "ck"),
-                    strategy=strategy)
+    run(tbl, "ck")
 
     assert rewritten and rewritten[0] > 0  # the compaction really committed
     assert tbl.snapshot_at(tbl.current_version())["batch_id"] == "1"
@@ -266,6 +281,57 @@ def test_upsert_sink_raises_when_every_retry_conflicts(
         run_ingest_once(spark, broker, spec, tbl, str(tmp_path / "ck"))
     assert len(tries) == 4  # the first try and three retries
     assert tbl.current_version() == 0
+
+
+def test_maintenance_tick_retries_after_concurrent_compaction(
+    spark, tmp_path, spec, monkeypatch
+):
+    """The upsert sink's maintenance tick (retention delete, materialize,
+    compaction) survives a standalone compaction linking the version each
+    of its commits allocated: every one is retried on the new head, and
+    the table ends identical to an uninterrupted run."""
+    from kafka2iceberg_spark.pipeline import (
+        file_broker_stream, parsed_stream, start_upsert_sink,
+    )
+    from perfbench.helpers import content_hash
+
+    staged = write_stream_files(CFG, str(tmp_path / "staged"), files=4)
+    broker = str(tmp_path / "broker")
+    _feed(staged, broker, 4)
+
+    def run(table, ck):
+        start_upsert_sink(
+            parsed_stream(file_broker_stream(spark, broker, 1), spec),
+            table, str(tmp_path / ck), trigger={"availableNow": True},
+            strategy="mor", maintenance_every=1,
+            retention_us=12 * 3_600_000_000,
+        ).awaitTermination()
+
+    twin = IcebergLite(str(tmp_path / "twin"), pk=spec.primary_keys)
+    run(twin, "twin_ck")
+
+    tbl = IcebergLite(str(tmp_path / "tbl"), pk=spec.primary_keys)
+    compactor = IcebergLite(tbl.location, pk=spec.primary_keys)
+    link = tbl._write_snapshot
+    raced = []
+
+    def racing_link(snap):
+        kind = snap["commit_kind"]
+        if kind in ("delete", "materialize-deletes", "compact") and (
+            kind not in raced
+        ):
+            raced.append(kind)
+            assert compactor.compact(spark, min_files_per_partition=1) > 0
+        link(snap)
+
+    monkeypatch.setattr(tbl, "_write_snapshot", racing_link)
+    run(tbl, "ck")
+
+    assert sorted(raced) == ["compact", "delete", "materialize-deletes"]
+    assert content_hash(tbl.read(spark).collect()) == content_hash(
+        twin.read(spark).collect()
+    )
+    assert tbl.committed_batches() == twin.committed_batches()
 
 
 def _turns(spark, lo, hi):

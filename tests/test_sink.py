@@ -54,6 +54,13 @@ def test_upsert_last_writer_wins(spark, table):
     assert len(rows) == 1 and rows[0].text == "v2"
 
 
+def test_cow_upsert_writes_no_delete_files(spark, table):
+    # copy-on-write rewrites the affected partition: no delete manifest
+    table.commit_append(_batch(spark, [("c1", 0, "a", TS, 0, 0, False)]), "0")
+    table.commit_upsert(_batch(spark, [("c1", 0, "b", TS, 1, 0, False)]), "1")
+    assert not table.current_snapshot().get("delete_manifests")
+
+
 def test_upsert_in_batch_dedup(spark, table):
     # same PK twice within one batch: higher offset wins (arrival order)
     b = _batch(

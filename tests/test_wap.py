@@ -1,6 +1,6 @@
-"""Branches, tags and write-audit-publish on IcebergLite.
+"""Branches and write-audit-publish on IcebergLite.
 
-Mirrors Iceberg's ref semantics (branch/tag registry in table metadata,
+Mirrors Iceberg's ref semantics (branch registry in table metadata,
 fast-forward publish, snapshot retention pinned by refs) — the audit
 workflow a production ingestion pipeline stages risky data through.
 """
@@ -103,26 +103,22 @@ def test_replay_guard_is_global_across_refs(spark, table):
     assert table.commit_append(_df(spark, range(3)), "batch-1") is False
 
 
-def test_tag_pins_snapshot_through_expiration(spark, table):
+def test_branch_pins_snapshot_through_expiration(spark, table):
+    # a branch forked at an old version (MultiTableTransaction's staged
+    # txn-* branches) keeps its fork point alive past the retention window
     table.commit_append(_df(spark, range(3)), "b0")
-    tagged = table.tag("audit-2024")
+    forked = table.head_version("main")
     for i in range(1, 8):
         table.commit_append(_df(spark, range(10 * i, 10 * i + 2)), f"b{i}")
+    assert table.create_branch("audit-2024", forked) == forked
     stats = table.expire_snapshots(keep_last=2)
     assert stats["expired_snapshots"] > 0
-    # the tagged snapshot survived the window and still reads
+    # the branch's snapshot survived the window and still reads
     assert table.read(spark, branch="audit-2024").count() == 3
-    assert table.snapshot_at(tagged)["version"] == tagged
-    # dropping the tag releases it for future expiration
+    assert table.snapshot_at(forked)["version"] == forked
+    # dropping the branch releases it for future expiration
     table.drop_ref("audit-2024")
     assert "audit-2024" not in table.refs()
-
-
-def test_tag_is_not_writable(spark, table):
-    table.commit_append(_df(spark, range(2)), "b0")
-    table.tag("pin")
-    with pytest.raises(ValueError, match="tag"):
-        table.commit_append(_df(spark, range(5, 7)), "b1", branch="pin")
 
 
 def test_branch_refs_survive_main_commits(spark, table):
